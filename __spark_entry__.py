@@ -68,18 +68,21 @@ def _spread(df: DataFrame, materialize: bool = False) -> DataFrame:
     return spread_small_input(df, materialize=materialize)
 
 
-def _scratch_dir(prefix: str) -> str:
-    """mkdtemp on fast local scratch for THROWAWAY per-invocation
-    artifacts: fresh streaming checkpoints of bounded availableNow
-    drains, stream-source symlink dirs, local-mode shard blobs — never
-    durable state (real deployments pass SPARK_GRAFT_TMP /
-    SPARK_GRAFT_SHARD_DIR to shared storage). The VM's ext4 root shows
-    multi-10s writeback stalls; /dev/shm sidesteps them — the same
-    trade bench.py makes for spark.local.dir."""
+def _scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """mkdtemp for THROWAWAY per-invocation artifacts: fresh streaming
+    checkpoints of bounded availableNow drains, stream-source symlink
+    dirs, local-mode shard blobs — never durable state (real deployments
+    pass SPARK_GRAFT_TMP / SPARK_GRAFT_SHARD_DIR to shared storage).
+    SPARK_GRAFT_TMP wins; otherwise a local master uses /dev/shm (the
+    VM's ext4 root shows multi-10s writeback stalls — the same trade
+    bench.py makes for spark.local.dir) and any other master the
+    tempfile default, since /dev/shm is a per-host RAM disk that no
+    executor on another host can read."""
     import tempfile
 
     base = os.environ.get("SPARK_GRAFT_TMP")
-    if base is None and os.path.isdir("/dev/shm"):
+    if (base is None and spark.sparkContext.master.startswith("local")
+            and os.path.isdir("/dev/shm")):
         base = "/dev/shm"
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
@@ -1283,7 +1286,7 @@ def q_cogroup_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     base = os.environ.get("SPARK_GRAFT_SHARD_DIR")
     if base is None:
-        base = _scratch_dir("cogroup_shards_")
+        base = _scratch_dir(spark, "cogroup_shards_")
         # deferred: the probe below is lazy — blobs are read when the
         # caller collects, so the dir must outlive this function
         atexit.register(shutil.rmtree, base, ignore_errors=True)
@@ -1363,37 +1366,33 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "method", "op")
 
 
-def _stream_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """readStream over a testdata table. The file stream source requires
+def _stream_source(spark: SparkSession, sf_dir: str,
+                   name: str) -> tuple[DataFrame, int]:
+    """readStream over a testdata table, with the table's size in bytes
+    (for _run_stream's state width). The file stream source requires
     a DIRECTORY, and the testdata tables are single files — symlink the
     file into a scratch dir (testdata itself is read-only)."""
     src = f"{sf_dir}/{name}.parquet"
-    d = _scratch_dir(f"stream_src_{name}_")
+    d = _scratch_dir(spark, f"stream_src_{name}_")
     os.symlink(os.path.abspath(src), os.path.join(d, f"{name}.parquet"))
     schema = spark.read.parquet(src).schema
-    global _LAST_STREAM_SRC_BYTES
-    _LAST_STREAM_SRC_BYTES = os.path.getsize(src)
-    return spark.readStream.schema(schema).parquet(d)
-
-
-#: _stream_source → _run_stream side-channel: the most recent source's
-#: input bytes, for scale-adaptive state-partition sizing (each query
-#: builds exactly one source and immediately drains it).
-_LAST_STREAM_SRC_BYTES: int | None = None
+    return spark.readStream.schema(schema).parquet(d), os.path.getsize(src)
 
 
 def _run_stream(df_stream, query_name: str, output_mode: str,
-                adaptive_state: bool = True):
+                src_bytes: int | None):
     """Run a streaming DataFrame to a memory sink with availableNow and
     block until drained; returns the sink table name. The checkpoint is
     a FRESH throwaway dir per invocation (these bounded drains never
     resume), so it lives on fast local scratch — durable checkpoints
-    belong to callers who pass their own checkpointLocation."""
+    belong to callers who pass their own checkpointLocation.
+    src_bytes is the drained source's input size, which sizes the
+    state width below; None keeps the session width."""
     import uuid
 
     qn = f"{query_name}_{uuid.uuid4().hex[:8]}"
-    ck = _scratch_dir(f"ck_{query_name}_")
     spark = df_stream.sparkSession
+    ck = _scratch_dir(spark, f"ck_{query_name}_")
     # scale-adaptive streaming state width (r7): stateful ops pin their
     # state-store partition count to spark.sql.shuffle.partitions at
     # query start, and AQE cannot coalesce streaming state — so a tiny
@@ -1405,17 +1404,16 @@ def _run_stream(df_stream, query_name: str, output_mode: str,
     # narrow. Restored after the drain (availableNow persists the
     # width in its own checkpoint; later queries see the session
     # value). Pure execution topology — results are unchanged.
-    # adaptive_state=False opts out for HIGH-CARDINALITY keyed state
+    # src_bytes=None opts out for HIGH-CARDINALITY keyed state
     # (per-user sessions): its per-group python state work scales with
     # keys, not bytes, and wants the session's full width.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (adaptive_state and _LAST_STREAM_SRC_BYTES is not None
-            and str(prev_parts).isdigit()):
+    if src_bytes is not None and str(prev_parts).isdigit():
         # floor of 4 so per-group python state work never fully
         # serializes into one task (widths 2-8 measured equivalent on
         # the bounded drains; 1 risks group-count serialization)
         adaptive = min(int(prev_parts),
-                       max(4, -(-_LAST_STREAM_SRC_BYTES // (8 << 20))))
+                       max(4, -(-src_bytes // (8 << 20))))
         spark.conf.set("spark.sql.shuffle.partitions", str(adaptive))
     try:
         q = (
@@ -1450,14 +1448,14 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
-        stream = _stream_source(spark, sf_dir, "events")
+        stream, src_bytes = _stream_source(spark, sf_dir, "events")
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
         agg = (
             stream.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        qn = _run_stream(agg, "wincounts", "complete")
+        qn = _run_stream(agg, "wincounts", "complete", src_bytes)
         return (
             spark.table(qn)
             .select(F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
@@ -1476,10 +1474,11 @@ def q_streaming_dedup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cuckoo_filter_spark.streaming.dedup import streaming_dedup
 
     _ensure_package(spark)
-    stream = _stream_source(spark, sf_dir, "events").select("event_id", "user_id")
+    stream, src_bytes = _stream_source(spark, sf_dir, "events")
+    stream = stream.select("event_id", "user_id")
     dd = streaming_dedup(stream, "user_id", num_shards=8,
                          shard_capacity=1 << 17, bits_per_item=32)
-    qn = _run_stream(dd, "sdedup", "append")
+    qn = _run_stream(dd, "sdedup", "append", src_bytes)
     return spark.table(qn).agg(F.count(F.lit(1)).alias("n_users"))
 
 
@@ -1497,12 +1496,13 @@ def q_streaming_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
-        stream = _stream_source(spark, sf_dir, "events").select(
+        stream, src_bytes = _stream_source(spark, sf_dir, "events")
+        stream = stream.select(
             F.col("ts").cast("timestamp").alias("ts"), "user_id")
         est = windowed_distinct_count(stream, "ts", "user_id",
                                       window="1 day", watermark="1 hour",
                                       p=14)
-        qn = _run_stream(est, "winhll", "update")
+        qn = _run_stream(est, "winhll", "update", src_bytes)
         w = Window.partitionBy("window_start").orderBy(F.desc("updates"))
         final = (
             spark.table(qn).withColumn("rn", F.row_number().over(w))
@@ -1548,12 +1548,13 @@ def q_streaming_frequent_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
-        stream = _stream_source(spark, sf_dir, "events").select(
+        stream, src_bytes = _stream_source(spark, sf_dir, "events")
+        stream = stream.select(
             F.col("ts").cast("timestamp").alias("ts"), "user_id")
         freq = windowed_frequent_items(
             stream, "ts", "user_id", window="1 day", watermark="1 hour",
             k=1024, min_count=4)
-        qn = _run_stream(freq, "mgwin", "update")
+        qn = _run_stream(freq, "mgwin", "update", src_bytes)
         w = Window.partitionBy("window_start")
         return (
             spark.table(qn)
@@ -1592,13 +1593,14 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
-        stream = _stream_source(spark, sf_dir, "events").select(
+        stream, _ = _stream_source(spark, sf_dir, "events")
+        stream = stream.select(
             F.col("ts").cast("timestamp").alias("ts"), "user_id")
         out = streaming_sessionize(stream, "user_id", "ts", 86400.0,
                                    watermark="1 hour")
         # per-USER state: ~one python state group per user — keep the
         # session width (narrowing serializes every group into one task)
-        qn = _run_stream(out, "sessfin", "update", adaptive_state=False)
+        qn = _run_stream(out, "sessfin", "update", src_bytes=None)
         return spark.table(qn).orderBy("user_id", "session_start_us")
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)

@@ -15,6 +15,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 
+#: Notes printed under a section's heading, keyed by the heading's text
+#: before the colon: what a reader of the plan should not "fix".
+NOTES = {
+    "decontaminate": (
+        "\"Train corpus never shuffles\" means no Exchange keyed on the "
+        "corpus. The `RoundRobinPartitioning` Exchange under the train "
+        "side's Generate is `spread_small_input` (operators/spread.py), "
+        "which the contract query applies: it fires only when an "
+        "input of <=512 MiB arrives in fewer partitions than the session "
+        "parallelism, as every single-row-group testdata parquet does, and "
+        "spreads the gram explode and probe over every core. At corpus "
+        "scale it is an exact no-op. It is intended; do not remove it."),
+    "repetition signals": (
+        "This is the bare library projection. The `repetition_stats` "
+        "contract query wraps its documents in `spread_small_input` "
+        "(operators/spread.py), which adds one `RoundRobinPartitioning` "
+        "Exchange when the input is <=512 MiB and arrives in fewer "
+        "partitions than the session parallelism, so the per-doc UDF runs "
+        "on every core instead of one. At corpus scale it is an exact "
+        "no-op. It is intended; do not remove it."),
+}
+
 
 def plan_of(df) -> str:
     buf = io.StringIO()
@@ -518,7 +540,10 @@ def main() -> None:
 
     out = ["# PLANS — physical plan audit (sf0.01, AQE on)\n"]
     for name, ok, p in sections:
-        out.append(f"## {'✅' if ok else '❌'} {name}\n\n```\n{p.strip()[:4000]}\n```\n")
+        note = NOTES.get(name.split(":")[0])
+        note = f"> {note}\n\n" if note else ""
+        out.append(f"## {'✅' if ok else '❌'} {name}\n\n{note}"
+                   f"```\n{p.strip()[:4000]}\n```\n")
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "PLANS.md")
     # regenerate ONLY this script's sections: everything from the manual

@@ -3,6 +3,7 @@ sf0.01 and compare against oracle_sql() via DuckDB (row count + columns +
 order-insensitive values)."""
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -96,3 +97,33 @@ def test_query_map_fits_the_driver_cap():
     assert set(o) == set(q), (
         f"oracle/query key drift: extra={sorted(set(o) - set(q))}, "
         f"missing_oracle={sorted(set(q) - set(o))}")
+
+
+def _fake_session(master):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+
+
+@pytest.mark.parametrize("master", ["yarn", "spark://host:7077",
+                                    "k8s://https://host:6443"])
+def test_scratch_dir_off_local_uses_tempfile_default(master, monkeypatch,
+                                                     tmp_path):
+    # /dev/shm is a per-host RAM disk: checkpoints and stream sources
+    # written there are unreadable to executors on other hosts
+    monkeypatch.delenv("SPARK_GRAFT_TMP", raising=False)
+    monkeypatch.setattr("tempfile.tempdir", str(tmp_path))
+    d = entry_mod._scratch_dir(_fake_session(master), "ck_")
+    assert os.path.dirname(d) == str(tmp_path)
+
+
+def test_scratch_dir_local_and_override(monkeypatch, tmp_path):
+    monkeypatch.delenv("SPARK_GRAFT_TMP", raising=False)
+    if os.path.isdir("/dev/shm"):
+        d = entry_mod._scratch_dir(_fake_session("local[4]"), "ck_")
+        os.rmdir(d)
+        assert os.path.dirname(d) == "/dev/shm"
+    monkeypatch.setenv("SPARK_GRAFT_TMP", str(tmp_path))
+    for master in ("local[4]", "yarn"):
+        d = entry_mod._scratch_dir(_fake_session(master), "ck_")
+        assert os.path.dirname(d) == str(tmp_path)
