@@ -164,15 +164,20 @@ def build_checkpointed(
             # (_temporary, ._*-marker files) with nothing committed —
             # that is a fresh dir, not a corrupt resume; only real
             # committed entries make the unreadability fatal
-            with os.scandir(sdir) as it:
-                has_committed = any(
-                    not e.name.startswith(("_", ".")) for e in it)
+            refusal = (
+                f"checkpoint shards dir {sdir} is non-empty but "
+                "unreadable — refusing to resume (recomputing would "
+                "append duplicate shard rows); inspect or delete the "
+                f"directory. Original error: {e!r}")
+            # a dir that cannot even be listed cannot be shown empty
+            try:
+                with os.scandir(sdir) as it:
+                    has_committed = any(
+                        not e.name.startswith(("_", ".")) for e in it)
+            except OSError as oe:
+                raise RuntimeError(refusal) from oe
             if has_committed:
-                raise RuntimeError(
-                    f"checkpoint shards dir {sdir} is non-empty but "
-                    "unreadable — refusing to resume (recomputing would "
-                    "append duplicate shard rows); inspect or delete the "
-                    f"directory. Original error: {e!r}") from e
+                raise RuntimeError(refusal) from e
             done = set()
 
     missing = sorted(set(range(num_shards)) - done)

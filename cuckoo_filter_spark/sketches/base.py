@@ -6,9 +6,11 @@ Every sketch implements:
 * ``merge(other)`` — associative, commutative combine
 * ``to_bytes()/from_bytes()`` — blob round-trip for shuffle/persist
 
-``build_sketch`` distributes any of them exactly like the cuckoo build:
-per-partition partial in mapInPandas, partials collected (one small blob
-row each) and reduced on the driver. Shuffle-free below
+Every ungrouped build (``build_sketch``/``build_sketches`` here,
+theta, MG, deferred Bloom) runs ONE spec-driven partial
+(``sketch_partials``) exactly like the cuckoo build: per-partition
+partial in mapInPandas, partials collected (one small blob row per
+sketch) and reduced on the driver. Shuffle-free below
 ``TREE_MERGE_AT`` source partitions; above it (the 100 TB regime —
 10^5-10^6 scan tasks would otherwise collect tens of GB of blobs and
 run a serial million-iteration reduce loop on the driver, VERDICT r6
@@ -25,6 +27,7 @@ import time
 from functools import reduce
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 #: partial-blob rows above this many source partitions go through one
@@ -44,19 +47,19 @@ def _num_plan_partitions(df) -> int:
         return 0
 
 
+_PARTS_SCHEMA = ("partition_id int, sketch_id int, rows bigint, "
+                "wall_ms double, blob binary")
+
+
 def tree_merge_level(parts_df, makes, n_groups: int):
     """ONE executor-side merge level over a partial-blob frame
-    (schema: partition_id int, sketch_id int, rows bigint, wall_ms
-    double, blob binary): partials land in ``pmod(partition_id,
+    (``_PARTS_SCHEMA``): partials land in ``pmod(partition_id,
     n_groups)`` merge groups, each group's blobs merge per sketch_id in
     ``applyInPandas`` (associativity is the pinned sketch merge law),
     and one row per (group, sketch) comes back — rows summed, wall_ms
     the group max, partition_id = the merge group id. Only blob rows
     cross the Exchange; raw keys are long gone."""
     from pyspark.sql import functions as F
-
-    schema = ("partition_id int, sketch_id int, rows bigint, "
-              "wall_ms double, blob binary")
 
     def combine(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf["sketch_id"].iloc[0])
@@ -78,20 +81,20 @@ def tree_merge_level(parts_df, makes, n_groups: int):
         parts_df.withColumn(
             "__g", F.pmod(F.col("partition_id"), F.lit(int(n_groups))))
         .groupBy("__g", "sketch_id")
-        .applyInPandas(combine, schema)
+        .applyInPandas(combine, _PARTS_SCHEMA)
     )
 
 
-def collect_and_merge(parts_df, makes, n_partitions: int,
-                      tree_merge_at: int = TREE_MERGE_AT):
+def collect_and_merge(parts_df, makes, n_partitions: int):
     """Collect a partial-blob frame and merge per sketch_id.
 
     Returns (merged sketches in sketch_id order, collected rows).
-    Below ``tree_merge_at`` source partitions: direct collect + driver
-    reduce (the classic path, plan-identical to pre-r7). Above: one
-    ``tree_merge_level`` of ceil(sqrt(P)) groups runs on executors and
-    the driver reduces the O(sqrt(P)) group rows."""
-    if n_partitions > tree_merge_at:
+    Up to ``TREE_MERGE_AT`` source partitions (read at call time):
+    direct collect + driver reduce (the classic path, plan-identical to
+    pre-r7). Above: one ``tree_merge_level`` of ceil(sqrt(P)) groups
+    runs on executors and the driver reduces the O(sqrt(P)) group
+    rows."""
+    if n_partitions > TREE_MERGE_AT:
         parts_df = tree_merge_level(
             parts_df, makes, int(math.ceil(math.sqrt(n_partitions))))
     rows = parts_df.collect()
@@ -104,119 +107,58 @@ def collect_and_merge(parts_df, makes, n_partitions: int,
     return merged, rows
 
 
-def build_sketch(df, col: str, make_sketch: Callable[[], object],
-                 value_kind: str = "keys",
-                 tree_merge_at: int = TREE_MERGE_AT):
-    """Distributed build of any mergeable sketch over df[col].
+_KINDS = ("keys", "numeric", "hashed")
 
-    value_kind: 'keys' → sketch.update(batch) gets the raw column
-    (hashed inside); 'numeric' → gets a float64 numpy array.
-    Returns (sketch, metrics list). Above ``tree_merge_at`` source
-    partitions the combine runs one executor-side tree level first
-    (module docstring) and metrics carry one row per MERGE GROUP
-    (partition_id = group id, rows summed) instead of per partition.
+
+def sketch_partials(df, specs: list[tuple]):
+    """(partial-blob frame, source partition count): the ONE
+    per-partition partial every ungrouped sketch build runs — one scan
+    of ``df`` in mapInPandas, one sketch per spec fed batch by batch,
+    one blob row per (partition, spec).
+
+    specs: (col, make_sketch, kind) triples, kind one of
+    * ``keys`` — the column as keys, via canon_int_keys (the cuckoo
+      build's key identity; fails loud on non-integral or >2^53 float
+      batches);
+    * ``numeric`` — a float64 array (quantile sketches);
+    * ``hashed`` — a bigint column of metro64 hashes, fed to
+      ``update_hashed``.
+    Columns may differ or repeat between specs; the scan projects each
+    once (a duplicated name would make pdf[c] a frame, not a Series).
     """
-    schema = ("partition_id int, sketch_id int, rows bigint, "
-              "wall_ms double, blob binary")
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        sk = make_sketch()
-        rows = 0
-        t0 = time.perf_counter()
-        for pdf in batches:
-            # SQL aggregate NULL semantics: NULLs are excluded (a NULL
-            # key would otherwise hash as the '' phantom / crash on
-            # numerics; a NaN would poison quantile sketches), and
-            # integral key identity is restored for null-bearing
-            # batches (the canon_int_keys hazard)
-            from cuckoo_filter_spark.hashing import canon_int_keys
-
-            vals = pdf[col].dropna()
-            if len(vals) == 0:
-                continue
-            rows += len(vals)
-            if value_kind == "numeric":
-                sk.update(vals.to_numpy(dtype="float64"))
-            else:
-                sk.update(canon_int_keys(vals))
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "sketch_id": [0],
-                "rows": [rows],
-                "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-                "blob": [sk.to_bytes()],
-            }
-        )
-
-    sel = df.select(col)
-    parts = sel.mapInPandas(partial, schema)
-    (merged,), rows = collect_and_merge(
-        parts, [make_sketch], _num_plan_partitions(sel), tree_merge_at)
-    metrics = [
-        {"partition_id": r["partition_id"], "rows": r["rows"], "wall_ms": r["wall_ms"]}
-        for r in rows
-    ]
-    return merged, metrics
-
-
-def build_flagged_sketches(df, specs: list[tuple],
-                           tree_merge_at: int = TREE_MERGE_AT):
-    """ONE scan -> one mergeable sketch per (col, make_sketch) spec,
-    NULLs excluded per column, schema-aware key identity.
-
-    The null exclusion is the subset-composition hook: pre-project row
-    predicates as ``F.when(cond, key_col)`` columns and a single pass
-    builds a sketch per SUBSET without re-scanning per predicate (same
-    pattern as theta.build_theta_sketches; this is the generic version
-    for any str-identity sketch). Integral Spark columns are restored
-    to int64 even when NULLs force pandas to a float dtype, so key
-    identity stays '402' (the CAST(x AS VARCHAR) convention), never
-    '402.0' — values must fit float64's 2^53 integer range on
-    int-with-nulls columns, true for any id column this library
-    targets.
-
-    Scale shape: per-partition partials in mapInPandas, one small blob
-    row per (partition, sketch) collected, driver reduce — zero raw-key
-    shuffle. Returns ([sketch per spec], metrics rows with per-sketch
-    non-null counts).
-    """
-    from pyspark.sql import types as T
-
     if not specs:
-        raise ValueError("build_flagged_sketches needs at least one spec")
-    cols = [c for c, _ in specs]
-    # project each column once even when several specs share it (a
-    # duplicated name would make pdf[c] a frame, not a Series)
-    sel = list(dict.fromkeys(cols))
-    fields = {f.name: f.dataType for f in df.select(*sel).schema.fields}
-    integral = tuple(
-        isinstance(fields[c], (T.LongType, T.IntegerType,
-                               T.ShortType, T.ByteType))
-        for c in cols
-    )
-    schema = ("partition_id int, sketch_id int, rows bigint, "
-              "wall_ms double, blob binary")
+        raise ValueError("sketch build needs at least one column")
+    for _, _, kind in specs:
+        if kind not in _KINDS:
+            raise ValueError(f"sketch spec kind {kind!r} not in {_KINDS}")
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
+        from cuckoo_filter_spark.hashing import canon_int_keys
+
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        sks = [make() for _, make in specs]
+        sks = [make() for _, make, _ in specs]
         counts = [0] * len(specs)
         t0 = time.perf_counter()
         for pdf in batches:
-            for i, c in enumerate(cols):
-                vals = pdf[c].dropna()
+            for i, (col, _, kind) in enumerate(specs):
+                # SQL aggregate NULL semantics: NULLs are excluded (a
+                # NULL key would otherwise hash as the '' phantom /
+                # crash on numerics; a NaN would poison quantile
+                # sketches), and integral key identity is restored for
+                # null-bearing batches (the canon_int_keys hazard)
+                vals = pdf[col].dropna()
                 if len(vals) == 0:
                     continue
                 counts[i] += len(vals)
-                if integral[i]:
-                    vals = vals.astype("int64")
-                sks[i].update(vals)
+                if kind == "numeric":
+                    sks[i].update(vals.to_numpy(dtype="float64"))
+                elif kind == "hashed":
+                    sks[i].update_hashed(
+                        vals.to_numpy(dtype="int64").view(np.uint64))
+                else:
+                    sks[i].update(canon_int_keys(vals))
         wall = (time.perf_counter() - t0) * 1000.0
         yield pd.DataFrame(
             {
@@ -228,11 +170,19 @@ def build_flagged_sketches(df, specs: list[tuple],
             }
         )
 
-    seldf = df.select(*sel)
-    parts = seldf.mapInPandas(partial, schema)
+    sel = df.select(*dict.fromkeys(c for c, _, _ in specs))
+    return sel.mapInPandas(partial, _PARTS_SCHEMA), _num_plan_partitions(sel)
+
+
+def _build(df, specs: list[tuple]):
+    """ONE scan -> one merged sketch per spec, plus metrics rows
+    (partition_id, sketch_id, rows = that spec's non-null count,
+    wall_ms). Above ``TREE_MERGE_AT`` source partitions the rows are
+    per MERGE GROUP (partition_id = group id, rows summed, wall_ms the
+    group max) — see the module docstring."""
+    parts, n_partitions = sketch_partials(df, specs)
     merged, rows = collect_and_merge(
-        parts, [make for _, make in specs], _num_plan_partitions(seldf),
-        tree_merge_at)
+        parts, [make for _, make, _ in specs], n_partitions)
     metrics = [
         {"partition_id": r["partition_id"], "sketch_id": r["sketch_id"],
          "rows": r["rows"], "wall_ms": r["wall_ms"]}
@@ -241,54 +191,29 @@ def build_flagged_sketches(df, specs: list[tuple],
     return merged, metrics
 
 
-def build_sketches(df, specs: list[tuple],
-                   tree_merge_at: int = TREE_MERGE_AT):
+def build_sketch(df, col: str, make_sketch: Callable[[], object],
+                 value_kind: str = "keys"):
+    """Distributed build of any mergeable sketch over df[col].
+
+    value_kind: a ``sketch_partials`` kind. Returns (sketch, metrics
+    list of {partition_id, rows, wall_ms})."""
+    (merged,), metrics = _build(df, [(col, make_sketch, value_kind)])
+    for m in metrics:
+        del m["sketch_id"]
+    return merged, metrics
+
+
+def build_sketches(df, specs: list[tuple]):
     """Build SEVERAL mergeable sketches in ONE scan (one mapInPandas
     pass; one small blob row per (partition, sketch)).
 
-    specs: list of (col, make_sketch, value_kind) triples — columns may
-    differ between sketches; the scan projects their union. Returns the
-    list of merged sketches in spec order. Halves (or better) the wall
-    time of workloads that previously called build_sketch per sketch.
+    specs: ``sketch_partials`` (col, make_sketch, kind) triples.
+    Returns the list of merged sketches in spec order. Halves (or
+    better) the wall time of workloads that previously called
+    build_sketch per sketch.
+
+    The NULL exclusion is the subset-composition hook: pre-project row
+    predicates as ``F.when(cond, key_col)`` columns and a single pass
+    builds a sketch per SUBSET without re-scanning per predicate.
     """
-    cols = list(dict.fromkeys(c for c, _, _ in specs))
-    schema = "partition_id int, sketch_id int, rows bigint, wall_ms double, blob binary"
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        sks = [make() for _, make, _ in specs]
-        rows = 0
-        t0 = time.perf_counter()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows += len(pdf)
-            for sk, (col, _, kind) in zip(sks, specs):
-                from cuckoo_filter_spark.hashing import canon_int_keys
-
-                vals = pdf[col].dropna()  # same NULL/identity rule
-                if len(vals) == 0:
-                    continue
-                if kind == "numeric":
-                    sk.update(vals.to_numpy(dtype="float64"))
-                else:
-                    sk.update(canon_int_keys(vals))
-        wall = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid] * len(sks),
-                "sketch_id": list(range(len(sks))),
-                "rows": [rows] * len(sks),
-                "wall_ms": [wall] * len(sks),
-                "blob": [sk.to_bytes() for sk in sks],
-            }
-        )
-
-    seldf = df.select(*cols)
-    parts = seldf.mapInPandas(partial, schema)
-    merged, _rows = collect_and_merge(
-        parts, [make for _, make, _ in specs], _num_plan_partitions(seldf),
-        tree_merge_at)
-    return merged
+    return _build(df, specs)[0]

@@ -170,8 +170,7 @@ def _check_bloom_geometry(capacity: int, fpp: float,
 
 def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
                          capacity_hint: int | None = None,
-                         max_partial_bits: int = BLOOM_MAX_PARTIAL_BITS,
-                         tree_merge_at: int | None = None):
+                         max_partial_bits: int = BLOOM_MAX_PARTIAL_BITS):
     """Distributed Bloom build with DEFERRED sizing — no capacity
     ``count()`` scan of the build side (VERDICT r4 #4; the cuckoo
     deferred-sizing pattern, operators/build.py).
@@ -189,66 +188,30 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
     ``build_sketch`` path runs.
 
     Returns (BloomSketch, metrics) like ``build_sketch``. Geometry is
-    bounded by ``max_partial_bits`` — see BLOOM_MAX_PARTIAL_BITS; the
-    combine itself goes through base.collect_and_merge (direct driver
-    reduce at local partition counts, one executor-side tree level
-    above TREE_MERGE_AT partitions).
+    bounded by ``max_partial_bits`` — see BLOOM_MAX_PARTIAL_BITS.
     """
-    from cuckoo_filter_spark.sketches.base import (
-        TREE_MERGE_AT,
-        _num_plan_partitions,
-        build_sketch,
-        collect_and_merge,
-    )
+    from cuckoo_filter_spark.hashing import canon_int_keys
+    from cuckoo_filter_spark.sketches.base import build_sketch
 
-    tma = TREE_MERGE_AT if tree_merge_at is None else tree_merge_at
     if capacity_hint is not None:
         _check_bloom_geometry(capacity_hint, fpp, max_partial_bits)
         return build_sketch(
             df, key_col,
-            lambda: BloomSketch(capacity=max(capacity_hint, 64), fpp=fpp),
-            tree_merge_at=tma)
-
-    import time
+            lambda: BloomSketch(capacity=max(capacity_hint, 64), fpp=fpp))
 
     def hasher(batches):
         for pdf in batches:
-            vals = pdf[key_col].dropna()  # same NULL exclusion as update()
+            # same NULL exclusion and key identity as the keys partial
+            vals = pdf[key_col].dropna()
             if len(vals):
                 yield pd.DataFrame(
-                    {"h": metro64_batch(vals).view(np.int64)})
+                    {"h": metro64_batch(canon_int_keys(vals)).view(np.int64)})
 
     hashed = df.select(key_col).mapInPandas(hasher, "h bigint").localCheckpoint(
         eager=False)  # lazy: the count below materializes it (one job,
     # not checkpoint-job + count-job); the partial pass reads the blocks
     n = hashed.count()  # materializes + counts the checkpoint, not the source
     _check_bloom_geometry(n, fpp, max_partial_bits)
-    schema = ("partition_id int, sketch_id int, rows bigint, "
-              "wall_ms double, blob binary")
-
-    def partial(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        sk = BloomSketch(capacity=max(n, 64), fpp=fpp)
-        rows = 0
-        t0 = time.perf_counter()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows += len(pdf)
-            sk.update_hashed(pdf["h"].to_numpy(dtype="int64").view(np.uint64))
-        yield pd.DataFrame(
-            {"partition_id": [pid], "sketch_id": [0], "rows": [rows],
-             "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-             "blob": [sk.to_bytes()]})
-
-    parts = hashed.mapInPandas(partial, schema)
-    (merged,), rows = collect_and_merge(
-        parts, [lambda: BloomSketch(capacity=max(n, 64), fpp=fpp)],
-        _num_plan_partitions(hashed), tma)
-    metrics = [
-        {"partition_id": r["partition_id"], "rows": r["rows"],
-         "wall_ms": r["wall_ms"]} for r in rows
-    ]
-    return merged, metrics
+    return build_sketch(
+        hashed, "h", lambda: BloomSketch(capacity=max(n, 64), fpp=fpp),
+        "hashed")

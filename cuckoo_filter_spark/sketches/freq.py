@@ -27,7 +27,7 @@ the engine-portable ``CAST(x AS VARCHAR)`` convention of
 operators/sampling.py; NULLs are excluded (a NULL is not an item).
 CAVEAT: an int-with-nulls Spark column arrives in pandas as float64,
 so raw ``update`` would register '402.0' — build via
-``build_mg_sketches`` (schema-aware int64 restore, one scan for many
+``build_mg_sketches`` (canon_int_keys int64 restore, one scan for many
 ``when(cond, key)`` subset sketches) or pre-cast keys to string.
 """
 
@@ -160,16 +160,14 @@ def build_mg_sketches(df, cols: list[str], k: int = 256):
     Pre-project row predicates as ``F.when(cond, key_col)`` columns to
     get per-SUBSET heavy hitters from a single pass (heavy users
     overall vs heavy users among errors, etc.) — the same composition
-    hook as theta.build_theta_sketches. Delegates to
-    base.build_flagged_sketches: per-partition partials in mapInPandas,
-    one <= ~(k * avg_key_len) byte blob per (partition, col), driver
+    hook as theta.build_theta_sketches. Runs base.sketch_partials: one
+    <= ~(k * avg_key_len) byte blob per (partition, col), driver
     merge + re-trim (Mergeable Summaries, PODS 2012) — zero raw-key
     shuffle at any scale. Returns ([MGSketch per col], metrics).
     """
-    from cuckoo_filter_spark.sketches.base import build_flagged_sketches
+    from cuckoo_filter_spark.sketches.base import _build
 
-    return build_flagged_sketches(
-        df, [(c, lambda: MGSketch(k=k)) for c in cols])
+    return _build(df, [(c, lambda: MGSketch(k=k), "keys") for c in cols])
 
 
 def grouped_mg_topk(df, group_col: str, item_col: str, k: int = 256,

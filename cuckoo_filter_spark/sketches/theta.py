@@ -36,11 +36,8 @@ vectorized metro64 Arrow path.
 from __future__ import annotations
 
 import struct
-import time
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from cuckoo_filter_spark.hashing import metro64_batch
 
@@ -203,80 +200,18 @@ def theta_jaccard(a: ThetaSketch, b: ThetaSketch) -> float:
 
 
 def build_theta_sketches(
-    df, cols: list[str], k: int = 4096, tree_merge_at: int | None = None,
+    df, cols: list[str], k: int = 4096,
 ) -> tuple[list[ThetaSketch], list[dict]]:
     """ONE scan -> one ThetaSketch per column, with NULLs excluded.
 
     The null exclusion is the composition hook: pre-project row
     predicates as ``F.when(cond, key_col)`` columns and a single pass
     builds a sketch per SUBSET — the set-algebra inputs (users-who-X,
-    users-who-Y) without re-scanning per predicate. Integral columns
-    hash via the canonical 8-byte int encoding even when NULLs force
-    pandas to a float dtype (values must fit float64's 2^53 integer
-    range on such columns — true for any id column this library
-    targets; pure non-null int columns take the Arrow path untouched).
-
-    Scale shape: per-partition partials in mapInPandas, one <= ~8k*
-    len(cols) byte blob row per partition, combined via
-    base.collect_and_merge — direct driver reduce at local partition
-    counts, ONE executor-side tree level above TREE_MERGE_AT partitions
-    (the 10^5+-task regime); zero shuffle of raw keys either way.
-    Returns ([sketch per col], metrics rows).
+    users-who-Y) without re-scanning per predicate. Keys go through
+    base.sketch_partials' ``keys`` rule (canon_int_keys), so a bigint
+    column hashes via the 8-byte int encoding even when NULLs force
+    pandas to float64. Returns ([sketch per col], metrics rows).
     """
-    from pyspark.sql import types as T
+    from cuckoo_filter_spark.sketches.base import _build
 
-    if not cols:
-        raise ValueError("build_theta_sketches needs at least one column")
-    fields = {f.name: f.dataType for f in df.select(*cols).schema.fields}
-    integral = tuple(
-        isinstance(fields[c], (T.LongType, T.IntegerType,
-                               T.ShortType, T.ByteType))
-        for c in cols
-    )
-    schema = "partition_id int, sketch_id int, rows bigint, wall_ms double, blob binary"
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        sks = [ThetaSketch(k=k) for _ in cols]
-        counts = [0] * len(cols)
-        t0 = time.perf_counter()
-        for pdf in batches:
-            for i, c in enumerate(cols):
-                vals = pdf[c].dropna()
-                if len(vals) == 0:
-                    continue
-                counts[i] += len(vals)
-                if integral[i]:
-                    vals = vals.astype("int64")
-                sks[i].update(vals)
-        wall = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid] * len(sks),
-                "sketch_id": list(range(len(sks))),
-                "rows": counts,
-                "wall_ms": [wall] * len(sks),
-                "blob": [sk.to_bytes() for sk in sks],
-            }
-        )
-
-    from cuckoo_filter_spark.sketches.base import (
-        TREE_MERGE_AT,
-        _num_plan_partitions,
-        collect_and_merge,
-    )
-
-    seldf = df.select(*cols)
-    parts = seldf.mapInPandas(partial, schema)
-    merged, rows = collect_and_merge(
-        parts, [lambda: ThetaSketch(k=k) for _ in cols],
-        _num_plan_partitions(seldf),
-        TREE_MERGE_AT if tree_merge_at is None else tree_merge_at)
-    metrics = [
-        {"partition_id": r["partition_id"], "sketch_id": r["sketch_id"],
-         "rows": r["rows"], "wall_ms": r["wall_ms"]}
-        for r in rows
-    ]
-    return merged, metrics
+    return _build(df, [(c, lambda: ThetaSketch(k=k), "keys") for c in cols])

@@ -203,9 +203,10 @@ def main() -> None:
     sections.append(("hash_split/sample_expr: pure codegen projection, "
                      "zero Exchange, zero Python, pruned scan", ok, p))
 
-    # 10. theta flagged build: the when(cond,key) projection + MapInPandas
-    # partials sit directly on the pruned scan — zero Exchange, both
-    # predicate columns derived from a single pass over orders
+    # 10. theta flagged build: the when(cond,key) projection + the
+    # shared sketch_partials MapInPandas sit directly on the pruned
+    # scan — zero Exchange, both predicate columns derived from a
+    # single pass over orders
     ordersf = spark.read.parquet(f"{SF}/orders.parquet").where(
         F.col("o_custkey").isNotNull())
     flagged = ordersf.select(
@@ -213,20 +214,12 @@ def main() -> None:
         .alias("a_key"),
         F.when(F.col("o_orderstatus") == "F", F.col("o_custkey"))
         .alias("b_key"))
+    from cuckoo_filter_spark.sketches.base import sketch_partials
     from cuckoo_filter_spark.sketches.theta import ThetaSketch
 
-    def _theta_partial(batches):
-        import pandas as pd
-        sks = [ThetaSketch(k=64), ThetaSketch(k=64)]
-        for pdf in batches:
-            for i, c in enumerate(("a_key", "b_key")):
-                v = pdf[c].dropna()
-                if len(v):
-                    sks[i].update(v.astype("int64"))
-        yield pd.DataFrame({"sketch_id": [0, 1],
-                            "blob": [s.to_bytes() for s in sks]})
-
-    partials = flagged.mapInPandas(_theta_partial, "sketch_id int, blob binary")
+    partials, _ = sketch_partials(
+        flagged, [(c, lambda: ThetaSketch(k=64), "keys")
+                  for c in ("a_key", "b_key")])
     p = plan_of(partials)
     read_cols = read_schema_cols(p)
     ok = (
@@ -501,31 +494,17 @@ def main() -> None:
                      "zero Python, pruned scan", ok, p))
 
     # 23. sketch tree merge (r7, VERDICT r6 #1): above TREE_MERGE_AT
-    # source partitions the partial blobs go through ONE executor-side
+    # source partitions the partial blobs (the sketch_partials frame
+    # every ungrouped sketch build runs) go through ONE executor-side
     # applyInPandas merge level — blob rows only through a single
     # Exchange, no broadcast, scan stays pruned; the driver then
     # collects O(sqrt(P)) group rows
     from cuckoo_filter_spark.sketches import HLLSketch
     from cuckoo_filter_spark.sketches.base import tree_merge_level
 
-    def _hll_partial(batches):
-        import pandas as pd
-        sk = HLLSketch(p=12)
-        n = 0
-        for pdf in batches:
-            v = pdf["o_custkey"].dropna()
-            n += len(v)
-            if len(v):
-                sk.update(v.astype("int64"))
-        yield pd.DataFrame({"partition_id": [0], "sketch_id": [0],
-                            "rows": [n], "wall_ms": [0.0],
-                            "blob": [sk.to_bytes()]})
-
-    tm_partials = spark.read.parquet(f"{SF}/orders.parquet").select(
-        "o_custkey").mapInPandas(
-        _hll_partial,
-        "partition_id int, sketch_id int, rows bigint, wall_ms double, "
-        "blob binary")
+    tm_partials, _ = sketch_partials(
+        spark.read.parquet(f"{SF}/orders.parquet"),
+        [("o_custkey", lambda: HLLSketch(p=12), "keys")])
     merged = tree_merge_level(tm_partials, [lambda: HLLSketch(p=12)], 4)
     p = plan_of(merged)
     ok = (

@@ -220,12 +220,10 @@ def test_grouped_mg_topk_estimation_bounds(spark):
 def test_flagged_build_shared_column(spark):
     """Two specs over the SAME column (different k) — the projection
     must not duplicate the name (pdf[c] would be a frame)."""
-    from cuckoo_filter_spark.sketches.base import build_flagged_sketches
-
     df = spark.range(0, 4_000, 1, 4).selectExpr("id % 40 AS uid")
-    (small, big), _ = build_flagged_sketches(
-        df, [("uid", lambda: MGSketch(k=8)),
-             ("uid", lambda: MGSketch(k=128))])
+    small, big = build_sketches(
+        df, [("uid", lambda: MGSketch(k=8), "keys"),
+             ("uid", lambda: MGSketch(k=128), "keys")])
     assert big.is_exact() and big.counters == {str(u): 100
                                                for u in range(40)}
     assert not small.is_exact() and len(small.counters) <= 8

@@ -606,19 +606,37 @@ def test_checkpoint_remote_uri_rejected(spark):
                            num_shards=2)
 
 
-def test_checkpoint_unreadable_nonempty_shards_refuses(spark, tmp_path):
+def test_checkpoint_unreadable_nonempty_shards_refuses(spark, tmp_path,
+                                                      monkeypatch):
     """A transient/garbage shards dir must REFUSE to resume, not
-    silently recompute-and-append duplicate shard rows."""
+    silently recompute-and-append duplicate shard rows — also when the
+    dir cannot even be listed (the listing OSError is chained, not
+    raised raw)."""
+    import os
+    import pathlib
+    import shutil
+
     from cuckoo_filter_spark.operators.checkpoint import build_checkpointed
 
     df = spark.createDataFrame([(i,) for i in range(100)], "k long")
     ck = str(tmp_path / "ck")
     build_checkpointed(df, "k", ck, capacity=100, num_shards=2)
     # corrupt the shards dir: replace parquet with garbage
-    import pathlib, shutil
     sdir = pathlib.Path(ck) / "shards"
     shutil.rmtree(sdir)
     sdir.mkdir()
     (sdir / "part-00000.parquet").write_bytes(b"not parquet at all")
     with pytest.raises(RuntimeError, match="refusing to resume"):
         build_checkpointed(df, "k", ck, capacity=100, num_shards=2)
+
+    real_scandir = os.scandir
+
+    def scandir(path="."):
+        if os.fspath(path) == str(sdir):
+            raise PermissionError(13, "Permission denied", str(sdir))
+        return real_scandir(path)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    with pytest.raises(RuntimeError, match="refusing to resume") as ei:
+        build_checkpointed(df, "k", ck, capacity=100, num_shards=2)
+    assert isinstance(ei.value.__cause__, PermissionError)

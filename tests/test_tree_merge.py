@@ -13,33 +13,35 @@ def _keys(spark, n=5000, parts=8):
         F.concat(F.lit("k"), F.col("id")).alias("key"))
 
 
-def test_tree_merge_equals_direct_collect(spark):
+def test_tree_merge_equals_direct_collect(spark, monkeypatch):
     """The executor-side tree level must be byte/estimate-identical to
     the direct driver reduce (merge associativity is the pinned law)."""
-    from cuckoo_filter_spark.sketches import HLLSketch
+    from cuckoo_filter_spark.sketches import HLLSketch, base
     from cuckoo_filter_spark.sketches.base import build_sketch
 
     df = _keys(spark)
     direct, m_direct = build_sketch(df, "key", lambda: HLLSketch(p=12))
-    tree, m_tree = build_sketch(df, "key", lambda: HLLSketch(p=12),
-                                tree_merge_at=1)
+    monkeypatch.setattr(base, "TREE_MERGE_AT", 1)
+    tree, m_tree = build_sketch(df, "key", lambda: HLLSketch(p=12))
     assert direct.to_bytes() == tree.to_bytes()
     # metrics keep the same dict shape; tree rows are per merge group
     assert set(m_direct[0]) == set(m_tree[0])
     assert sum(m["rows"] for m in m_direct) == sum(m["rows"] for m in m_tree)
 
 
-def test_tree_merge_theta_and_bloom_equal(spark):
+def test_tree_merge_theta_and_bloom_equal(spark, monkeypatch):
+    from cuckoo_filter_spark.sketches import base
     from cuckoo_filter_spark.sketches.bloom import build_bloom_deferred
     from cuckoo_filter_spark.sketches.theta import build_theta_sketches
 
     df = _keys(spark, n=3000)
     (a,), _ = build_theta_sketches(df, ["key"], k=256)
-    (b,), _ = build_theta_sketches(df, ["key"], k=256, tree_merge_at=1)
+    bd, _ = build_bloom_deferred(df, "key", fpp=0.01)
+    monkeypatch.setattr(base, "TREE_MERGE_AT", 1)
+    (b,), _ = build_theta_sketches(df, ["key"], k=256)
     assert a.to_bytes() == b.to_bytes()
 
-    bd, _ = build_bloom_deferred(df, "key", fpp=0.01)
-    bt, _ = build_bloom_deferred(df, "key", fpp=0.01, tree_merge_at=1)
+    bt, _ = build_bloom_deferred(df, "key", fpp=0.01)
     assert bd.to_bytes() == bt.to_bytes()
     probes = pd.Series([f"k{i}" for i in range(0, 6000, 7)])
     assert (bd.contains(probes) == bt.contains(probes)).all()
@@ -48,7 +50,7 @@ def test_tree_merge_theta_and_bloom_equal(spark):
 def test_tree_merge_driver_collects_o_sqrt_p_rows(spark, monkeypatch):
     """VERDICT r6 #1 'done' criterion: with the tree active the driver
     collect sees O(merge groups) = O(sqrt(P)) rows, never O(P)."""
-    from cuckoo_filter_spark.sketches import HLLSketch
+    from cuckoo_filter_spark.sketches import HLLSketch, base
     from cuckoo_filter_spark.sketches.base import build_sketch
 
     df = _keys(spark, n=4000, parts=9)  # sqrt(9) = 3 merge groups
@@ -62,8 +64,8 @@ def test_tree_merge_driver_collects_o_sqrt_p_rows(spark, monkeypatch):
         return rows
 
     monkeypatch.setattr(cls, "collect", spy)
-    sk, metrics = build_sketch(df, "key", lambda: HLLSketch(p=12),
-                               tree_merge_at=1)
+    monkeypatch.setattr(base, "TREE_MERGE_AT", 1)
+    sk, metrics = build_sketch(df, "key", lambda: HLLSketch(p=12))
     assert collected == [3], collected  # one collect, 3 group rows (not 9)
     assert len(metrics) == 3
     assert abs(sk.estimate() - 4000) / 4000 < 0.1
@@ -103,6 +105,7 @@ def test_canon_int_keys_fails_loud():
 
 @pytest.mark.parametrize("api", [
     "build_probe", "sharded_probe", "delete", "theta", "hll", "mg",
+    "bloom_deferred",
 ])
 def test_null_batches_keep_int_key_identity(spark, api):
     """VERDICT r6 #4: every public key-consuming API answers identically
@@ -182,3 +185,34 @@ def test_null_batches_keep_int_key_identity(spark, api):
         (b,), _ = build_mg_sketches(mixed, ["key"], k=1024)
         assert a.is_exact() and b.is_exact()
         assert dict(a.guaranteed_at_least(1)) == dict(b.guaranteed_at_least(1))
+    elif api == "bloom_deferred":
+        from cuckoo_filter_spark.sketches.bloom import build_bloom_deferred
+
+        a, _ = build_bloom_deferred(equiv, "key", fpp=0.01)
+        b, _ = build_bloom_deferred(mixed, "key", fpp=0.01)
+        assert a.to_bytes() == b.to_bytes()
+        # every batch of ``nulls`` is null-bearing: its members must
+        # still hit through the int64 identity the probes use
+        only, _ = build_bloom_deferred(nulls.repartition(2), "key",
+                                       fpp=0.01)
+        members = pd.Series(np.arange(0, 50, 2) * 7, dtype="int64")
+        assert only.contains(members).all()
+
+
+@pytest.mark.parametrize("api", ["theta", "mg"])
+def test_flagged_builds_refuse_lost_int_identity(spark, api):
+    """A bigint key column whose null-bearing batches hold values beyond
+    2^53 has already lost its identity in Arrow's float64 rendering:
+    theta and MG builds must raise the canon_int_keys error, as
+    build_sketch does, instead of collapsing neighbouring keys."""
+    from pyspark.errors import PythonException
+
+    from cuckoo_filter_spark.sketches.freq import build_mg_sketches
+    from cuckoo_filter_spark.sketches.theta import build_theta_sketches
+
+    big = spark.range(0, 360, 1, 2).select(
+        F.when(F.col("id") % 2 == 0, F.col("id") + F.lit(2**60))
+        .alias("key"))
+    build = build_theta_sketches if api == "theta" else build_mg_sketches
+    with pytest.raises(PythonException, match="2\\^53"):
+        build(big, ["key"])
