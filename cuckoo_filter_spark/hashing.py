@@ -230,7 +230,7 @@ def fmix64(x: np.ndarray, seed=0) -> np.ndarray:
 
 
 def canon_int_keys(vals):
-    """Canonical dtype for KEY hashing of a pandas batch.
+    """Canonical dtype for KEY hashing of a pandas (or numpy) batch.
 
     Arrow hands a bigint column's null-BEARING batches to pandas as
     float64 — so after the standard null exclusion the SAME key would
@@ -255,7 +255,7 @@ def canon_int_keys(vals):
       exclude NULLs JVM-side so batches stay int64 end-to-end."""
     if getattr(vals, "dtype", None) is not None and vals.dtype.kind == "f" \
             and len(vals):
-        v = vals.to_numpy()
+        v = np.asarray(vals)
         if not (np.isfinite(v).all() and (v == np.floor(v)).all()):
             raise TypeError(
                 "canon_int_keys: non-integral float key batch — float "
@@ -272,6 +272,25 @@ def canon_int_keys(vals):
                 "or drop NULLs JVM-side so batches stay int64")
         return vals.astype("int64")
     return vals
+
+
+def arrow_key_hashes(arr, seed: int = DEFAULT_SEED) -> np.ndarray:
+    """uint64 metro64 of every slot of a NULL-free Arrow key array —
+    THE key rule of the Arrow batch paths, straight from the Arrow
+    buffers with no pandas round trip.
+
+    Integer, string and binary arrays hash as they are (an integer as
+    its 8-byte little-endian int64, so int32 and int64 keys agree). A
+    floating array goes through :func:`canon_int_keys` (integral →
+    int64, otherwise ``TypeError``), which keeps hash identity with the
+    pandas build and probe paths. A bigint column stays int64 plus a
+    validity bitmap in Arrow, so the >2^53 float64-rendering hazard
+    that ``canon_int_keys`` guards against never arises here."""
+    import pyarrow as pa
+
+    if pa.types.is_floating(arr.type):
+        arr = pa.array(canon_int_keys(arr.to_numpy(zero_copy_only=False)))
+    return metro64_flat(*to_flat_bytes(arr), seed)
 
 
 def key_mask_and_values(items):

@@ -9,7 +9,7 @@ Every sketch implements:
 Every ungrouped build (``build_sketch``/``build_sketches`` here,
 theta, MG, deferred Bloom) runs ONE spec-driven partial
 (``sketch_partials``) exactly like the cuckoo build: per-partition
-partial in mapInPandas, partials collected (one small blob row per
+partial in mapInArrow, partials collected (one small blob row per
 sketch) and reduced on the driver. Shuffle-free below
 ``TREE_MERGE_AT`` source partitions; above it (the 100 TB regime —
 10^5-10^6 scan tasks would otherwise collect tens of GB of blobs and
@@ -29,6 +29,8 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 #: partial-blob rows above this many source partitions go through one
 #: executor-side tree-merge level before the driver collect. At local/
@@ -39,7 +41,7 @@ TREE_MERGE_AT = 256
 
 
 def _num_plan_partitions(df) -> int:
-    """Partition count the mapInPandas partials will run with (driver-
+    """Partition count the mapInArrow partials will run with (driver-
     side only, no job)."""
     try:
         return df.rdd.getNumPartitions()
@@ -110,68 +112,110 @@ def collect_and_merge(parts_df, makes, n_partitions: int):
 _KINDS = ("keys", "numeric", "hashed")
 
 
+def drop_missing(arr: pa.Array) -> pa.Array:
+    """``arr`` without its NULLs and, for a floating array, its NaNs —
+    the rows pandas' ``dropna`` excluded. SQL aggregate semantics: a
+    NULL key would hash as the '' phantom, and a NaN would poison a
+    quantile sketch or fail the integral-key rule."""
+    arr = pc.drop_null(arr)
+    if pa.types.is_floating(arr.type):
+        arr = arr.filter(pc.invert(pc.is_nan(arr)))
+    return arr
+
+
+def _partial_fn(specs: list[tuple], cols: list[str]):
+    """The mapInArrow generator of ``sketch_partials``: one sketch per
+    spec, fed batch by batch from ``cols`` (the projected columns in
+    order), then one blob row per spec.
+
+    Per batch, each column's present values are taken once and a keys
+    column is hashed ONCE (``arrow_key_hashes``); that one uint64 array
+    feeds every spec on the column through ``update_hashed``. Sketches
+    without ``update_hashed`` (MG) get the values as pandas, with the
+    same ``canon_int_keys`` float rule."""
+    pos = {c: j for j, c in enumerate(cols)}
+
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        from cuckoo_filter_spark.hashing import (
+            arrow_key_hashes,
+            canon_int_keys,
+        )
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx else -1
+        sks = [make() for _, make, _ in specs]
+        counts = [0] * len(specs)
+        t0 = time.perf_counter()
+        for batch in batches:
+            vals: dict[str, pa.Array] = {}
+            hashes: dict[str, np.ndarray] = {}
+            for i, (col, _, kind) in enumerate(specs):
+                if col not in vals:
+                    vals[col] = drop_missing(batch.column(pos[col]))
+                v = vals[col]
+                if len(v) == 0:
+                    continue
+                counts[i] += len(v)
+                sk = sks[i]
+                if kind == "numeric":
+                    # numpy, not pc.cast: Arrow rounds decimals
+                    # differently from float(Decimal) and refuses
+                    # integers beyond 2^53
+                    sk.update(np.asarray(v.to_numpy(zero_copy_only=False),
+                                         dtype=np.float64))
+                elif kind == "hashed":
+                    sk.update_hashed(np.asarray(
+                        v.to_numpy(zero_copy_only=False),
+                        dtype=np.int64).view(np.uint64))
+                elif hasattr(sk, "update_hashed"):
+                    if col not in hashes:
+                        hashes[col] = arrow_key_hashes(v)
+                    sk.update_hashed(hashes[col])
+                else:
+                    sk.update(canon_int_keys(v.to_pandas()))
+        wall = (time.perf_counter() - t0) * 1000.0
+        n = len(sks)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([pid] * n, pa.int32()),
+                pa.array(range(n), pa.int32()),
+                pa.array(counts, pa.int64()),
+                pa.array([wall] * n, pa.float64()),
+                pa.array([sk.to_bytes() for sk in sks], pa.binary()),
+            ],
+            names=["partition_id", "sketch_id", "rows", "wall_ms", "blob"],
+        )
+
+    return partial
+
+
 def sketch_partials(df, specs: list[tuple]):
     """(partial-blob frame, source partition count): the ONE
     per-partition partial every ungrouped sketch build runs — one scan
-    of ``df`` in mapInPandas, one sketch per spec fed batch by batch,
+    of ``df`` in mapInArrow, one sketch per spec fed batch by batch,
     one blob row per (partition, spec).
 
     specs: (col, make_sketch, kind) triples, kind one of
-    * ``keys`` — the column as keys, via canon_int_keys (the cuckoo
-      build's key identity; fails loud on non-integral or >2^53 float
-      batches);
+    * ``keys`` — the column as keys, hashed once per batch by
+      ``hashing.arrow_key_hashes`` (the cuckoo build's key identity;
+      a float column must be integral, else TypeError);
     * ``numeric`` — a float64 array (quantile sketches);
     * ``hashed`` — a bigint column of metro64 hashes, fed to
       ``update_hashed``.
-    Columns may differ or repeat between specs; the scan projects each
-    once (a duplicated name would make pdf[c] a frame, not a Series).
+    NULLs (and NaNs) are excluded per spec. Columns may differ or
+    repeat between specs; the scan projects each once.
     """
     if not specs:
         raise ValueError("sketch build needs at least one column")
     for _, _, kind in specs:
         if kind not in _KINDS:
             raise ValueError(f"sketch spec kind {kind!r} not in {_KINDS}")
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from cuckoo_filter_spark.hashing import canon_int_keys
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        sks = [make() for _, make, _ in specs]
-        counts = [0] * len(specs)
-        t0 = time.perf_counter()
-        for pdf in batches:
-            for i, (col, _, kind) in enumerate(specs):
-                # SQL aggregate NULL semantics: NULLs are excluded (a
-                # NULL key would otherwise hash as the '' phantom /
-                # crash on numerics; a NaN would poison quantile
-                # sketches), and integral key identity is restored for
-                # null-bearing batches (the canon_int_keys hazard)
-                vals = pdf[col].dropna()
-                if len(vals) == 0:
-                    continue
-                counts[i] += len(vals)
-                if kind == "numeric":
-                    sks[i].update(vals.to_numpy(dtype="float64"))
-                elif kind == "hashed":
-                    sks[i].update_hashed(
-                        vals.to_numpy(dtype="int64").view(np.uint64))
-                else:
-                    sks[i].update(canon_int_keys(vals))
-        wall = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid] * len(sks),
-                "sketch_id": list(range(len(sks))),
-                "rows": counts,
-                "wall_ms": [wall] * len(sks),
-                "blob": [sk.to_bytes() for sk in sks],
-            }
-        )
-
-    sel = df.select(*dict.fromkeys(c for c, _, _ in specs))
-    return sel.mapInPandas(partial, _PARTS_SCHEMA), _num_plan_partitions(sel)
+    cols = list(dict.fromkeys(c for c, _, _ in specs))
+    sel = df.select(*cols)
+    return (sel.mapInArrow(_partial_fn(specs, cols), _PARTS_SCHEMA),
+            _num_plan_partitions(sel))
 
 
 def _build(df, specs: list[tuple]):
@@ -204,7 +248,7 @@ def build_sketch(df, col: str, make_sketch: Callable[[], object],
 
 
 def build_sketches(df, specs: list[tuple]):
-    """Build SEVERAL mergeable sketches in ONE scan (one mapInPandas
+    """Build SEVERAL mergeable sketches in ONE scan (one mapInArrow
     pass; one small blob row per (partition, sketch)).
 
     specs: ``sketch_partials`` (col, make_sketch, kind) triples.

@@ -190,7 +190,6 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
     Returns (BloomSketch, metrics) like ``build_sketch``. Geometry is
     bounded by ``max_partial_bits`` — see BLOOM_MAX_PARTIAL_BITS.
     """
-    from cuckoo_filter_spark.hashing import canon_int_keys
     from cuckoo_filter_spark.sketches.base import build_sketch
 
     if capacity_hint is not None:
@@ -200,14 +199,20 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
             lambda: BloomSketch(capacity=max(capacity_hint, 64), fpp=fpp))
 
     def hasher(batches):
-        for pdf in batches:
-            # same NULL exclusion and key identity as the keys partial
-            vals = pdf[key_col].dropna()
-            if len(vals):
-                yield pd.DataFrame(
-                    {"h": metro64_batch(canon_int_keys(vals)).view(np.int64)})
+        import pyarrow as pa
 
-    hashed = df.select(key_col).mapInPandas(hasher, "h bigint").localCheckpoint(
+        from cuckoo_filter_spark.hashing import arrow_key_hashes
+        from cuckoo_filter_spark.sketches.base import drop_missing
+
+        for batch in batches:
+            # same NULL exclusion and key identity as the keys partial
+            vals = drop_missing(batch.column(0))
+            if len(vals):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(arrow_key_hashes(vals).view(np.int64))],
+                    names=["h"])
+
+    hashed = df.select(key_col).mapInArrow(hasher, "h bigint").localCheckpoint(
         eager=False)  # lazy: the count below materializes it (one job,
     # not checkpoint-job + count-job); the partial pass reads the blocks
     n = hashed.count()  # materializes + counts the checkpoint, not the source

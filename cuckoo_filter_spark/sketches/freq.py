@@ -27,7 +27,7 @@ the engine-portable ``CAST(x AS VARCHAR)`` convention of
 operators/sampling.py; NULLs are excluded (a NULL is not an item).
 CAVEAT: an int-with-nulls Spark column arrives in pandas as float64,
 so raw ``update`` would register '402.0' — build via
-``build_mg_sketches`` (canon_int_keys int64 restore, one scan for many
+``build_mg_sketches`` (Arrow batches keep int64, one scan for many
 ``when(cond, key)`` subset sketches) or pre-cast keys to string.
 """
 

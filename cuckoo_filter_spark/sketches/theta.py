@@ -208,9 +208,9 @@ def build_theta_sketches(
     predicates as ``F.when(cond, key_col)`` columns and a single pass
     builds a sketch per SUBSET — the set-algebra inputs (users-who-X,
     users-who-Y) without re-scanning per predicate. Keys go through
-    base.sketch_partials' ``keys`` rule (canon_int_keys), so a bigint
-    column hashes via the 8-byte int encoding even when NULLs force
-    pandas to float64. Returns ([sketch per col], metrics rows).
+    base.sketch_partials' ``keys`` rule (hashing.arrow_key_hashes), so
+    a bigint column hashes via the 8-byte int encoding in every batch,
+    NULL-bearing or not. Returns ([sketch per col], metrics rows).
     """
     from cuckoo_filter_spark.sketches.base import _build
 

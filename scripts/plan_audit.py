@@ -204,7 +204,7 @@ def main() -> None:
                      "zero Exchange, zero Python, pruned scan", ok, p))
 
     # 10. theta flagged build: the when(cond,key) projection + the
-    # shared sketch_partials MapInPandas sit directly on the pruned
+    # shared sketch_partials MapInArrow sit directly on the pruned
     # scan — zero Exchange, both predicate columns derived from a
     # single pass over orders
     ordersf = spark.read.parquet(f"{SF}/orders.parquet").where(
@@ -223,12 +223,12 @@ def main() -> None:
     p = plan_of(partials)
     read_cols = read_schema_cols(p)
     ok = (
-        "MapInPandas" in p
+        "MapInArrow" in p
         and "Exchange" not in p
         and read_cols == ["o_custkey", "o_orderstatus", "o_totalprice"]
     )
     sections.append(("theta flagged build: one pruned scan feeds both "
-                     "predicate sketches, MapInPandas, zero Exchange", ok, p))
+                     "predicate sketches, MapInArrow, zero Exchange", ok, p))
 
     # 11. grouped MG top-N: phase-1 partials on NATURAL partitions (the
     # only Exchange in the whole plan is the tiny per-group BLOB shuffle

@@ -199,20 +199,41 @@ def test_null_batches_keep_int_key_identity(spark, api):
         assert only.contains(members).all()
 
 
-@pytest.mark.parametrize("api", ["theta", "mg"])
-def test_flagged_builds_refuse_lost_int_identity(spark, api):
+@pytest.mark.parametrize("api", ["theta", "mg", "hll", "bloom_deferred"])
+def test_sketch_builds_keep_big_int_identity(spark, api):
     """A bigint key column whose null-bearing batches hold values beyond
-    2^53 has already lost its identity in Arrow's float64 rendering:
-    theta and MG builds must raise the canon_int_keys error, as
-    build_sketch does, instead of collapsing neighbouring keys."""
-    from pyspark.errors import PythonException
-
+    2^53: the Arrow sketch paths see int64 plus a validity bitmap (no
+    float64 rendering), so every one of the 180 keys keeps its identity
+    instead of raising or collapsing into its float64 neighbours."""
+    from cuckoo_filter_spark.sketches import HLLSketch
+    from cuckoo_filter_spark.sketches.base import build_sketch
+    from cuckoo_filter_spark.sketches.bloom import (
+        BloomSketch,
+        build_bloom_deferred,
+    )
     from cuckoo_filter_spark.sketches.freq import build_mg_sketches
     from cuckoo_filter_spark.sketches.theta import build_theta_sketches
 
     big = spark.range(0, 360, 1, 2).select(
         F.when(F.col("id") % 2 == 0, F.col("id") + F.lit(2**60))
         .alias("key"))
-    build = build_theta_sketches if api == "theta" else build_mg_sketches
-    with pytest.raises(PythonException, match="2\\^53"):
-        build(big, ["key"])
+    keys = pd.Series(np.arange(0, 360, 2) + 2**60, dtype="int64")
+    if api == "theta":
+        (sk,), _ = build_theta_sketches(big, ["key"])
+        assert sk.estimate() == 180.0
+    elif api == "mg":
+        (sk,), _ = build_mg_sketches(big, ["key"])
+        assert sk.is_exact()
+        assert dict(sk.guaranteed_at_least(1)) == {
+            str(k): 1 for k in keys}
+    elif api == "hll":
+        sk, _ = build_sketch(big, "key", lambda: HLLSketch(p=12))
+        ref = HLLSketch(p=12)
+        ref.update(keys)
+        assert sk.to_bytes() == ref.to_bytes()
+    else:
+        sk, _ = build_bloom_deferred(big, "key", fpp=0.01)
+        ref = BloomSketch(capacity=180, fpp=0.01)
+        ref.update(keys)
+        assert sk.to_bytes() == ref.to_bytes()
+        assert sk.contains(keys).all()
