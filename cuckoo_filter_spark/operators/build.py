@@ -1,23 +1,28 @@
 """Distributed cuckoo-filter build (build plan M2, lifecycle SURVEY.md §3).
 
 The build is the mergeable-UDAF pattern Spark uses for its own partial
-aggregates: a per-partition *partial* is computed inside ``mapInPandas``
-(Arrow batches → vectorized metro64 fingerprinting; no per-row Python),
-partials are combined with the associative merge (SURVEY.md §2.3 —
-sound because the alt-index is an involution, cuckoofilter.go:105-108).
+aggregates: a per-partition *partial* is computed inside ``mapInArrow``
+(Arrow batches → vectorized metro64 fingerprinting; no per-row Python,
+no pandas), partials are combined with the associative merge (SURVEY.md
+§2.3 — sound because the alt-index is an involution,
+cuckoofilter.go:105-108).
 
-Two partial representations:
+Every route runs ONE partial (:func:`key_partials`): per batch it drops
+the NULL keys once, hashes the rest once and counts them; at the end of
+the partition a small per-route finisher emits
 
-* ``sparse`` (default) — a partial is the array of (bucket, tag) pairs
-  (locally deduped in unique modes). This is a cuckoo filter whose
-  eviction work is deferred: insertion order is free, so running the
-  kick loop once at combine time yields the same membership. Partial
-  size ∝ keys in the partition (8 bytes/key), NOT table size — at 10^12
-  rows the collected/shuffled volume is the data's fingerprint volume,
-  and no executor ever materializes a full table during the scan.
-* ``table`` — a partial is a full-size filter blob (§1.5 bytes); merge
-  is merge-by-reinsertion of occupied slots. Demonstrates blob-level
-  merge associativity; preferred when partials are reused standalone.
+* raw 64-bit hashes (deferred sizing — no capacity given; the table is
+  sized at combine time from the deduped global count);
+* (bucket, tag) pairs, canon-deduped in unique modes (declared
+  capacity). This is a cuckoo filter whose eviction work is deferred:
+  insertion order is free, so running the kick loop once at combine
+  time yields the same membership;
+* per-shard pair blobs (the sharded, checkpointed and auto-shard routes;
+  ``operators.sharded``).
+
+Partial size ∝ keys in the partition (8 bytes/key), NOT table size — at
+10^12 rows the collected/shuffled volume is the data's fingerprint
+volume, and no executor ever materializes a full table during the scan.
 
 Scale notes (100 TB / 10^12 rows):
 * plain/unique_local modes are shuffle-free: partials build on the scan
@@ -25,8 +30,8 @@ Scale notes (100 TB / 10^12 rows):
 * ``unique_global`` adds exactly one shuffle — ``repartition(key)`` — so
   duplicate keys co-locate and partition-local dedupe is globally exact.
 * one driver-combined filter caps out around 10^8 keys; beyond that use
-  ``cuckoo_filter_spark.operators.sharded`` (shard by fingerprint top
-  bits; each shard built/combined independently on executors).
+  ``cuckoo_filter_spark.operators.sharded`` (shard by an independent
+  re-hash; each shard built/combined independently on executors).
 """
 
 from __future__ import annotations
@@ -34,21 +39,25 @@ from __future__ import annotations
 import struct
 import time
 from dataclasses import dataclass, field
-from functools import reduce
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import arrow_key_hashes, metro64_batch
 from cuckoo_filter_spark.kernel.filter import CuckooKernel
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
+from cuckoo_filter_spark.sketches.base import drop_missing
 
-BUILD_SCHEMA = (
-    "partition_id int, rows bigint, stored bigint, distinct_keys bigint, "
-    "kicks bigint, victim_used boolean, load_factor double, wall_ms double, "
-    "blob binary"
-)
+#: one row per partition of the single-filter routes
+BUILD_ROW = pa.schema([
+    ("partition_id", pa.int32()), ("rows", pa.int64()),
+    ("stored", pa.int64()), ("distinct_keys", pa.int64()),
+    ("kicks", pa.int64()), ("victim_used", pa.bool_()),
+    ("load_factor", pa.float64()), ("wall_ms", pa.float64()),
+    ("blob", pa.binary()),
+])
 
 # Default headroom over the observed/declared key count when sizing the
 # table, so merged partials stay under max_load_factor (SURVEY.md §7 M5).
@@ -253,9 +262,8 @@ def canon_dedupe_pairs(params: CuckooParams, bi: np.ndarray,
                        tags: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Keep the first occurrence per canonical (bucket-pair, tag) —
     set semantics on the fingerprint space; orientation-independent via
-    the alt involution. Shared by the sparse builder, the shard pair
-    emitter and the deferred-route explode (one definition, one future
-    fix)."""
+    the alt involution. Shared by the declared-capacity finisher and
+    the shard split (one definition, one future fix)."""
     if len(bi) == 0:
         return bi, tags
     alt = params.alt(bi, tags)
@@ -280,153 +288,151 @@ def hashes_of(pdf_col, hash_fn: str) -> np.ndarray:
     return metro64_batch(canon_int_keys(pdf_col))
 
 
-def _sparse_partial_builder(params: CuckooParams, key_col: str, unique: bool,
-                            hash_fn: str = "metro64", count_keys: bool = False):
-    """mapInPandas: fingerprint + locally dedupe; emit (bucket, tag) pairs.
+def key_column(df, key_col: str, hash_fn: str):
+    """``df[key_col]`` as the one column a key partial reads. For
+    ``hash_fn='xxhash64'`` that is the JVM-side xxhash64 of each
+    NON-NULL key (whole-stage codegen; only 8-byte hashes cross the
+    Arrow bridge). Nulls are dropped BEFORE hashing: F.xxhash64(NULL)
+    is the seed 42, a non-null bigint that would store a phantom
+    fingerprint and inflate distinct_keys."""
+    if hash_fn == "xxhash64":
+        from pyspark.sql import functions as F
 
-    count_keys: additionally dedupe on the RAW key value (vectorized
-    DistinctAccum) and report the count as ``distinct_keys``.
-    Fingerprints collide on the ~nb·2^f canon space, so ``stored``
-    under-counts distinct keys with probability growing ~n²/canon_space;
-    the raw-key count is exact within the partition (and globally exact
-    under ``unique_global`` co-location, COUNT(DISTINCT) null semantics:
-    nulls/NaN excluded)."""
+        return df.where(F.col(key_col).isNotNull()).select(
+            F.xxhash64(key_col).alias(key_col))
+    if hash_fn != "metro64":
+        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    return df.select(key_col)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+#: a key partial's per-route end of partition: (partition id, non-null
+#: rows, the partition's hashes in scan order, raw-key accumulator or
+#: None, start time) -> the output RecordBatch
+Finisher = Callable[[int, int, np.ndarray, "DistinctAccum | None", float],
+                    pa.RecordBatch]
+
+
+def _key_partial_fn(finish: Finisher, prehashed: bool, count_keys: bool):
+    """The mapInArrow generator of :func:`key_partials`."""
+
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        rows = 0
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx else -1
         t0 = time.perf_counter()
-        bis: list[np.ndarray] = []
-        tgs: list[np.ndarray] = []
-        seen: DistinctAccum | None = DistinctAccum() if count_keys else None
-        for pdf in batches:
-            # NULL keys are EXCLUDED (the library convention; a NULL
-            # string slot would alias '' and a NULL numeric slot
-            # crashes the flat-bytes path); rows counts non-null keys
-            keys = pdf[key_col].dropna()
-            if len(keys) == 0:
-                continue
-            rows += len(keys)
-            if seen is not None:
-                seen.add(keys)
-            idx, tag = params.split(hashes_of(keys, hash_fn))
-            bis.append(idx)
-            tgs.append(tag)
-        bi = np.concatenate(bis) if bis else np.zeros(0, dtype=np.int64)
-        tags = np.concatenate(tgs) if tgs else np.zeros(0, dtype=np.uint32)
-        if unique:
-            bi, tags = canon_dedupe_pairs(params, bi, tags)
-        wall_ms = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "rows": [rows],
-                "stored": [len(bi)],
-                "distinct_keys": [len(seen) if seen is not None else None],
-                "kicks": [0],
-                "victim_used": [False],
-                "load_factor": [len(bi) / params.size_in_tags],
-                "wall_ms": [wall_ms],
-                "blob": [pack_pairs(bi, tags)],
-            }
-        )
-
-    return build
-
-
-def _hash_partial_builder(key_col: str, unique: bool, hash_fn: str = "metro64",
-                          count_keys: bool = False):
-    """mapInPandas partial that emits raw 64-bit hashes (8 B/key, the
-    same volume as split pairs) instead of (bucket, tag) pairs. Used
-    when no capacity hint exists: table params are then sized at combine
-    time from the DEDUPED global count — one scan total, no separate
-    count() pass, and the table is sized on distinct keys rather than
-    row count (tighter at high duplication)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         rows = 0
-        t0 = time.perf_counter()
         hs: list[np.ndarray] = []
-        seen: DistinctAccum | None = DistinctAccum() if count_keys else None
-        for pdf in batches:
-            # NULL keys are EXCLUDED (the library convention; a NULL
-            # string slot would alias '' and a NULL numeric slot
-            # crashes the flat-bytes path); rows counts non-null keys
-            keys = pdf[key_col].dropna()
+        # count_keys: dedupe RAW keys (with their hash, so the sharded
+        # finisher can group the distinct keys by shard)
+        seen = DistinctAccum(dropna=False) if count_keys else None
+        for batch in batches:
+            keys = drop_missing(batch.column(0))
             if len(keys) == 0:
                 continue
             rows += len(keys)
+            if prehashed:
+                h = np.asarray(keys.to_numpy(zero_copy_only=False),
+                               dtype=np.int64).view(np.uint64)
+            else:
+                h = arrow_key_hashes(keys)
             if seen is not None:
-                seen.add(keys)
-            hs.append(hashes_of(keys, hash_fn))
+                seen.add(pd.DataFrame({"h": h, "key": keys.to_pandas()}))
+            hs.append(h)
         h = np.concatenate(hs) if hs else np.zeros(0, dtype=np.uint64)
+        yield finish(pid, rows, h, seen, t0)
+
+    return partial
+
+
+def key_partials(df, key_col: str, hash_fn: str, mode: str,
+                 finish: Finisher, schema: pa.Schema,
+                 num_partitions: int | None = None):
+    """THE per-partition partial of every cuckoo build route: one
+    mapInArrow pass over ``df[key_col]``. Per batch the NULL keys (and
+    NaNs of a floating column) are dropped once, the rest hashed once
+    (``hashing.arrow_key_hashes``, or the xxhash64 column viewed as
+    uint64) and counted; under ``mode='unique_global'`` the raw keys
+    also feed a ``DistinctAccum``. ``finish`` turns the partition's
+    hashes into its output rows (``schema``).
+
+    ``unique_global`` repartitions by key first (``num_partitions`` or
+    the session parallelism) so duplicate keys co-locate and the
+    partition-local raw-key counts sum to the exact global count; other
+    modes repartition only when ``num_partitions`` is given."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    sel = key_column(df, key_col, hash_fn)
+    if mode == "unique_global":
+        n = num_partitions or sel.sparkSession.sparkContext.defaultParallelism
+        sel = sel.repartition(n, F.col(key_col))
+    elif num_partitions:
+        sel = sel.repartition(num_partitions)
+    fn = _key_partial_fn(finish, hash_fn == "xxhash64",
+                         mode == "unique_global")
+    return sel.mapInArrow(fn, from_arrow_schema(schema))
+
+
+def _build_row(pid: int, rows: int, stored: int, seen, load_factor,
+               t0: float, blob: bytes) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pylist([{
+        "partition_id": pid, "rows": rows, "stored": stored,
+        "distinct_keys": len(seen) if seen is not None else None,
+        "kicks": 0, "victim_used": False, "load_factor": load_factor,
+        "wall_ms": (time.perf_counter() - t0) * 1000.0, "blob": blob,
+    }], schema=BUILD_ROW)
+
+
+def _hash_finisher(unique: bool) -> Finisher:
+    """Deferred sizing: the partition's raw 64-bit hashes (8 B/key, the
+    same volume as split pairs). Table params are sized at combine time
+    from the DEDUPED global count — one scan total, no separate count()
+    pass, and the table is sized on distinct keys rather than row count
+    (tighter at high duplication)."""
+
+    def finish(pid, rows, h, seen, t0):
         if unique and len(h):
             h = np.unique(h)  # same-key copies share a hash; canon-space
             # dedupe happens again at insert time with the final params
-        wall_ms = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "rows": [rows],
-                "stored": [len(h)],
-                "distinct_keys": [len(seen) if seen is not None else None],
-                "kicks": [0],
-                "victim_used": [False],
-                "load_factor": [None],  # table not sized yet
-                "wall_ms": [wall_ms],
-                "blob": [pack_hashes(h)],
-            }
-        )
+        return _build_row(pid, rows, len(h), seen, None, t0, pack_hashes(h))
 
-    return build
+    return finish
 
 
-def _table_partial_builder(params: CuckooParams, key_col: str, unique: bool,
-                           count_keys: bool = False):
-    """mapInPandas: one full-size partial filter blob per partition."""
+def _pair_finisher(params: CuckooParams, unique: bool) -> Finisher:
+    """Declared capacity: the partition's (bucket, tag) pairs,
+    canon-deduped in unique modes.
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    ``distinct_keys`` (unique_global) is the raw-key count: fingerprints
+    collide on the ~nb·2^f canon space, so ``stored`` under-counts
+    distinct keys with probability growing ~n²/canon_space, while the
+    raw-key count is exact within the partition (and globally exact
+    under ``unique_global`` co-location, COUNT(DISTINCT) null
+    semantics: nulls/NaN excluded)."""
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        kern = CuckooKernel(params, seed=0x1337C0FFEE ^ pid)
-        rows = 0
-        stored = 0
-        t0 = time.perf_counter()
-        seen: DistinctAccum | None = DistinctAccum() if count_keys else None
-        for pdf in batches:
-            # NULL keys are EXCLUDED (the library convention; a NULL
-            # string slot would alias '' and a NULL numeric slot
-            # crashes the flat-bytes path); rows counts non-null keys
-            keys = pdf[key_col].dropna()
-            if len(keys) == 0:
-                continue
-            rows += len(keys)
-            if seen is not None:
-                seen.add(keys)
-            ok = kern.add_unique(keys) if unique else kern.add(keys)
-            stored += int(ok.sum())
-        wall_ms = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "rows": [rows],
-                "stored": [stored],
-                "distinct_keys": [len(seen) if seen is not None else None],
-                "kicks": [kern.kicks],
-                "victim_used": [kern.victim_used],
-                "load_factor": [kern.load_factor()],
-                "wall_ms": [wall_ms],
-                "blob": [kern.to_bytes()],
-            }
-        )
+    def finish(pid, rows, h, seen, t0):
+        bi, tags = params.split(h)
+        if unique:
+            bi, tags = canon_dedupe_pairs(params, bi, tags)
+        return _build_row(pid, rows, len(bi), seen,
+                          len(bi) / params.size_in_tags, t0,
+                          pack_pairs(bi, tags))
 
-    return build
+    return finish
+
+
+def cuckoo_partials(df, key_col: str, params: CuckooParams | None = None,
+                    mode: str = "unique_local", hash_fn: str = "metro64",
+                    num_partitions: int | None = None):
+    """The partial frame (``BUILD_ROW``) of a single-filter build: one
+    row per partition carrying raw hashes when ``params`` is None
+    (deferred sizing), else (bucket, tag) pairs for ``params``."""
+    unique = mode != "multiset"
+    finish = (_hash_finisher(unique) if params is None
+              else _pair_finisher(params, unique))
+    return key_partials(df, key_col, hash_fn, mode, finish, BUILD_ROW,
+                        num_partitions)
 
 
 def _choose_num_shards(capacity: int) -> int:
@@ -460,64 +466,30 @@ def _sharded_from_hash_partials(parts, est_keys: int, num_shards: int,
     blobs. Sizing uses the sum of per-partition deduped counts, an upper
     bound on the global distinct count, so shards land at or below the
     target load."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     from cuckoo_filter_spark.operators import sharded as sh
 
     per_shard_cap = max(int(est_keys * headroom / num_shards), 64)
     params = CuckooParams.for_capacity(per_shard_cap, tags_per_bucket,
                                        bits_per_item, table_type)
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for pid, rows_n, blob in zip(pdf["partition_id"], pdf["rows"],
-                                         pdf["blob"]):
-                if not rows_n:
-                    continue
-                h = unpack_hashes(bytes(blob))
-                shards = sh.shard_of(h, num_shards)
-                idx, tag = params.split(h)
-                out_shard, out_n, out_blob = [], [], []
-                for s_id, rs in sh.iter_shard_groups(shards):
-                    bi, tg = idx[rs], tag[rs]
-                    if unique:
-                        bi, tg = canon_dedupe_pairs(params, bi, tg)
-                    out_shard.append(s_id)
-                    out_n.append(len(bi))
-                    out_blob.append(pack_pairs(bi, tg))
-                yield pd.DataFrame(
-                    {"shard": out_shard,
-                     # the partial's partition_id (unique per input row)
-                     # keeps the per-shard combine order deterministic
-                     "src_partition": [int(pid)] * len(out_shard),
-                     "n": out_n, "rows": [int(rows_n)] * len(out_shard),
-                     # per-shard raw-key counts were not computed on this
-                     # path (hash partials lost the raw keys); the exact
-                     # total travels via distinct_total instead
-                     "distinct_keys": pd.array(
-                         [None] * len(out_shard), dtype="Int64"),
-                     "blob": out_blob})
+    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for pid, rows_n, blob in zip(*(c.to_pylist() for c in batch.columns)):
+                if rows_n:
+                    # the partial's partition_id keeps the per-shard
+                    # combine order deterministic; per-shard raw-key
+                    # counts were not computed on this path (hash
+                    # partials lost the raw keys) — the exact total
+                    # travels via distinct_total instead
+                    yield sh.pairs_batch(pid, rows_n, sh.shard_pair_blobs(
+                        params, unpack_hashes(blob), num_shards, unique))
 
-    pairs = parts.select("partition_id", "rows", "blob").mapInPandas(
-        explode, sh.PAIRS_SCHEMA)
-    shards_df = pairs.groupBy("shard").applyInPandas(
-        sh._shard_combiner(params, unique), sh.SHARD_SCHEMA)
-    if output_path is not None:
-        # executors write the blobs; only metrics rows reach the driver
-        shards_df.write.mode("overwrite").parquet(output_path)
-        mrows = parts.sparkSession.read.parquet(output_path).drop(
-            "blob").collect()
-        blobs = {}
-    else:
-        mrows = shards_df.collect()
-        blobs = {int(r["shard"]): bytes(r["blob"]) for r in mrows}
-    metrics = [
-        # SAME key set as the declared-capacity route (sharded.py) so
-        # consumers see one metrics shape on both routes; per-shard
-        # distinct_keys is None here (hash partials lost the raw keys —
-        # the exact TOTAL travels via distinct_keys on the build object)
-        {k: r[k] for k in ("shard", "rows", "stored", "distinct_keys",
-                           "kicks", "victim_used", "load_factor", "wall_ms")}
-        for r in mrows
-    ]
+    pairs = parts.select("partition_id", "rows", "blob").mapInArrow(
+        explode, from_arrow_schema(sh.PAIRS_ROW))
+    blobs, metrics = sh.collect_shards(
+        sh.combine_shards(pairs, params, unique), output_path)
     return sh.ShardedCuckooBuild(
         params=params, num_shards=num_shards, blobs=blobs,
         metrics=metrics, path=output_path, hash_fn=hash_fn,
@@ -532,7 +504,6 @@ def build_cuckoo_filter(
     bits_per_item: int = 16,
     table_type: int = TABLE_SINGLE,
     mode: str = "unique_local",
-    partial_format: str = "sparse",
     num_partitions: int | None = None,
     headroom: float = DEFAULT_HEADROOM,
     params: CuckooParams | None = None,
@@ -542,12 +513,10 @@ def build_cuckoo_filter(
 ) -> CuckooBuild:
     """Build one global cuckoo filter over ``df[key_col]``.
 
-    capacity: expected number of keys. If None with sparse partials
-    (default), sizing is DEFERRED: partials carry raw 64-bit hashes and
-    the table is sized at combine time from the deduped count — one
-    scan total (no count() pass) and tighter tables under duplication.
-    If None with table partials, a column-pruned ``df.count()`` runs
-    first (full-size partial blobs need upfront params).
+    capacity: expected number of keys. If None (and no ``params``),
+    sizing is DEFERRED: partials carry raw 64-bit hashes and the table
+    is sized at combine time from the deduped count — one scan total
+    (no count() pass) and tighter tables under duplication.
 
     mode:
     * ``unique_local`` (default) — set semantics for membership filters:
@@ -579,12 +548,11 @@ def build_cuckoo_filter(
     8 B/key of pair blobs to the driver, a driver OOM at 10^9+ keys.
     ``might_contain_udf`` and the semi/anti joins accept both build
     types, so the routing is transparent to query code. Not applied to
-    explicit ``params`` or ``partial_format='table'``. ``None``
-    disables. ``unique_global`` routes like the rest (the
-    repartition(key) co-location and the shard shuffle compose): the
-    routed build carries the exact distinct count in
-    ``build.distinct_keys``; callers that only need the COUNT should use
-    :func:`count_distinct_exact`, which never emits blobs at all.
+    explicit ``params``. ``None`` disables. ``unique_global`` routes
+    like the rest (the repartition(key) co-location and the shard
+    shuffle compose): the routed build carries the exact distinct count
+    in ``build.distinct_keys``; callers that only need the COUNT should
+    use :func:`count_distinct_exact`, which never emits blobs at all.
 
     shard_output_path: where a ROUTED build's shard blobs are written
     (by the executors; only metrics rows reach the driver). Without it
@@ -594,12 +562,9 @@ def build_cuckoo_filter(
     """
     if mode not in ("unique_local", "unique_global", "multiset"):
         raise ValueError(f"unknown mode {mode!r}")
-    if partial_format not in ("sparse", "table"):
-        raise ValueError(f"unknown partial_format {partial_format!r}")
     if hash_fn not in ("metro64", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    may_route = (auto_shard is not None and params is None
-                 and partial_format == "sparse")
+    may_route = auto_shard is not None and params is None
     if may_route and capacity is not None and capacity > auto_shard:
         from cuckoo_filter_spark.operators.sharded import (
             build_sharded_cuckoo_filter,
@@ -618,47 +583,16 @@ def build_cuckoo_filter(
             tags_per_bucket=tags_per_bucket, bits_per_item=bits_per_item,
             table_type=table_type, mode=mode, headroom=headroom,
             hash_fn=hash_fn, output_path=shard_output_path)
-    inner_hash = hash_fn
-    if hash_fn == "xxhash64":
-        from pyspark.sql import functions as F
-
-        if partial_format != "sparse":
-            raise ValueError("hash_fn='xxhash64' requires partial_format='sparse'")
-        # drop nulls BEFORE hashing: F.xxhash64(NULL) = seed 42 (a
-        # non-null bigint) would store a phantom fingerprint — the
-        # metro64 route's notna() null exclusion must hold here too
-        df = df.where(F.col(key_col).isNotNull()).select(
-            F.xxhash64(key_col).alias(key_col))
-        inner_hash = "__prehashed__"
-    sel = df.select(key_col)
-    # No capacity hint + sparse partials → defer table sizing to combine
-    # time (partials carry raw hashes): avoids a dedicated count() scan.
-    deferred = params is None and capacity is None and partial_format == "sparse"
-    if params is None and not deferred:
-        if capacity is None:
-            capacity = sel.count()  # table partials need upfront params
+    if params is None and capacity is not None:
         params = CuckooParams.for_capacity(
             max(int(capacity * headroom), 64), tags_per_bucket,
             bits_per_item, table_type)  # dispatches vacuum sizing
-
-    if mode == "unique_global":
-        from pyspark.sql import functions as F
-
-        n = num_partitions or sel.sparkSession.sparkContext.defaultParallelism
-        sel = sel.repartition(n, F.col(key_col))
-    elif num_partitions:
-        sel = sel.repartition(num_partitions)
-
+    # No params → defer table sizing to combine time (partials carry raw
+    # hashes): avoids a dedicated count() scan.
+    deferred = params is None
     unique = mode != "multiset"
     count_keys = mode == "unique_global"
-    if deferred:
-        builder = _hash_partial_builder(key_col, unique, inner_hash, count_keys)
-    elif partial_format == "sparse":
-        builder = _sparse_partial_builder(params, key_col, unique, inner_hash,
-                                          count_keys)
-    else:
-        builder = _table_partial_builder(params, key_col, unique, count_keys)
-    parts = sel.mapInPandas(builder, BUILD_SCHEMA)
+    parts = cuckoo_partials(df, key_col, params, mode, hash_fn, num_partitions)
     if deferred and may_route:
         # observe the (partition-deduped) key count from the tiny metric
         # columns BEFORE pulling any blob to the driver; if it crosses
@@ -691,32 +625,22 @@ def build_cuckoo_filter(
                            "kicks", "victim_used", "load_factor", "wall_ms")}
         for r in rows
     ]
-
+    blobs = [bytes(r["blob"]) for r in rows if r["rows"] > 0]
     if deferred:
-        hs = [unpack_hashes(bytes(r["blob"])) for r in rows if r["rows"] > 0]
-        h = np.concatenate(hs) if hs else np.zeros(0, dtype=np.uint64)
+        h = (np.concatenate([unpack_hashes(b) for b in blobs]) if blobs
+             else np.zeros(0, dtype=np.uint64))
         if unique and len(h):
             h = np.unique(h)
         params = CuckooParams.for_capacity(
             max(int(len(h) * headroom), 64), tags_per_bucket,
             bits_per_item, table_type)  # dispatches vacuum sizing
-        merged = CuckooKernel(params)
-        idx, tag = params.split(h)
-        merged.insert_pairs(idx, tag, dedupe=unique)
-        return CuckooBuild(params=params, blob=merged.to_bytes(),
-                           metrics=metrics, hash_fn=hash_fn)
-
-    merged = CuckooKernel(params)
-    if partial_format == "sparse":
-        pairs = [unpack_pairs(bytes(r["blob"])) for r in rows if r["rows"] > 0]
-        if pairs:
-            bi = np.concatenate([p[0] for p in pairs])
-            tags = np.concatenate([p[1] for p in pairs])
-            merged.insert_pairs(bi, tags, dedupe=unique)
+        bi, tags = params.split(h)
     else:
-        kernels = (
-            CuckooKernel.from_bytes(bytes(r["blob"])) for r in rows if r["rows"] > 0
-        )
-        merged = reduce(lambda a, b: a.merge(b, dedupe=unique), kernels, merged)
+        pairs = [unpack_pairs(b) for b in blobs]
+        bi = np.concatenate([p[0] for p in pairs] or [np.zeros(0, np.int64)])
+        tags = np.concatenate([p[1] for p in pairs]
+                              or [np.zeros(0, np.uint32)])
+    merged = CuckooKernel(params)
+    merged.insert_pairs(bi, tags, dedupe=unique)
     return CuckooBuild(params=params, blob=merged.to_bytes(), metrics=metrics,
                        hash_fn=hash_fn)

@@ -2,11 +2,13 @@
 "resumable from checkpoint with per-partition lineage + metrics").
 
 The sharded build is a pure function of (input snapshot, params,
-num_shards): pair emission is deterministic per partition and the
-combine order is sorted by source partition, so a shard blob is
-reproducible bit-for-bit. The checkpointed build therefore persists
-one parquet row per shard keyed by (build_id, shard); resume = compute
-only the shards missing from the checkpoint dir, then union.
+num_shards): pair emission (``sharded.sharded_pairs``, the same
+mapInArrow key partial every cuckoo build runs) is deterministic per
+partition and the combine order is sorted by source partition, so a
+shard blob is reproducible bit-for-bit. The checkpointed build
+therefore persists one parquet row per shard keyed by (build_id,
+shard); resume = compute only the shards missing from the checkpoint
+dir, then union.
 
 Layout: <dir>/shards/part-*.parquet rows (shard, rows, stored, kicks,
 victim_used, load_factor, wall_ms, blob) + <dir>/_build_manifest.json
@@ -19,16 +21,13 @@ import json
 import os
 from dataclasses import asdict
 
-import numpy as np
-
 from cuckoo_filter_spark.operators.sharded import (
-    PAIRS_SCHEMA,
     SHARD_FORMAT_VERSION,
-    SHARD_SCHEMA,
+    SHARD_METRICS,
     ShardedCuckooBuild,
-    _pair_emitter,
-    _shard_combiner,
     check_shard_format,
+    combine_shards,
+    sharded_pairs,
 )
 from cuckoo_filter_spark.params import CuckooParams
 
@@ -111,9 +110,8 @@ def build_checkpointed(
             "use a local (or locally-mounted shared) path")
 
     spark = df.sparkSession
-    sel = df.select(key_col)
     if capacity is None:
-        capacity = sel.count()
+        capacity = df.select(key_col).count()
     per_shard_cap = max(int(capacity * headroom / num_shards), 64)
     params = CuckooParams.for_capacity(
         per_shard_cap, tags_per_bucket, bits_per_item, table_type
@@ -181,41 +179,25 @@ def build_checkpointed(
             done = set()
 
     missing = sorted(set(range(num_shards)) - done)
-    unique = mode != "multiset"
     count_keys = mode == "unique_global"
     if missing:
-        if count_keys:
-            # unique_global's counting contract (same as the declared
-            # sharded route): repartition(key) co-locates duplicates so
-            # the emitter's partition-local raw-key dedupe is globally
-            # exact per shard; per-shard counts persist in the shard
-            # rows, so they stay exact across kill-and-resume. The
-            # hash partitioning is deterministic, so bit-identical
-            # resume is preserved.
-            sel = sel.repartition(
-                spark.sparkContext.defaultParallelism, F.col(key_col))
-        pairs = sel.mapInPandas(
-            _pair_emitter(params, key_col, num_shards, unique,
-                          count_keys=count_keys), PAIRS_SCHEMA
-        )
+        # unique_global keeps its counting contract (same as the
+        # declared sharded route): sharded_pairs repartitions by key so
+        # the partition-local raw-key dedupe is globally exact per
+        # shard; per-shard counts persist in the shard rows, so they
+        # stay exact across kill-and-resume. The hash partitioning is
+        # deterministic, so bit-identical resume is preserved.
+        pairs = sharded_pairs(df, key_col, params, num_shards, mode)
         # partition pruning of finished shards before the shuffle
         pairs = pairs.where(F.col("shard").isin([int(m) for m in missing]))
-        shards = pairs.groupBy("shard").applyInPandas(
-            _shard_combiner(params, unique), SHARD_SCHEMA
-        )
-        shards.write.mode("append").parquet(sdir)
+        combine_shards(pairs, params, mode != "multiset").write.mode(
+            "append").parquet(sdir)
 
     sdf = spark.read.parquet(sdir)
     check_shard_format(sdf, "build_sharded_with_checkpoint")
     rows = sdf.drop("blob").collect()
-    metrics = [
-        # SAME key set as the declared/deferred sharded routes (shape
-        # parity): distinct_keys is exact per shard under unique_global,
-        # None otherwise
-        {k: r[k] for k in ("shard", "rows", "stored", "distinct_keys",
-                           "kicks", "victim_used", "load_factor", "wall_ms")}
-        for r in rows
-    ]
+    # distinct_keys is exact per shard under unique_global, else None
+    metrics = [{k: r[k] for k in SHARD_METRICS} for r in rows]
     dk_total = (sum(m["distinct_keys"] or 0 for m in metrics)
                 if count_keys else None)
     return ShardedCuckooBuild(

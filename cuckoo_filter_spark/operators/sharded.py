@@ -11,11 +11,13 @@ sharded build keeps everything distributed:
   uniform at ANY shard count × table size (top-of-the-same-word shard
   bits would collide with index bits once log2(S)+log2(nb) > 32 and
   strand most buckets — ADVICE r3).
-* build: mapInPandas fingerprints each scan partition and emits one
-  packed (bucket, tag) pair blob per (partition, shard); a single
+* build: the one cuckoo key partial (``build.key_partials``, mapInArrow)
+  fingerprints each scan partition and emits one packed (bucket, tag)
+  pair blob per (partition, shard) (:func:`sharded_pairs`); a single
   shuffle groups pair blobs by shard; applyInPandas runs the kick-loop
-  combine per shard in parallel → one filter blob row per shard.
-  Shuffle volume is 8 bytes/key regardless of table size.
+  combine per shard in parallel → one filter blob row per shard
+  (:func:`combine_shards`). Shuffle volume is 8 bytes/key regardless of
+  table size.
 * query: with a modest shard count the blobs are collected + broadcast
   and probes route by shard inside the UDF; at full scale use
   ``sharded_might_contain_join`` which co-partitions the probe side with
@@ -31,10 +33,10 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from cuckoo_filter_spark.hashing import metro64_batch
@@ -42,13 +44,19 @@ from cuckoo_filter_spark.kernel.filter import CuckooKernel, CuckooProbe
 from cuckoo_filter_spark.operators.build import (
     DEFAULT_HEADROOM,
     canon_dedupe_pairs,
+    key_column,
+    key_partials,
     pack_pairs,
     unpack_pairs,
 )
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
-PAIRS_SCHEMA = ("shard int, src_partition int, n bigint, rows bigint, "
-                "distinct_keys bigint, blob binary")
+#: one row per (source partition, shard) of the pair-blob frame
+PAIRS_ROW = pa.schema([
+    ("shard", pa.int32()), ("src_partition", pa.int32()), ("n", pa.int64()),
+    ("rows", pa.int64()), ("distinct_keys", pa.int64()),
+    ("blob", pa.binary()),
+])
 
 # Persisted-shard format version (ADVICE r4): bump whenever a code
 # change alters probe semantics for ALREADY-PERSISTED shard artifacts.
@@ -88,8 +96,7 @@ def check_shard_format(shards_df, where: str) -> None:
 def iter_shard_groups(shards: np.ndarray):
     """Group row indices by shard id (stable within a shard): yields
     (shard, row_indices). One stable integer argsort + boundary scan —
-    the shared grouping used by the pair emitter, the probe router and
-    the deferred-route explode."""
+    the shared grouping used by the shard split and the probe router."""
     order = np.argsort(shards, kind="stable")
     ss = shards[order]
     bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
@@ -208,64 +215,63 @@ def _probe_sharded(
     return out
 
 
-def _pair_emitter(params: CuckooParams, key_col: str, num_shards: int, unique: bool,
-                  hash_fn: str = "metro64", count_keys: bool = False):
-    nb, f = params.num_buckets, params.bits_per_item
+def shard_pair_blobs(params: CuckooParams, h: np.ndarray, num_shards: int,
+                     unique: bool) -> list[tuple[int, int, bytes]]:
+    """One partition's hashes split by shard into packed (bucket, tag)
+    pair blobs: ``[(shard, pairs, blob)]`` in shard order, rows in scan
+    order within a shard, canon-deduped per shard in unique modes. THE
+    shard split of the sharded, checkpointed and auto-shard routes."""
+    if len(h) == 0:
+        return []
+    idx, tag = params.split(h)
+    out = []
+    for s, rs in iter_shard_groups(shard_of(h, num_shards)):
+        bi, tg = idx[rs], tag[rs]
+        if unique:
+            bi, tg = canon_dedupe_pairs(params, bi, tg)
+        out.append((s, len(bi), pack_pairs(bi, tg)))
+    return out
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
 
-        from cuckoo_filter_spark.operators.build import DistinctAccum, hashes_of
+def pairs_batch(pid: int, rows: int, groups: list[tuple[int, int, bytes]],
+                dk_by_shard: dict[int, int] | None = None) -> pa.RecordBatch:
+    """``PAIRS_ROW`` rows of one source partition: its
+    ``shard_pair_blobs`` groups, its non-null row count, and per-shard
+    raw-key counts when they were computed (else NULL)."""
+    dk = dk_by_shard or {}
+    return pa.RecordBatch.from_pylist(
+        [{"shard": s, "src_partition": pid, "n": n, "rows": rows,
+          "distinct_keys": dk.get(s), "blob": blob}
+         for s, n, blob in groups], schema=PAIRS_ROW)
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        per_shard_bi: dict[int, list] = {}
-        per_shard_tg: dict[int, list] = {}
-        # count_keys (unique_global): dedupe RAW (shard, key) pairs —
-        # under repartition(key) co-location the per-shard sums across
-        # partitions are the exact global per-shard distinct counts
-        # (COUNT(DISTINCT) null semantics: null keys excluded)
-        seen: DistinctAccum | None = (
-            DistinctAccum(dropna=False) if count_keys else None)
-        rows = 0
-        for pdf in batches:
-            # NULL keys EXCLUDED up front (library convention): aliasing
-            # with '' / numeric crash; per-shard distinct counts already
-            # excluded them downstream
-            keys = pdf[key_col].dropna()
-            if len(keys) == 0:
-                continue
-            rows += len(keys)
-            h = hashes_of(keys, hash_fn)
-            shards = shard_of(h, num_shards)
-            if seen is not None:
-                seen.add(pd.DataFrame(
-                    {"__shard": shards, key_col: keys.to_numpy()}))
-            idx, tag = params.split(h)
-            for s, rs in iter_shard_groups(shards):
-                per_shard_bi.setdefault(s, []).append(idx[rs])
-                per_shard_tg.setdefault(s, []).append(tag[rs])
-        dk_by_shard: dict[int, int] = {}
+
+def _shard_finisher(params: CuckooParams, num_shards: int, unique: bool):
+    """``build.key_partials`` finisher of the sharded builds. Under
+    unique_global the raw-key accumulator's distinct keys are grouped
+    by shard: with repartition(key) co-location the per-shard sums
+    across partitions are the exact global per-shard distinct counts
+    (COUNT(DISTINCT) null semantics: null keys excluded)."""
+
+    def finish(pid, rows, h, seen, t0):
+        dk_by_shard = None
         if seen is not None and len(seen):
-            sizes = seen.consolidated().groupby("__shard", sort=False).size()
-            dk_by_shard = {int(s): int(c) for s, c in sizes.items()}
-        out_shard, out_n, out_dk, out_blob = [], [], [], []
-        for s in sorted(per_shard_bi):
-            bi = np.concatenate(per_shard_bi[s])
-            tg = np.concatenate(per_shard_tg[s])
-            if unique:
-                bi, tg = canon_dedupe_pairs(params, bi, tg)
-            out_shard.append(s)
-            out_n.append(len(bi))
-            out_dk.append(dk_by_shard.get(s) if count_keys else None)
-            out_blob.append(pack_pairs(bi, tg))
-        yield pd.DataFrame(
-            {"shard": out_shard, "src_partition": [pid] * len(out_shard),
-             "n": out_n, "rows": [rows] * len(out_shard),
-             "distinct_keys": pd.array(out_dk, dtype="Int64"),
-             "blob": out_blob}
-        )
+            hs = seen.consolidated()["h"].to_numpy(dtype=np.uint64)
+            s, c = np.unique(shard_of(hs, num_shards), return_counts=True)
+            dk_by_shard = dict(zip(s.tolist(), c.tolist()))
+        return pairs_batch(pid, rows,
+                           shard_pair_blobs(params, h, num_shards, unique),
+                           dk_by_shard)
 
-    return emit
+    return finish
+
+
+def sharded_pairs(df, key_col: str, params: CuckooParams, num_shards: int,
+                  mode: str = "unique_local", hash_fn: str = "metro64"):
+    """The pair-blob frame (``PAIRS_ROW``) of a sharded build: the one
+    cuckoo key partial, emitting one pair blob per (partition, shard)."""
+    return key_partials(
+        df, key_col, hash_fn, mode,
+        _shard_finisher(params, num_shards, mode != "multiset"), PAIRS_ROW)
 
 
 def _shard_combiner(params: CuckooParams, unique: bool):
@@ -303,6 +309,37 @@ def _shard_combiner(params: CuckooParams, unique: bool):
     return combine
 
 
+def combine_shards(pairs: DataFrame, params: CuckooParams,
+                   unique: bool) -> DataFrame:
+    """Pair-blob frame → one filter blob row per shard (``SHARD_SCHEMA``):
+    ONE shuffle by shard, then the kick-loop combine per shard in
+    applyInPandas."""
+    return pairs.groupBy("shard").applyInPandas(
+        _shard_combiner(params, unique), SHARD_SCHEMA)
+
+
+#: the metrics keys of every sharded route (declared, auto-shard,
+#: checkpointed) — one metrics shape on all of them
+SHARD_METRICS = ("shard", "rows", "stored", "distinct_keys", "kicks",
+                 "victim_used", "load_factor", "wall_ms")
+
+
+def collect_shards(shards: DataFrame, output_path: str | None):
+    """(blobs, metrics) of a shard frame. With ``output_path`` the
+    executors write the blob rows to parquet and only the metrics
+    columns reach the driver (blobs stay {}); otherwise every row is
+    collected."""
+    if output_path is not None:
+        shards.write.mode("overwrite").parquet(output_path)
+        mrows = shards.sparkSession.read.parquet(output_path).drop(
+            "blob").collect()
+        blobs = {}
+    else:
+        mrows = shards.collect()
+        blobs = {int(r["shard"]): bytes(r["blob"]) for r in mrows}
+    return blobs, [{k: r[k] for k in SHARD_METRICS} for r in mrows]
+
+
 def build_sharded_cuckoo_filter(
     df,
     key_col: str,
@@ -325,11 +362,14 @@ def build_sharded_cuckoo_filter(
     blobs are collected into the returned object (test/interactive).
 
     mode='unique_global' adds ONE extra shuffle — repartition(key) — so
-    duplicate keys co-locate and the emitter's partition-local raw-key
+    duplicate keys co-locate and the partial's partition-local raw-key
     dedupe yields exact per-shard distinct counts (metrics rows gain a
     ``distinct_keys`` column; the build's ``distinct_keys`` attribute is
     their sum). The filter bytes are identical to unique_local (both
     dedupe fingerprints); only the counting differs.
+
+    hash_fn='xxhash64' hashes JVM-side (``build.key_column``): only
+    8-byte hashes cross the Arrow bridge instead of the key bytes.
 
     table_type=TABLE_VACUUM composes with sharding (~25-45% smaller
     shards): the shard id comes from an independent re-hash of the key
@@ -343,53 +383,17 @@ def build_sharded_cuckoo_filter(
     test_sharded_vacuum_*)."""
     if num_shards & (num_shards - 1) or num_shards <= 0:
         raise ValueError("num_shards must be a power of two")
-    inner_hash = hash_fn
-    if hash_fn == "xxhash64":
-        # JVM-side hashing (whole-stage codegen): only 8-byte hashes cross
-        # the Arrow bridge instead of the key bytes. Nulls are dropped
-        # BEFORE hashing — F.xxhash64(NULL) returns the seed (42), a
-        # non-null bigint that would slip past the emitter's notna()
-        # filter and both inflate distinct_keys and store a phantom
-        # fingerprint (the metro64 route's COUNT(DISTINCT) null
-        # exclusion must hold on both routes)
-        df = df.where(F.col(key_col).isNotNull()).select(
-            F.xxhash64(key_col).alias(key_col))
-        inner_hash = "__prehashed__"
-    elif hash_fn != "metro64":
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sel = df.select(key_col)
     if capacity is None:
-        capacity = sel.count()
+        capacity = key_column(df, key_col, hash_fn).count()
     per_shard_cap = max(int(capacity * headroom / num_shards), 64)
     params = CuckooParams.for_capacity(
         per_shard_cap, tags_per_bucket, bits_per_item, table_type
     )
-
-    unique = mode != "multiset"
-    count_keys = mode == "unique_global"
-    if count_keys:
-        n = df.sparkSession.sparkContext.defaultParallelism
-        sel = sel.repartition(n, F.col(key_col))
-    pairs = sel.mapInPandas(
-        _pair_emitter(params, key_col, num_shards, unique, inner_hash,
-                      count_keys=count_keys), PAIRS_SCHEMA
-    )
-    shards = pairs.groupBy("shard").applyInPandas(_shard_combiner(params, unique), SHARD_SCHEMA)
-
-    if output_path is not None:
-        shards.write.mode("overwrite").parquet(output_path)
-        mrows = df.sparkSession.read.parquet(output_path).drop("blob").collect()
-        blobs = {}
-    else:
-        mrows = shards.collect()
-        blobs = {int(r["shard"]): bytes(r["blob"]) for r in mrows}
-    metrics = [
-        {k: r[k] for k in ("shard", "rows", "stored", "distinct_keys",
-                           "kicks", "victim_used", "load_factor", "wall_ms")}
-        for r in mrows
-    ]
+    pairs = sharded_pairs(df, key_col, params, num_shards, mode, hash_fn)
+    blobs, metrics = collect_shards(
+        combine_shards(pairs, params, mode != "multiset"), output_path)
     dk_total = (sum(m["distinct_keys"] or 0 for m in metrics)
-                if count_keys else None)
+                if mode == "unique_global" else None)
     return ShardedCuckooBuild(
         params=params, num_shards=num_shards, blobs=blobs, metrics=metrics,
         path=output_path, hash_fn=hash_fn, distinct_keys=dk_total,
@@ -401,6 +405,27 @@ def load_sharded_blobs(spark, path: str) -> dict[int, bytes]:
     check_shard_format(sdf, "load_sharded_blobs")
     rows = sdf.select("shard", "blob").collect()
     return {int(r["shard"]): bytes(r["blob"]) for r in rows}
+
+
+def _shard_udf(num_shards: int):
+    """pandas UDF ``shard_udf``: each metro64 key's shard id, for the
+    cogroup probe and delete. NULL keys route to shard 0 (any shard
+    works: the probe answers False and the delete is a no-op for them)
+    instead of crashing the hash; integral dtype is restored for
+    null-bearing batches."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("int")
+    def shard_udf(keys: pd.Series) -> pd.Series:
+        from cuckoo_filter_spark.hashing import key_mask_and_values
+
+        nn, notna = key_mask_and_values(keys)
+        out = np.zeros(len(notna), dtype=np.int32)
+        if len(nn):
+            out[notna] = shard_of(metro64_batch(nn), num_shards)
+        return pd.Series(out)
+
+    return shard_udf
 
 
 def sharded_might_contain_join(
@@ -450,22 +475,8 @@ def sharded_might_contain_join(
         probe_sh = withsh.withColumn(
             "__shard", _shard_expr_jvm(F.col("__h"), num_shards))
     else:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("int")
-        def shard_udf(keys: pd.Series) -> pd.Series:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
-            # NULL keys route to shard 0 (any shard works: the probe
-            # itself answers False for them) instead of crashing the
-            # hash; integral dtype restored for null-bearing batches
-            nn, notna = key_mask_and_values(keys)
-            out = np.zeros(len(notna), dtype=np.int32)
-            if len(nn):
-                out[notna] = shard_of(metro64_batch(nn), num_shards)
-            return pd.Series(out)
-
-        probe_sh = probe.withColumn("__shard", shard_udf(F.col(key_col)))
+        probe_sh = probe.withColumn(
+            "__shard", _shard_udf(num_shards)(F.col(key_col)))
 
     def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0:
@@ -563,23 +574,8 @@ def sharded_delete(
         keyed = keys_df.select(F.xxhash64(F.col(key_col)).alias("__h"))
         keyed = keyed.withColumn("__shard", _shard_expr_jvm(F.col("__h"), num_shards))
     else:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("int")
-        def shard_udf(keys: pd.Series) -> pd.Series:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
-            # NULL keys route to shard 0 (any shard works: the probe
-            # itself answers False for them) instead of crashing the
-            # hash; integral dtype restored for null-bearing batches
-            nn, notna = key_mask_and_values(keys)
-            out = np.zeros(len(notna), dtype=np.int32)
-            if len(nn):
-                out[notna] = shard_of(metro64_batch(nn), num_shards)
-            return pd.Series(out)
-
         keyed = keys_df.select(F.col(key_col)).withColumn(
-            "__shard", shard_udf(F.col(key_col)))
+            "__shard", _shard_udf(num_shards)(F.col(key_col)))
 
     def delete_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(right) == 0:

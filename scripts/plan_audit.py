@@ -517,6 +517,46 @@ def main() -> None:
                      "applyInPandas merge groups, no broadcast, pruned "
                      "scan", ok, p))
 
+    # 24. cuckoo build partials: every build route runs the ONE Arrow
+    # key partial (build.key_partials) — MapInArrow on the pruned scan,
+    # no pandas. unique_local adds zero Exchange; unique_global exactly
+    # one hashpartitioning Exchange (repartition by key) below the
+    # partial; the sharded build exactly one Exchange, by shard, above
+    # it, into the applyInPandas per-shard combine
+    from cuckoo_filter_spark.operators.build import cuckoo_partials
+    from cuckoo_filter_spark.operators.sharded import (
+        combine_shards,
+        sharded_pairs,
+    )
+    from cuckoo_filter_spark.params import CuckooParams
+
+    ck_params = CuckooParams.for_capacity(70_000)
+    p_local = plan_of(cuckoo_partials(li, "l_orderkey", ck_params))
+    p_global = plan_of(cuckoo_partials(li, "l_orderkey",
+                                       mode="unique_global"))
+    p_shard = plan_of(combine_shards(
+        sharded_pairs(li, "l_orderkey", ck_params, 8), ck_params, True))
+
+    def exchanges(plan: str) -> list:
+        return re.findall(r"\(\d+\) Exchange", plan)
+
+    ok = (
+        all("MapInArrow" in q and "MapInPandas" not in q
+            and read_schema_cols(q) == ["l_orderkey"]
+            for q in (p_local, p_global, p_shard))
+        and not exchanges(p_local)
+        and len(exchanges(p_global)) == 1
+        and "hashpartitioning(l_orderkey" in p_global
+        and len(exchanges(p_shard)) == 1
+        and "hashpartitioning(shard" in p_shard
+        and "FlatMapGroupsInPandas" in p_shard
+    )
+    sections.append(("cuckoo build partials: MapInArrow on the pruned "
+                     "scan; zero Exchange (unique_local), one key Exchange "
+                     "(unique_global), one shard Exchange (sharded)", ok,
+                     p_local + "\n--- unique_global ---\n" + p_global
+                     + "\n--- sharded ---\n" + p_shard))
+
     out = ["# PLANS — physical plan audit (sf0.01, AQE on)\n"]
     for name, ok, p in sections:
         note = NOTES.get(name.split(":")[0])

@@ -1,7 +1,5 @@
 """hash_fn='xxhash64' fast path: JVM-side hashing, consistent probes."""
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from cuckoo_filter_spark.operators.build import build_cuckoo_filter
@@ -32,10 +30,3 @@ def test_xxhash_semi_join_exact(spark):
     want = li.join(orders.select("o_orderkey"),
                    li["l_orderkey"] == orders["o_orderkey"], "left_semi").count()
     assert got == want
-
-
-def test_xxhash_rejects_table_format(spark):
-    df = spark.createDataFrame([("a",)], "k string")
-    with pytest.raises(ValueError, match="sparse"):
-        build_cuckoo_filter(df, "k", capacity=10, hash_fn="xxhash64",
-                            partial_format="table")

@@ -1,12 +1,12 @@
 """The Arrow-batch sketch partial (``sketches.base.sketch_partials``):
 key identity across the Arrow and pandas paths, and one metro64 pass
-per keys column per batch, however many sketches read that column."""
+per keys column per batch, however many sketches read that column.
+The ``typed_df`` fixture lives in conftest.py."""
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from cuckoo_filter_spark.hashing import canon_int_keys
 from cuckoo_filter_spark.sketches import (
@@ -19,37 +19,6 @@ from cuckoo_filter_spark.sketches import (
 
 KEY_COLS = ("s", "b", "i32", "i64", "i64n", "d")
 NUMERIC_COLS = ("d", "i32", "i64", "dec")
-
-
-@pytest.fixture(params=["true", "false"], ids=["large_var", "var"])
-def typed_df(spark, request):
-    """Three partitions of 3000 rows in 250-row Arrow batches, under
-    both settings of ``useLargeVarTypes``. ``i64n`` holds NULLs in every
-    other batch only (pandas renders those batches float64), with
-    values up to 2^52 + 39000 ≤ 2^53."""
-    conf = {"spark.sql.execution.arrow.useLargeVarTypes": request.param,
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "250"}
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    idc = F.col("id")
-    df = spark.range(0, 3000, 1, 3).select(
-        F.concat(F.lit("k"), idc).alias("s"),
-        F.concat(F.lit("b"), idc).cast("binary").alias("b"),
-        (idc * 7 - 5000).cast("int").alias("i32"),
-        (idc * 1_000_003 - F.lit(2**40)).alias("i64"),
-        F.when((F.floor(idc / 250) % 2 == 0) | (idc % 5 != 0),
-               idc * 13 + F.lit(2**52)).alias("i64n"),
-        (idc * 3).cast("double").alias("d"),
-        (idc / 8).cast("decimal(12,3)").alias("dec"),
-        (idc / 7).alias("x"),
-    )
-    yield df
-    for k, v in old.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 
 def test_build_sketch_matches_driver_pandas_update(typed_df):

@@ -190,17 +190,21 @@ def test_count_distinct_exact_no_blob_collect(spark, monkeypatch):
 
 
 def test_auto_shard_respects_exclusions(spark):
-    """explicit params / table partials never route."""
+    """explicit params never route, whatever the key count."""
     from pyspark.sql import functions as F
 
     from cuckoo_filter_spark.operators.build import build_cuckoo_filter
     from cuckoo_filter_spark.operators.sharded import ShardedCuckooBuild
+    from cuckoo_filter_spark.params import CuckooParams
 
     df = spark.range(12_000).select(
         F.concat(F.lit("x"), F.col("id")).alias("key"))
-    b = build_cuckoo_filter(df, "key", capacity=12_000,
-                            partial_format="table", auto_shard=5_000)
-    assert not isinstance(b, ShardedCuckooBuild)
+    params = CuckooParams.for_capacity(14_000)
+    for capacity in (None, 12_000):
+        b = build_cuckoo_filter(df, "key", capacity=capacity, params=params,
+                                auto_shard=5_000)
+        assert not isinstance(b, ShardedCuckooBuild)
+        assert b.params == params and b.kernel().size() == 12_000
 
 
 def test_auto_shard_unique_global_routes(spark):
