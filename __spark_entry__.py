@@ -431,7 +431,8 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange by user_id + one in-task external sort serves the lag, the
     running sum, and the session aggregate — sessions never cross keys,
     so no second shuffle; a pathologically hot user serializes into one
-    spillable task (detect via salting.detect_hot_keys upstream)."""
+    spillable task (find such users upstream with a single-pass
+    Misra-Gries sketch, sketches.freq.build_mg_sketches)."""
     from cuckoo_filter_spark.operators.temporal import session_stats
 
     ev = _t(spark, sf_dir, "events")
@@ -1142,8 +1143,9 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     cms, _ = build_sketch(ev, "event_type", lambda: CountMinSketch(width=1 << 14, depth=4))
     # distinct().collect() is safe ONLY because event_type is a tiny enum
-    # column; for high-cardinality keys use
-    # operators.salting.detect_hot_keys (single-pass, no key-set collect)
+    # column; for high-cardinality keys use the Misra-Gries heavy
+    # hitters of sketches.freq.build_mg_sketches (single pass, no
+    # key-set collect)
     types = [r["event_type"] for r in ev.select("event_type").distinct().collect()]
     import pandas as pd
 

@@ -1,12 +1,12 @@
 #!/usr/bin/env python
 """Extra benchmarks for the optimization round (bench.py is FROZEN for
-measurement — this file carries the guide-§1 instrumentation: per-query
-repeats, .explain("formatted") capture, and noop-sink isolation).
+measurement — this file carries per-query repeats and
+.explain("formatted") capture; layer-by-layer timing lives in
+perfbench/run.py --trace 1).
 
 Usage:
   python bench_extra.py queries [name ...]   # time queries (best/median of R)
   python bench_extra.py plans TAG [name ...] # write plans/r07/<q>_TAG.txt
-  python bench_extra.py probe                # micro-isolations of hot queries
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_EXTRA_REPEATS.
 """
@@ -85,155 +85,11 @@ def write_plans(tag, names):
     spark.stop()
 
 
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def probe():
-    """Micro-isolations: where do the hot queries spend their time?"""
-    from pyspark.sql import functions as F
-
-    spark = make_spark()
-    warm(spark)
-    import __spark_entry__ as em
-
-    def t(label, fn):
-        t0 = time.perf_counter()
-        r = fn()
-        dt = time.perf_counter() - t0
-        print(f"  {label}: {dt:.3f}s", flush=True)
-        return r
-
-    docs = em._t(spark, SF_DIR, "documents")
-    li = em._t(spark, SF_DIR, "lineitem")
-    orders = em._t(spark, SF_DIR, "orders")
-
-    print("decontaminate pieces:")
-    from cuckoo_filter_spark.operators.decontam import benchmark_ngrams
-    bench_side = docs.where(F.col("doc_id") % 10 == 5)
-    train = docs.where(F.col("doc_id") % 10 != 5)
-    bgrams = benchmark_ngrams(bench_side, "text", 8)
-    t("bgrams distinct (noop)", lambda: _noop(bgrams))
-    from cuckoo_filter_spark.operators.build import build_cuckoo_filter
-    build = t("filter build over bgrams", lambda: build_cuckoo_filter(bgrams, "gram"))
-    from cuckoo_filter_spark.operators.query import might_contain_udf
-    from cuckoo_filter_spark.functions.text import word_ngrams_expr
-    mc = might_contain_udf(spark, build)
-    tgrams = train.select(
-        "doc_id",
-        F.explode(F.array_distinct(word_ngrams_expr("text", 8))).alias("gram"))
-    t("train explode only (noop)", lambda: _noop(tgrams))
-    t("train explode+probe (noop)", lambda: _noop(tgrams.where(mc(F.col("gram")))))
-
-    print("repeated_spans pieces:")
-    from cuckoo_filter_spark.operators.spans import token_windows_expr
-    tx = F.when(F.col("doc_id") % 7 == 3,
-                F.concat(F.col("text"), F.lit(" planted tail"))).otherwise(
-        F.col("text"))
-    base = docs.select("doc_id", tx.alias("tx"))
-    exploded = base.select(
-        "doc_id", F.explode(token_windows_expr("tx", 10)).alias("gram"))
-    t("window explode only (noop)", lambda: _noop(exploded))
-    t("window explode+md5 (noop)", lambda: _noop(
-        exploded.select("doc_id", F.unhex(F.md5("gram")).alias("fp"))))
-
-    print("probe-side hashing (cuckoo_semi_join shape):")
-    hi = orders.where(F.col("o_totalprice") > 300000)
-    b2 = t("build over hi orders", lambda: build_cuckoo_filter(hi, "o_orderkey"))
-    mc2 = might_contain_udf(spark, b2)
-    t("li probe metro64 (noop)", lambda: _noop(li.where(mc2(F.col("l_orderkey")))))
-    t("li scan only (noop)", lambda: _noop(li.select("l_orderkey")))
-
-    print("minhash sig pass:")
-    batch = em._planted_batch(spark, SF_DIR)
-    from cuckoo_filter_spark.operators.dedup import add_minhash_signatures
-    t("minhash sigs (noop)", lambda: _noop(
-        add_minhash_signatures(batch.where(F.octet_length("text") >= 5),
-                               "text", "doc_id")))
-
-    print("url_canonical projection:")
-    q = em.q_url_canonical_dedup(spark, SF_DIR)
-    t("full query", lambda: q.collect())
-
-    spark.stop()
-
-
-def probe2():
-    from pyspark.sql import functions as F
-
-    spark = make_spark()
-    warm(spark)
-    import __spark_entry__ as em
-
-    def t(label, fn):
-        t0 = time.perf_counter()
-        fn()
-        print(f"  {label}: {time.perf_counter() - t0:.3f}s", flush=True)
-
-    print("hll_rollup pieces:")
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = em._t(spark, SF_DIR, "events").select(
-        "event_type",
-        F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd").alias("day"),
-        "user_id")
-    from cuckoo_filter_spark.sketches.rollup import hll_rollup
-    t("est side (3 levels + ckpts)", lambda: _noop(
-        hll_rollup(ev, ["event_type", "day"], "user_id", p=14)))
-    t("exact rollup side", lambda: _noop(
-        ev.rollup("event_type", "day").agg(
-            F.countDistinct("user_id").alias("n_exact"))))
-    t("full query", lambda: em.q_hll_rollup(spark, SF_DIR).collect())
-    spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-    print("near_dup_pairs pieces:")
-    batch = em._planted_batch(spark, SF_DIR, materialize=True)
-    from cuckoo_filter_spark.operators.dedup import (
-        minhash_near_dup_pairs, simhash_near_dup_pairs)
-    t("minhash pairs", lambda: _noop(
-        minhash_near_dup_pairs(batch, "text", "doc_id", threshold=0.95)))
-    t("simhash pairs", lambda: _noop(
-        simhash_near_dup_pairs(batch, "text", "doc_id", max_hamming=3)))
-    t("full query", lambda: em.q_near_dup_pairs(spark, SF_DIR).collect())
-
-    print("blocklist pieces:")
-    o = em._t(spark, SF_DIR, "orders").select("o_orderkey")
-    k = F.col("o_orderkey")
-    url = F.concat(F.lit("https://shop"), (k % 10).cast("string"),
-                   F.lit(".example.com/item/"), k.cast("string"))
-    urls = o.select((k % 6).cast("int").alias("branch"), url.alias("url"))
-    from cuckoo_filter_spark.operators.policy import blocklist_filter
-    t("urls total agg", lambda: _noop(
-        urls.groupBy("branch").agg(F.count(F.lit(1)).alias("n"))))
-    t("blocklist filter+agg", lambda: _noop(
-        blocklist_filter(urls, "url", ["shop7.example.com", "tracker.net"])
-        .groupBy("branch").agg(F.count(F.lit(1)).alias("n"))))
-    t("full query", lambda: em.q_blocklist_filter(spark, SF_DIR).collect())
-
-    print("cuckoo_semi_join pieces:")
-    from cuckoo_filter_spark.operators.build import build_cuckoo_filter
-    from cuckoo_filter_spark.params import TABLE_VACUUM
-    hi1 = em._t(spark, SF_DIR, "orders").where(F.col("o_totalprice") > 300000)
-    hi2 = em._t(spark, SF_DIR, "orders").where(F.col("o_totalprice") > 200000)
-    t("build single (deferred)", lambda: build_cuckoo_filter(hi1, "o_orderkey"))
-    t("build vacuum", lambda: build_cuckoo_filter(
-        hi2, "o_orderkey", table_type=TABLE_VACUUM))
-    t("full query", lambda: em.q_cuckoo_semi_join(spark, SF_DIR).collect())
-
-    print("streaming_window_counts (stateful-agg floor):")
-    t("full query", lambda: em.q_streaming_window_counts(spark, SF_DIR).collect())
-    spark.stop()
-
-
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
         run_queries(sys.argv[2:])
     elif mode == "plans":
         write_plans(sys.argv[2], sys.argv[3:])
-    elif mode == "probe":
-        probe()
-    elif mode == "probe2":
-        probe2()
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -67,6 +67,5 @@ def canonical_url(url) -> Column:
 
 def host_of(url) -> Column:
     """Lowercased registrable host of a URL (null when unparseable) —
-    the partition/skew key for per-host crawl budgeting and the
-    ``detect_hot_keys`` + salting pattern (operators/salting.py)."""
+    the partition/skew key for per-host crawl budgeting."""
     return F.lower(F.try_parse_url(_col(url), F.lit("HOST")))

@@ -258,6 +258,13 @@ def count_distinct_exact(
     return int(row["n"] or 0)
 
 
+def check_mode(mode: str) -> None:
+    """Reject an unknown build ``mode`` before any Spark job runs: an
+    unchecked typo would silently build a unique_local filter."""
+    if mode not in ("unique_local", "unique_global", "multiset"):
+        raise ValueError(f"unknown mode {mode!r}")
+
+
 def canon_dedupe_pairs(params: CuckooParams, bi: np.ndarray,
                        tags: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Keep the first occurrence per canonical (bucket-pair, tag) —
@@ -483,8 +490,16 @@ def _sharded_from_hash_partials(parts, est_keys: int, num_shards: int,
                     # counts were not computed on this path (hash
                     # partials lost the raw keys) — the exact total
                     # travels via distinct_total instead
-                    yield sh.pairs_batch(pid, rows_n, sh.shard_pair_blobs(
-                        params, unpack_hashes(blob), num_shards, unique))
+                    h = unpack_hashes(blob)
+                    groups = sh.shard_pair_blobs(params, h, num_shards,
+                                                 unique)
+                    # unique-mode hash partials already folded same-key
+                    # copies (np.unique): credit them to the first shard
+                    # row so the shard rows still sum to the non-null
+                    # row count
+                    s, r, n, pairs = groups[0]
+                    groups[0] = (s, r + rows_n - len(h), n, pairs)
+                    yield sh.pairs_batch(pid, groups)
 
     pairs = parts.select("partition_id", "rows", "blob").mapInArrow(
         explode, from_arrow_schema(sh.PAIRS_ROW))
@@ -560,8 +575,7 @@ def build_cuckoo_filter(
     f=16) — fine to ~10^9 keys, warned about beyond. Ignored when the
     build does not route.
     """
-    if mode not in ("unique_local", "unique_global", "multiset"):
-        raise ValueError(f"unknown mode {mode!r}")
+    check_mode(mode)
     if hash_fn not in ("metro64", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     may_route = auto_shard is not None and params is None

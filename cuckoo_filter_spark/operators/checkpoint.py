@@ -21,6 +21,7 @@ import json
 import os
 from dataclasses import asdict
 
+from cuckoo_filter_spark.operators.build import check_mode
 from cuckoo_filter_spark.operators.sharded import (
     SHARD_FORMAT_VERSION,
     SHARD_METRICS,
@@ -97,6 +98,7 @@ def build_checkpointed(
     returned build carries their sum in ``distinct_keys``."""
     from pyspark.sql import functions as F
 
+    check_mode(mode)
     # the manifest + done-shard detection are LOCAL-filesystem (os.*)
     # while Spark would happily write shards to a remote URI — every
     # resume would then see an empty local dir, recompute ALL shards and

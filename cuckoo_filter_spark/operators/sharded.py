@@ -44,6 +44,7 @@ from cuckoo_filter_spark.kernel.filter import CuckooKernel, CuckooProbe
 from cuckoo_filter_spark.operators.build import (
     DEFAULT_HEADROOM,
     canon_dedupe_pairs,
+    check_mode,
     key_column,
     key_partials,
     pack_pairs,
@@ -216,11 +217,13 @@ def _probe_sharded(
 
 
 def shard_pair_blobs(params: CuckooParams, h: np.ndarray, num_shards: int,
-                     unique: bool) -> list[tuple[int, int, bytes]]:
+                     unique: bool) -> list[tuple[int, int, int, bytes]]:
     """One partition's hashes split by shard into packed (bucket, tag)
-    pair blobs: ``[(shard, pairs, blob)]`` in shard order, rows in scan
-    order within a shard, canon-deduped per shard in unique modes. THE
-    shard split of the sharded, checkpointed and auto-shard routes."""
+    pair blobs: ``[(shard, rows, pairs, blob)]`` in shard order, rows in
+    scan order within a shard, canon-deduped per shard in unique modes
+    (``rows`` counts the shard's hashes before that dedupe, ``pairs``
+    after). THE shard split of the sharded, checkpointed and auto-shard
+    routes."""
     if len(h) == 0:
         return []
     idx, tag = params.split(h)
@@ -229,20 +232,20 @@ def shard_pair_blobs(params: CuckooParams, h: np.ndarray, num_shards: int,
         bi, tg = idx[rs], tag[rs]
         if unique:
             bi, tg = canon_dedupe_pairs(params, bi, tg)
-        out.append((s, len(bi), pack_pairs(bi, tg)))
+        out.append((s, len(rs), len(bi), pack_pairs(bi, tg)))
     return out
 
 
-def pairs_batch(pid: int, rows: int, groups: list[tuple[int, int, bytes]],
+def pairs_batch(pid: int, groups: list[tuple[int, int, int, bytes]],
                 dk_by_shard: dict[int, int] | None = None) -> pa.RecordBatch:
     """``PAIRS_ROW`` rows of one source partition: its
-    ``shard_pair_blobs`` groups, its non-null row count, and per-shard
-    raw-key counts when they were computed (else NULL)."""
+    ``shard_pair_blobs`` groups and per-shard raw-key counts when they
+    were computed (else NULL)."""
     dk = dk_by_shard or {}
     return pa.RecordBatch.from_pylist(
         [{"shard": s, "src_partition": pid, "n": n, "rows": rows,
           "distinct_keys": dk.get(s), "blob": blob}
-         for s, n, blob in groups], schema=PAIRS_ROW)
+         for s, rows, n, blob in groups], schema=PAIRS_ROW)
 
 
 def _shard_finisher(params: CuckooParams, num_shards: int, unique: bool):
@@ -258,7 +261,7 @@ def _shard_finisher(params: CuckooParams, num_shards: int, unique: bool):
             hs = seen.consolidated()["h"].to_numpy(dtype=np.uint64)
             s, c = np.unique(shard_of(hs, num_shards), return_counts=True)
             dk_by_shard = dict(zip(s.tolist(), c.tolist()))
-        return pairs_batch(pid, rows,
+        return pairs_batch(pid,
                            shard_pair_blobs(params, h, num_shards, unique),
                            dk_by_shard)
 
@@ -293,7 +296,7 @@ def _shard_combiner(params: CuckooParams, unique: bool):
         return pd.DataFrame(
             {
                 "shard": [shard],
-                "rows": [int(pdf["n"].sum())],
+                "rows": [int(pdf["rows"].sum())],
                 "stored": [stored],
                 "distinct_keys": pd.array(
                     [None if pd.isna(dk) else int(dk)], dtype="Int64"),
@@ -381,6 +384,7 @@ def build_sharded_cuckoo_filter(
     The alternate-index XOR stays chunk-confined exactly as in the
     single-filter layout (membership parity is pinned by
     test_sharded_vacuum_*)."""
+    check_mode(mode)
     if num_shards & (num_shards - 1) or num_shards <= 0:
         raise ValueError("num_shards must be a power of two")
     if capacity is None:

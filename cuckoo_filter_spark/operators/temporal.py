@@ -22,9 +22,10 @@ Design rules shared by all three:
   most twice — never a BroadcastNestedLoop/Cartesian range scan. At
   100 TB the shuffle keys are (key) or (key, bucket); a pathologically
   hot key serializes into one task for the window-based ops (sessions
-  are inherently sequential per key — detect with
-  ``salting.detect_hot_keys`` and split upstream by coarse time range
-  if a key exceeds task memory), while the range join's (key, bucket)
+  are inherently sequential per key — find hot keys with the
+  Misra-Gries sketch of ``sketches.freq.build_mg_sketches`` and split
+  upstream by coarse time range if a key exceeds task memory), while
+  the range join's (key, bucket)
   composite spreads hot keys across buckets and AQE skew-join splits
   the rest.
 * **Determinism.** Callers must pass ``order_cols`` that make the

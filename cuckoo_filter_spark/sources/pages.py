@@ -10,7 +10,7 @@ from splitmix64(rowid ⊕ stream-constant), so output is identical for any
 partitioning / parallelism level — required so the local[8] and
 local[32] bench runs read the same logical table, and so checkpoint
 resume reproduces partitions bit-for-bit. Hosts are Zipf(s=1.2)
-distributed (intentionally skewed to exercise salting); a dup_rate
+distributed (intentionally skewed, like real crawl hosts); a dup_rate
 fraction of rows repeat an earlier row's url.
 """
 

@@ -24,41 +24,6 @@ from cuckoo_filter_spark.kernel.filter import CuckooKernel
 from cuckoo_filter_spark.params import CuckooParams
 
 
-def run_dedup_batches(pdfs, key_col, cols, on_overflow: str,
-                      shard_capacity: int, params, shard_key,
-                      kern_holder: list):
-    """The dedup micro-batch core, SHARED by both stateful APIs
-    (applyInPandasWithState here, transformWithStateInPandas in
-    dedup_tws) so the overflow/at-least-once semantics can never
-    diverge between them. The kernel lives in ``kern_holder[0]``: read
-    at entry, final state written back (generators can't return it) —
-    one source of truth, no duplicated positional/holder coupling."""
-    kern = kern_holder[0]
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        if kern.victim_used and on_overflow == "rotate":
-            kern = CuckooKernel(params)  # new dedup epoch
-        # hash ONCE per batch: the saturated fallback below re-probes
-        # with the same fingerprints (rotation keeps params, so they
-        # stay valid across an epoch switch)
-        idx, tag = kern.fingerprints(pdf[key_col])
-        fresh = kern.add_unique_hashed(idx, tag)
-        if kern.victim_used:
-            if on_overflow == "error":
-                raise RuntimeError(
-                    f"streaming dedup shard {shard_key} overflowed "
-                    f"shard_capacity={shard_capacity}; raise capacity "
-                    f"or num_shards, or use on_overflow='passthrough'")
-            # saturated: add_unique rejects keys it could not store —
-            # emit the genuinely-new ones anyway (at-least-once)
-            fresh = fresh | ~kern.contain_hashed(idx, tag)
-        out = pdf.loc[fresh, cols]
-        if len(out):
-            yield out
-    kern_holder[0] = kern
-
-
 def streaming_dedup(
     stream_df: DataFrame,
     key_col: str,
@@ -111,10 +76,29 @@ def streaming_dedup(
             kern = CuckooKernel.from_bytes(bytes(blob))
         else:
             kern = CuckooKernel(params)
-        holder = [kern]
-        yield from run_dedup_batches(pdfs, key_col, cols, on_overflow,
-                                     shard_capacity, params, key, holder)
-        state.update((bytearray(holder[0].to_bytes()),))
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            if kern.victim_used and on_overflow == "rotate":
+                kern = CuckooKernel(params)  # new dedup epoch
+            # hash ONCE per batch: the saturated fallback below re-probes
+            # with the same fingerprints (rotation keeps params, so they
+            # stay valid across an epoch switch)
+            idx, tag = kern.fingerprints(pdf[key_col])
+            fresh = kern.add_unique_hashed(idx, tag)
+            if kern.victim_used:
+                if on_overflow == "error":
+                    raise RuntimeError(
+                        f"streaming dedup shard {key} overflowed "
+                        f"shard_capacity={shard_capacity}; raise capacity "
+                        f"or num_shards, or use on_overflow='passthrough'")
+                # saturated: add_unique rejects keys it could not store —
+                # emit the genuinely-new ones anyway (at-least-once)
+                fresh = fresh | ~kern.contain_hashed(idx, tag)
+            out = pdf.loc[fresh, cols]
+            if len(out):
+                yield out
+        state.update((bytearray(kern.to_bytes()),))
 
     shards = stream_df.withColumn(
         "__shard", F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards))

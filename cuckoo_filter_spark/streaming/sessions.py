@@ -22,11 +22,9 @@ is below its end. Within-watermark reordering is handled by interval
 merging (an earlier event may extend an OPEN session backward or merge
 two open sessions).
 
-Both stateful APIs share one micro-batch core (``merge_session_state``
-/ ``finalize_sessions``), the dual-API shape of streaming.dedup and
-streaming.windowed: ``api='apply'`` = applyInPandasWithState,
-``api='tws'`` = transformWithStateInPandas (protobuf-gated in this
-container).
+State lives in applyInPandasWithState; the per-batch steps are
+``merge_session_state`` (fold events into open intervals) and
+``finalize_sessions`` (split off the sessions the watermark closes).
 
 State is three parallel bigint arrays (starts/ends/counts of open
 intervals) — tiny per key (one entry per OPEN session; finalized ones
@@ -119,7 +117,6 @@ def streaming_sessionize(
     ts_col: str,
     gap_seconds: float,
     watermark: str = "1 hour",
-    api: str = "apply",
 ) -> DataFrame:
     """stream → one row per FINALIZED session:
     (key, session_start_us, session_end_us, n_events), all bigint.
@@ -129,9 +126,7 @@ def streaming_sessionize(
     NULL key or NULL timestamp are dropped (numeric NULL keys crash the
     state machinery; same exclusion as streaming.dedup).
 
-    api='apply' (default): applyInPandasWithState, update mode.
-    api='tws': transformWithStateInPandas — same semantics through the
-    shared core; needs protobuf + the RocksDB state store.
+    Output mode is update: each finalized session is emitted once.
 
     Timer protocol: after each batch a per-key event-time timer is set
     at ``min(open end) + gap + 1ms`` — the earliest instant any open
@@ -140,8 +135,6 @@ def streaming_sessionize(
     sessions leaves state entirely. State per key is one (start, end,
     count) triple per OPEN session only, so a 100 TB-scale stream's
     state is O(active keys), not O(events)."""
-    if api not in ("apply", "tws"):
-        raise ValueError(f"unknown api {api!r}")
     from cuckoo_filter_spark.operators.temporal import _gap_us
 
     gap_us = _gap_us(gap_seconds)
@@ -154,8 +147,6 @@ def streaming_sessionize(
         .withWatermark(ts_col, watermark)
         .withColumn("__us", F.unix_micros(F.col(ts_col)))
     )
-    if api == "tws":
-        return _sessionize_tws(prepped, key_col, gap_us, out_schema)
 
     def _emit(key, final) -> pd.DataFrame:
         return pd.DataFrame({
@@ -205,85 +196,3 @@ def streaming_sessionize(
         GroupStateTimeout.EventTimeTimeout,
     )
 
-
-def _sessionize_tws(prepped: DataFrame, key_col: str, gap_us: int,
-                    out_schema: str) -> DataFrame:
-    from cuckoo_filter_spark.streaming.compat import require_protobuf
-
-    require_protobuf("api='apply'")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        """tws twin: same core, ValueState of three bigint arrays,
-        event-time timers at min(open end) + gap + 1ms."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._st = handle.getValueState("sessions", STATE_SCHEMA)
-
-        def _rearm(self, ts_ms: int) -> None:
-            # unlike the apply path's setTimeoutTimestamp (which
-            # REPLACES), tws timers are keyed (group, timestamp) —
-            # session extension shifts the expiry every batch, and the
-            # superseded timers would pile up one per batch and each
-            # fire a spurious handleExpiredTimer pass; delete them first.
-            # Materialize before mutating (ADVICE r6): listTimers is a
-            # lazily-paged state-server iterator — deleting mid-iteration
-            # is not a guaranteed-safe pattern.
-            for t in list(self._handle.listTimers()):
-                if t != ts_ms:
-                    self._handle.deleteTimer(t)
-            self._handle.registerTimer(ts_ms)
-
-        def _emit(self, key, final) -> pd.DataFrame:
-            return pd.DataFrame({
-                key_col: [key[0]] * len(final),
-                "session_start_us": [f[0] for f in final],
-                "session_end_us": [f[1] for f in final],
-                "n_events": [f[2] for f in final],
-            })
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            wm_us = timerValues.getCurrentWatermarkInMs() * 1000
-            st = self._st.get() if self._st.exists() else ([], [], [])
-            starts, ends, counts = merge_session_state(
-                rows, "__us", gap_us,
-                list(st[0]), list(st[1]), list(st[2]))
-            final, keep = finalize_sessions(
-                starts, ends, counts, gap_us, wm_us)
-            if keep[0]:
-                self._st.update(keep)
-                self._rearm((min(keep[1]) + gap_us) // 1000 + 1)
-            elif self._st.exists():
-                self._st.clear()
-            if final:
-                yield self._emit(key, final)
-
-        def handleExpiredTimer(self, key, timerValues,
-                               expiredTimerInfo) -> Iterator[pd.DataFrame]:
-            wm_us = timerValues.getCurrentWatermarkInMs() * 1000
-            if not self._st.exists():
-                return
-            starts, ends, counts = self._st.get()
-            final, keep = finalize_sessions(
-                list(starts), list(ends), list(counts), gap_us, wm_us)
-            if keep[0]:
-                self._st.update(keep)
-                self._rearm((min(keep[1]) + gap_us) // 1000 + 1)
-            else:
-                self._st.clear()
-            if final:
-                yield self._emit(key, final)
-
-        def close(self) -> None:
-            pass
-
-    return prepped.groupBy(key_col).transformWithStateInPandas(
-        SessionProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="EventTime",
-    )

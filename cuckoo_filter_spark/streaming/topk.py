@@ -8,8 +8,10 @@ streaming/windowed.py HLL and streaming/sessions.py): state per window
 is ONE mergeable MG blob, late rows within the watermark fold in like
 any other row, rows beyond it are dropped by Spark upstream, and the
 blob is EVICTED when the watermark passes the window end (event-time
-timeout / timer — a closed window can never receive rows, and without
+timeout — a closed window can never receive rows, and without
 eviction a long stream accumulates one blob per window forever).
+State lives in applyInPandasWithState; the per-batch fold/emit step is
+``run_windowed_mg_batches``.
 
 Output rows carry the MG bounds ``count_lo <= f <= count_hi`` plus the
 batch's running ``updates``; when the window's distinct-item count
@@ -18,12 +20,6 @@ stays under ``k`` the sketch is EXACT (``count_lo == count_hi == f``)
 Emission rule: every tracked item whose GUARANTEED count (``count_lo``)
 is >= ``min_count``; the threshold-vs-bounds semantics match
 MGSketch.guaranteed_at_least.
-
-Both stateful APIs share the one micro-batch core
-(``run_windowed_mg_batches``): ``api='apply'`` =
-applyInPandasWithState, ``api='tws'`` = transformWithStateInPandas
-(protobuf-gated in this container), the dual-API shape of every
-streaming operator here.
 """
 
 from __future__ import annotations
@@ -51,8 +47,8 @@ def run_windowed_mg_batches(
     blob: bytes | None,
     updates: int,
 ) -> tuple[bytes, int, pd.DataFrame]:
-    """Micro-batch core shared by BOTH stateful APIs: fold this batch's
-    items into the window's MG sketch, emit every item with
+    """Micro-batch core: fold this batch's items into the window's MG
+    sketch, emit every item with
     ``count_lo >= min_count`` (sorted by item for deterministic
     output). NULL items are excluded — same null semantics as the batch
     sketches and the windowed HLL core."""
@@ -84,15 +80,12 @@ def windowed_frequent_items(
     watermark: str = "2 hours",
     k: int = 1024,
     min_count: int = 2,
-    api: str = "apply",
 ) -> DataFrame:
     """stream → (window_start, item, count_lo, count_hi, updates) rows
     per micro-batch (update mode): each window's items whose guaranteed
     count has reached ``min_count``. Take the max-``updates`` batch per
     window for the final per-window snapshot. Exact (lo == hi == true
     frequency) while the window's distinct items stay <= k."""
-    if api not in ("apply", "tws"):
-        raise ValueError(f"unknown api {api!r}")
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     window_ms = int(pd.Timedelta(window).total_seconds() * 1000)
@@ -105,8 +98,6 @@ def windowed_frequent_items(
     # CASTs to VARCHAR, which Spark's cast matches for integers)
     stream_df = stream_df.withColumn(item_col, F.col(item_col).cast("string"))
     windowed = _windowed(stream_df, ts_col, window, watermark)
-    if api == "tws":
-        return _topk_tws(windowed, item_col, k, min_count, window_ms, tz)
 
     def agg_fn(
         key: Tuple[Any, ...],
@@ -130,46 +121,3 @@ def windowed_frequent_items(
         GroupStateTimeout.EventTimeTimeout,
     )
 
-
-def _topk_tws(windowed: DataFrame, item_col: str, k: int, min_count: int,
-              window_ms: int, tz: str) -> DataFrame:
-    from cuckoo_filter_spark.streaming.compat import require_protobuf
-
-    require_protobuf("api='apply'")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class WindowedMGProcessor(StatefulProcessor):
-        """tws twin: one (MG blob, updates) ValueState per window;
-        event-time timer at the window end evicts closed state."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._st = handle.getValueState("mg", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            st = self._st.get() if self._st.exists() else (None, 0)
-            new_blob, updates, frame = run_windowed_mg_batches(
-                rows, item_col, k, min_count, key[0],
-                bytes(st[0]) if st[0] is not None else None, int(st[1]))
-            self._st.update((bytearray(new_blob), updates))
-            self._handle.registerTimer(_window_end_ms(key[0], window_ms, tz))
-            if len(frame):
-                yield frame
-
-        def handleExpiredTimer(self, key, timerValues,
-                               expiredTimerInfo) -> Iterator[pd.DataFrame]:
-            self._st.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return windowed.groupBy("__ws").transformWithStateInPandas(
-        WindowedMGProcessor(),
-        outputStructType=OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="EventTime",
-    )

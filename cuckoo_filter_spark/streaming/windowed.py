@@ -9,13 +9,9 @@ rows within the watermark merge into their window like any other row;
 rows later than the watermark are dropped by Spark before reaching the
 state function.
 
-Both Spark stateful APIs are supported through ONE micro-batch core
-(``run_windowed_hll_batches``), the same dual-API shape as
-streaming.dedup / streaming.dedup_tws: ``api='apply'`` uses
-applyInPandasWithState (no extra deps), ``api='tws'`` uses
-transformWithStateInPandas (Spark 4 StatefulProcessor; needs protobuf
-and the RocksDB state store), so an applyInPandasWithState deprecation
-is a one-argument migration.
+State lives in applyInPandasWithState, the one stateful streaming API
+of this package; the per-batch merge/emit step is
+``run_windowed_hll_batches``.
 """
 
 from __future__ import annotations
@@ -40,9 +36,8 @@ def run_windowed_hll_batches(
     blob: bytes | None,
     updates: int,
 ) -> tuple[bytes, int, pd.DataFrame]:
-    """Micro-batch core shared by BOTH stateful APIs (one definition of
-    the merge/emit semantics): fold this batch's keys into the window's
-    HLL and build the running-estimate row. Returns
+    """Micro-batch core: fold this batch's keys into the window's HLL
+    and build the running-estimate row. Returns
     (new_blob, new_updates, out_frame)."""
     hll = (HLLSketch.from_bytes(bytes(blob)) if blob is not None
            else HLLSketch(p=p))
@@ -108,25 +103,16 @@ def windowed_distinct_count(
     window: str = "1 hour",
     watermark: str = "2 hours",
     p: int = 12,
-    api: str = "apply",
 ) -> DataFrame:
     """stream → (window_start, n_distinct_estimate) per tumbling window,
     updated each micro-batch; state = one HLL per window.
 
-    api='apply' (default): applyInPandasWithState. api='tws':
-    transformWithStateInPandas — identical semantics through the shared
-    core; requires google.protobuf (the tws state-server protocol) and
-    the RocksDB state store provider in the stream config.
-
-    State is EVICTED once the watermark passes a window's end (event-
-    time timeout on the apply path, an event-time timer on the tws
-    path): a closed window can never receive rows again, and without
-    eviction a long-running stream accumulates one HLL blob per window
-    forever — unbounded state growth that slows every micro-batch
-    commit. Nothing is emitted at eviction; the running per-batch
+    State is EVICTED once the watermark passes a window's end (an
+    event-time timeout): a closed window can never receive rows again,
+    and without eviction a long-running stream accumulates one HLL blob
+    per window forever — unbounded state growth that slows every
+    micro-batch commit. Nothing is emitted at eviction; the running per-batch
     estimates are the output contract."""
-    if api not in ("apply", "tws"):
-        raise ValueError(f"unknown api {api!r}")
     window_ms = int(pd.Timedelta(window).total_seconds() * 1000)
     tz = stream_df.sparkSession.conf.get("spark.sql.session.timeZone")
     # stringify the key JVM-side: a micro-batch mixing NULLs into an
@@ -137,8 +123,6 @@ def windowed_distinct_count(
     # Spark's cast renders one canonical string per value.
     stream_df = stream_df.withColumn(key_col, F.col(key_col).cast("string"))
     windowed = _windowed(stream_df, ts_col, window, watermark)
-    if api == "tws":
-        return _windowed_tws(windowed, key_col, p, window_ms, tz)
 
     def agg_fn(
         key: Tuple[Any, ...],
@@ -166,49 +150,3 @@ def windowed_distinct_count(
         GroupStateTimeout.EventTimeTimeout
     )
 
-
-def _windowed_tws(windowed: DataFrame, key_col: str, p: int,
-                  window_ms: int, tz: str) -> DataFrame:
-    from cuckoo_filter_spark.streaming.compat import require_protobuf
-
-    require_protobuf("api='apply'")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class WindowedHLLProcessor(StatefulProcessor):
-        """One (HLL blob, updates) ValueState per window key; emits the
-        running estimate through the SAME core as the apply path. An
-        event-time timer at the window end evicts closed windows'
-        state (the tws twin of the apply path's EventTimeTimeout)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._st = handle.getValueState("hll", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            blob, updates = self._st.get() if self._st.exists() else (None, 0)
-            new_blob, updates, frame = run_windowed_hll_batches(
-                rows, key_col, p, key[0],
-                bytes(blob) if blob is not None else None, int(updates))
-            self._st.update((bytearray(new_blob), updates))
-            # timers are keyed (group, timestamp): re-registering the
-            # same window-end each batch is idempotent
-            self._handle.registerTimer(_window_end_ms(key[0], window_ms, tz))
-            yield frame
-
-        def handleExpiredTimer(self, key, timerValues,
-                               expiredTimerInfo) -> Iterator[pd.DataFrame]:
-            self._st.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return windowed.groupBy("__ws").transformWithStateInPandas(
-        WindowedHLLProcessor(),
-        outputStructType=OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="EventTime",
-    )

@@ -460,3 +460,61 @@ def test_xxhash64_build_excludes_null_keys(spark):
                                      mode="unique_global")
     assert bx.distinct_keys == 500 == bm.distinct_keys
     assert sum(m["stored"] for m in bx.metrics) == 500
+
+
+@pytest.fixture(scope="module")
+def dup_null_df(spark):
+    """9,000 rows over 4 partitions: each key on three consecutive rows
+    (so copies share a partition and the pair dedupe folds them), and
+    every 10th row NULL."""
+    return spark.range(0, 9_000, numPartitions=4).select(
+        F.when(F.col("id") % 10 == 0, F.lit(None))
+        .otherwise(F.concat(F.lit("r"), (F.col("id") / 3).cast("long")))
+        .alias("key"))
+
+
+@pytest.mark.parametrize("mode", ["unique_local", "unique_global",
+                                  "multiset"])
+def test_sharded_rows_metric_counts_non_null_rows(spark, dup_null_df, mode):
+    """A shard's ``rows`` counts its non-null input rows, before the
+    pair dedupe: the shard rows sum to the non-null row count."""
+    nonnull = dup_null_df.where(F.col("key").isNotNull()).count()
+    b = build_sharded_cuckoo_filter(dup_null_df, "key", num_shards=8,
+                                    mode=mode)
+    assert sum(m["rows"] for m in b.metrics) == nonnull == 8_100
+
+
+def test_checkpointed_and_auto_shard_rows_metric(spark, dup_null_df,
+                                                 tmp_path):
+    from cuckoo_filter_spark.operators.checkpoint import build_checkpointed
+    from cuckoo_filter_spark.operators.sharded import ShardedCuckooBuild
+
+    nonnull = dup_null_df.where(F.col("key").isNotNull()).count()
+    ck = build_checkpointed(dup_null_df, "key", str(tmp_path / "ck"),
+                            num_shards=8, input_fingerprint="dup-null")
+    assert sum(m["rows"] for m in ck.metrics) == nonnull
+    # deferred (observed count) and declared-capacity auto-shard routes
+    for capacity in (None, 9_000):
+        for mode in ("unique_local", "multiset"):
+            b = build_cuckoo_filter(dup_null_df, "key", capacity=capacity,
+                                    mode=mode, auto_shard=1_000)
+            assert isinstance(b, ShardedCuckooBuild)
+            assert sum(m["rows"] for m in b.metrics) == nonnull, (capacity,
+                                                                  mode)
+
+
+def test_builders_reject_unknown_mode(spark, dup_null_df, tmp_path):
+    """A mode typo fails before any Spark job or manifest write instead
+    of silently building a unique_local filter."""
+    from cuckoo_filter_spark.operators.checkpoint import build_checkpointed
+
+    with pytest.raises(ValueError, match="unknown mode"):
+        build_cuckoo_filter(dup_null_df, "key", mode="unique-global")
+    with pytest.raises(ValueError, match="unknown mode"):
+        build_sharded_cuckoo_filter(dup_null_df, "key", num_shards=8,
+                                    mode="unique-global")
+    ck = tmp_path / "ck"
+    with pytest.raises(ValueError, match="unknown mode"):
+        build_checkpointed(dup_null_df, "key", str(ck), num_shards=8,
+                           mode="unique-global")
+    assert not (ck / "_build_manifest.json").exists()

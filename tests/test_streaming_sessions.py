@@ -1,4 +1,4 @@
-"""Streaming sessionization: shared core laws + end-to-end multi-batch
+"""Streaming sessionization: micro-batch core laws + end-to-end multi-batch
 finalization through applyInPandasWithState."""
 
 import os
@@ -13,15 +13,6 @@ from cuckoo_filter_spark.streaming.sessions import (
 )
 
 US = 1_000_000
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 # ---------------------------------------------------------------------------
@@ -238,14 +229,8 @@ def test_streaming_sessionize_null_keys_dropped(spark, tmp_path):
     assert got == [("u1", us0, us0, 1)]
 
 
-def test_streaming_sessionize_validation_and_tws_gate(spark):
+def test_streaming_sessionize_validation(spark):
     stream = spark.readStream.schema("ts timestamp, uid string").parquet(
         "/tmp/does_not_matter_sess_*.parquet")
-    with pytest.raises(ValueError, match="unknown api"):
-        streaming_sessionize(stream, "uid", "ts", 60.0, api="nope")
     with pytest.raises(ValueError, match="gap_seconds"):
         streaming_sessionize(stream, "uid", "ts", 0.0)
-    if _has_protobuf():
-        pytest.skip("protobuf present — tws runtime covered elsewhere")
-    with pytest.raises(ImportError, match="applyInPandasWithState"):
-        streaming_sessionize(stream, "uid", "ts", 60.0, api="tws")

@@ -1,21 +1,12 @@
-"""Windowed streaming frequent items (MG-per-window): shared-core
-purity + bounds, exact-mode end-to-end across multiple micro-batches,
-and the loud tws protobuf gate."""
+"""Windowed streaming frequent items (MG-per-window): micro-batch core
+purity + bounds, and exact-mode end-to-end across multiple
+micro-batches."""
 
 import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import Window, functions as F
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def test_shared_core_exact_and_bounds():
@@ -131,23 +122,10 @@ def test_checkpoint_restart_recovers_state(spark, tmp_path):
     assert got["a"] == (7, 7) and got["b"] == (2, 2) and got["c"] == (5, 5)
 
 
-def test_tws_gate_without_protobuf(spark):
-    from cuckoo_filter_spark.streaming.topk import windowed_frequent_items
-
-    if _has_protobuf():
-        pytest.skip("protobuf present; gate not exercised")
-    df = (spark.readStream.format("rate").load()
-          .selectExpr("timestamp as ts", "cast(value as string) as it"))
-    with pytest.raises(ImportError, match="api='apply'"):
-        windowed_frequent_items(df, "ts", "it", api="tws")
-
-
 def test_bad_args(spark):
     from cuckoo_filter_spark.streaming.topk import windowed_frequent_items
 
     df = (spark.readStream.format("rate").load()
           .selectExpr("timestamp as ts", "cast(value as string) as it"))
-    with pytest.raises(ValueError, match="api"):
-        windowed_frequent_items(df, "ts", "it", api="nope")
     with pytest.raises(ValueError, match="min_count"):
         windowed_frequent_items(df, "ts", "it", min_count=0)

@@ -1,19 +1,7 @@
 """Windowed streaming HLL: per-window estimates within the error bound,
-through both stateful APIs (shared micro-batch core)."""
+through applyInPandasWithState and its micro-batch core."""
 
 import os
-
-import numpy as np
-import pytest
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def test_windowed_distinct_count(spark, tmp_path):
@@ -49,7 +37,7 @@ def test_windowed_distinct_count(spark, tmp_path):
 
 
 def test_windowed_shared_core_pure():
-    """The micro-batch core is ONE definition for both APIs: estimates
+    """The micro-batch core is pure: estimates
     accumulate across calls via the returned blob, and an empty batch
     round-trips state unchanged."""
     import pandas as pd
@@ -71,65 +59,6 @@ def test_windowed_shared_core_pure():
     blob3, updates, frame = run_windowed_hll_batches(
         [], "uid", 12, pd.Timestamp("2025-01-01"), blob2, updates)
     assert blob3 == blob2 and updates == 200
-
-
-def test_windowed_tws_gate_without_protobuf(spark):
-    """VERDICT r3 #7: the windowed path has a tws variant; without
-    google.protobuf it must fail LOUD at plan time pointing at
-    api='apply' — never an opaque worker crash mid-query."""
-    from cuckoo_filter_spark.streaming.windowed import windowed_distinct_count
-
-    stream = spark.readStream.schema("ts timestamp, uid string").parquet(
-        "/tmp/does_not_matter_*.parquet")
-    with pytest.raises(ValueError, match="unknown api"):
-        windowed_distinct_count(stream, "ts", "uid", api="nope")
-    if _has_protobuf():
-        pytest.skip("protobuf present — runtime path covered by "
-                    "test_windowed_distinct_count_tws")
-    with pytest.raises(ImportError, match="applyInPandasWithState"):
-        windowed_distinct_count(stream, "ts", "uid", api="tws")
-
-
-def test_windowed_distinct_count_tws(spark, tmp_path):
-    """Runtime parity through transformWithStateInPandas (skipped where
-    protobuf is absent; the loud gate is tested instead)."""
-    if not _has_protobuf():
-        pytest.skip("transformWithState needs google.protobuf "
-                    "(not shipped in this container)")
-    import pandas as pd
-
-    from cuckoo_filter_spark.streaming.windowed import windowed_distinct_count
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    rows = [(pd.Timestamp("2025-01-01") + pd.Timedelta(seconds=i),
-             f"u{i % 50}") for i in range(200)]
-    spark.createDataFrame(
-        pd.DataFrame(rows, columns=["ts", "uid"])).write.parquet(
-        f"{src}/b0.parquet")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        stream = spark.readStream.schema("ts timestamp, uid string").parquet(
-            src + "/*.parquet")
-        agg = windowed_distinct_count(stream, "ts", "uid", window="1 hour",
-                                      watermark="2 hours", p=12, api="tws")
-        q = (agg.writeStream.format("memory").queryName("win_tws_out")
-             .outputMode("update")
-             .option("checkpointLocation", str(tmp_path / "ck_tws"))
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-        out = spark.sql("select * from win_tws_out").collect()
-        assert len(out) == 1 and abs(out[0]["estimate"] - 50) / 50 < 0.1
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
 
 
 def test_windowed_state_evicted_after_watermark(spark, tmp_path):
@@ -178,7 +107,7 @@ def test_windowed_state_evicted_after_watermark(spark, tmp_path):
 
 
 def test_windowed_core_excludes_null_keys():
-    """COUNT(DISTINCT) null semantics in the shared core: astype(str)
+    """COUNT(DISTINCT) null semantics in the micro-batch core: astype(str)
     used to turn a NULL key into the literal "None"/"nan" string and
     count one phantom distinct per window."""
     import pandas as pd
