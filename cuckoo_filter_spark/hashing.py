@@ -12,10 +12,11 @@ Two implementations:
   published algorithm. Used as the parity oracle in tests and for
   driver-side one-off hashing.
 * :func:`metro64_batch` — numpy-vectorized over a batch of
-  variable-length byte strings. This is the hot path used inside Arrow
-  pandas UDFs: the 32-byte block recurrence runs batched across all rows
-  that still have blocks left, and the tail branches (16/8/4/2/1 bytes)
-  are applied with per-row masks. No per-row Python in the hot loop.
+  variable-length byte strings. This is the hot path of the Arrow-batch
+  build partials and probe UDFs: the 32-byte block recurrence runs
+  batched across all rows that still have blocks left, and the tail
+  branches (16/8/4/2/1 bytes) are applied with per-row masks. No
+  per-row Python in the hot loop.
 
 Both are implemented from the published algorithm description; the test
 suite pins ``metro64_batch == metro64`` across lengths 0..200.
@@ -291,6 +292,31 @@ def arrow_key_hashes(arr, seed: int = DEFAULT_SEED) -> np.ndarray:
     if pa.types.is_floating(arr.type):
         arr = pa.array(canon_int_keys(arr.to_numpy(zero_copy_only=False)))
     return metro64_flat(*to_flat_bytes(arr), seed)
+
+
+def present_hashes(arr, prehashed: bool = False) -> tuple[np.ndarray, np.ndarray]:
+    """(present mask, uint64 hashes of the present keys) of one Arrow key
+    batch — THE per-batch key step of every cuckoo build partial and
+    every probe UDF.
+
+    A key is missing when it is NULL or, in a floating array, NaN: it is
+    never stored and never a member (a NULL string slot has zero length
+    and would hash as ``''``; a NULL number has no bytes). The present
+    keys hash with :func:`arrow_key_hashes`, or, when ``prehashed`` (the
+    column already holds a JVM 64-bit hash such as ``F.xxhash64``), are
+    viewed as uint64."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    present = pc.invert(pc.is_null(arr, nan_is_null=True))
+    mask = present.to_numpy(zero_copy_only=False)
+    keys = arr if mask.all() else arr.filter(present)
+    if prehashed:
+        return mask, np.asarray(keys.to_numpy(zero_copy_only=False),
+                                dtype=np.int64).view(np.uint64)
+    return mask, arrow_key_hashes(keys)
 
 
 def key_mask_and_values(items):

@@ -45,10 +45,9 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from cuckoo_filter_spark.hashing import arrow_key_hashes, metro64_batch
+from cuckoo_filter_spark.hashing import metro64_batch, present_hashes
 from cuckoo_filter_spark.kernel.filter import CuckooKernel
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
-from cuckoo_filter_spark.sketches.base import drop_missing
 
 #: one row per partition of the single-filter routes
 BUILD_ROW = pa.schema([
@@ -334,16 +333,13 @@ def _key_partial_fn(finish: Finisher, prehashed: bool, count_keys: bool):
         # finisher can group the distinct keys by shard)
         seen = DistinctAccum(dropna=False) if count_keys else None
         for batch in batches:
-            keys = drop_missing(batch.column(0))
-            if len(keys) == 0:
+            keys = batch.column(0)
+            present, h = present_hashes(keys, prehashed)
+            if len(h) == 0:
                 continue
-            rows += len(keys)
-            if prehashed:
-                h = np.asarray(keys.to_numpy(zero_copy_only=False),
-                               dtype=np.int64).view(np.uint64)
-            else:
-                h = arrow_key_hashes(keys)
+            rows += len(h)
             if seen is not None:
+                keys = keys.filter(pa.array(present))
                 seen.add(pd.DataFrame({"h": h, "key": keys.to_pandas()}))
             hs.append(h)
         h = np.concatenate(hs) if hs else np.zeros(0, dtype=np.uint64)
@@ -356,11 +352,10 @@ def key_partials(df, key_col: str, hash_fn: str, mode: str,
                  finish: Finisher, schema: pa.Schema,
                  num_partitions: int | None = None):
     """THE per-partition partial of every cuckoo build route: one
-    mapInArrow pass over ``df[key_col]``. Per batch the NULL keys (and
-    NaNs of a floating column) are dropped once, the rest hashed once
-    (``hashing.arrow_key_hashes``, or the xxhash64 column viewed as
-    uint64) and counted; under ``mode='unique_global'`` the raw keys
-    also feed a ``DistinctAccum``. ``finish`` turns the partition's
+    mapInArrow pass over ``df[key_col]``. Per batch the missing keys are
+    dropped and the rest hashed once (``hashing.present_hashes``, the
+    key step every probe shares) and counted; under
+    ``mode='unique_global'`` the raw keys also feed a ``DistinctAccum``. ``finish`` turns the partition's
     hashes into its output rows (``schema``).
 
     ``unique_global`` repartitions by key first (``num_partitions`` or
@@ -497,8 +492,8 @@ def _sharded_from_hash_partials(parts, est_keys: int, num_shards: int,
                     # copies (np.unique): credit them to the first shard
                     # row so the shard rows still sum to the non-null
                     # row count
-                    s, r, n, pairs = groups[0]
-                    groups[0] = (s, r + rows_n - len(h), n, pairs)
+                    s, r, pairs = groups[0]
+                    groups[0] = (s, r + rows_n - len(h), pairs)
                     yield sh.pairs_batch(pid, groups)
 
     pairs = parts.select("partition_id", "rows", "blob").mapInArrow(

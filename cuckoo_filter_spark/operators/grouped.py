@@ -22,7 +22,8 @@ count, fine to ~10⁸ distinct per group. Beyond that, build per-group
 
 Reference parity: each per-group blob is a §1.5-layout filter
 (cuckoofilter.go:216-266 Encode), so merge/delete/probe semantics apply
-per group.
+per group. Both probes (the broadcast Arrow UDF and the cogroup join)
+share the Arrow key step of ``operators.query``.
 """
 
 from __future__ import annotations
@@ -31,13 +32,25 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.functions import arrow_udf
 
-from cuckoo_filter_spark.kernel.filter import CuckooKernel, CuckooProbe
+from cuckoo_filter_spark.hashing import present_hashes
+from cuckoo_filter_spark.kernel.filter import CuckooKernel
 from cuckoo_filter_spark.operators.build import (
     DEFAULT_HEADROOM,
     DistinctAccum,
     hashes_of,
+)
+from cuckoo_filter_spark.operators.query import (
+    cached_probe,
+    key_hash_udf,
+    probe_input,
+)
+from cuckoo_filter_spark.operators.sharded import (
+    cogroup_prober,
+    iter_shard_groups,
 )
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
@@ -194,15 +207,22 @@ def build_grouped_filters(
 # while the cogroup path's extra probe shuffle amortizes.
 AUTO_COGROUP_GROUPS = 2048
 
-_GROUP_KERNEL_CACHE: dict = {}
+def _recorded_hash_fn(fns) -> str:
+    """The one hash_fn a filters frame records (metro64 when it records
+    none)."""
+    fns = set(fns)
+    if len(fns) > 1:
+        raise ValueError(f"filters frame mixes hash_fns {sorted(fns)}")
+    return fns.pop() if fns else "metro64"
 
 
 def grouped_might_contain_udf(spark, filters: DataFrame | dict):
     """Broadcast probe over per-group filters: ``f(group_col, key_col)
     -> boolean Column``. The filters frame (one small blob row per
     group) is collected + broadcast; probes route to their group's
-    kernel inside an Arrow-batched pandas UDF. Keys whose group has no
-    filter return False (nothing was inserted for that group).
+    kernel inside an Arrow UDF that hashes each batch once. Keys whose
+    group has no filter (a NULL group included) and missing keys return
+    False: nothing was inserted for them.
 
     Bound: this path materializes EVERY group's blob in a driver dict
     and broadcasts the lot — right for modest group spaces (per-lang
@@ -211,21 +231,15 @@ def grouped_might_contain_udf(spark, filters: DataFrame | dict):
     :func:`grouped_might_contain_join` there (cogroup by group, no
     driver materialization, no broadcast).
 
-    metro64 probes only: the filters frame records the build hash_fn
-    and any non-metro64 build is rejected here (probing an xxhash64
-    build with metro64 fingerprints would silently answer False for
-    everything). Dict inputs are assumed metro64."""
+    Probes use the hash_fn the filters frame records, as the cogroup
+    probe does; dict inputs are taken as metro64."""
     if isinstance(filters, DataFrame):
         cols = filters.columns
         gcol = cols[0]
         sel = [gcol, "blob"] + (["hash_fn"] if "hash_fn" in cols else [])
         rows = filters.select(*sel).collect()
-        bad = {r["hash_fn"] for r in rows
-               if "hash_fn" in cols and r["hash_fn"] != "metro64"}
-        if bad:
-            raise ValueError(
-                f"grouped filters built with {sorted(bad)}; the grouped "
-                f"probe hashes with metro64 and would miss every member")
+        hash_fn = _recorded_hash_fn(
+            r["hash_fn"] for r in rows if "hash_fn" in cols)
         blobs = {r[0]: bytes(r["blob"]) for r in rows}
         if len(blobs) != len(rows):
             # same guard as the cogroup probe: dict construction would
@@ -236,36 +250,29 @@ def grouped_might_contain_udf(spark, filters: DataFrame | dict):
                 f"only {len(blobs)} distinct groups — duplicate rows "
                 f"per group (were two builds unioned?)")
     else:
+        hash_fn = "metro64"
         blobs = {g: bytes(b) for g, b in filters.items()}
+    to_col, prehashed = probe_input(hash_fn)
     bcast = spark.sparkContext.broadcast(blobs)
     bid = bcast._jbroadcast.id()
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("boolean")
-    def probe(groups: pd.Series, keys: pd.Series) -> pd.Series:
-        out = np.zeros(len(keys), dtype=bool)
-        codes, uniques = pd.factorize(groups, use_na_sentinel=True)
-        for ci, g in enumerate(uniques):
-            blob = bcast.value.get(g)
-            if blob is None:
-                continue
-            ck = (bid, g)
-            kern = _GROUP_KERNEL_CACHE.get(ck)
-            if kern is None:
-                if len(_GROUP_KERNEL_CACHE) > 256:
-                    _GROUP_KERNEL_CACHE.clear()
-                kern = CuckooProbe(blob)
-                _GROUP_KERNEL_CACHE[ck] = kern
-            mask = codes == ci
-            out[mask] = kern.contain(keys[mask])
-        return pd.Series(out)
+    @arrow_udf("boolean")
+    def probe(groups: pa.Array, keys: pa.Array) -> pa.Array:
+        present, h = present_hashes(keys, prehashed)
+        codes = groups.dictionary_encode()
+        gid = codes.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+        names = codes.dictionary.to_pylist()
+        flags = np.zeros(len(h), dtype=bool)
+        for ci, rows in iter_shard_groups(gid[present]):
+            blob = bcast.value.get(names[ci]) if ci >= 0 else None
+            if blob is not None:
+                kern = cached_probe(bid, names[ci], blob)
+                flags[rows] = kern.contain_hashed(*kern.params.split(h[rows]))
+        out = np.zeros(len(present), dtype=bool)
+        out[present] = flags
+        return pa.array(out)
 
-    def might_contain(group_col, key_col):
-        g = F.col(group_col) if isinstance(group_col, str) else group_col
-        k = F.col(key_col) if isinstance(key_col, str) else key_col
-        return probe(g, k)
-
-    return might_contain
+    return lambda group_col, key_col: probe(group_col, to_col(key_col))
 
 
 def grouped_might_contain_join(
@@ -293,12 +300,11 @@ def grouped_might_contain_join(
     Returns probe columns + boolean ``flag_col``. Keys whose group has
     no filter row get False — including NULL-group rows: a NULL group
     equals nothing under SQL IN/EXISTS semantics, and the broadcast
-    probe (factorize NA sentinel) already answers False there, so the
-    NULL-group blob rows are excluded from the cogroup rather than
-    letting Spark's groupBy pair the two NULL groups and silently
-    diverge from the broadcast path. Supports both recorded hash_fns
-    (xxhash64 probes pre-hash JVM-side, exactly like the sharded
-    join)."""
+    probe already answers False there, so the NULL-group blob rows are
+    excluded from the cogroup rather than letting Spark's groupBy pair
+    the two NULL groups and silently diverge from the broadcast path.
+    Probes use the recorded hash_fn; the probe keys' hashes come from
+    ``query.key_hash_udf``, exactly like the sharded join."""
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     cols = probe.columns
@@ -308,12 +314,9 @@ def grouped_might_contain_join(
     out_schema = StructType(list(probe.schema.fields)
                             + [StructField(flag_col, BooleanType())])
 
-    fns = ([r["hash_fn"] for r in
-            filters.select("hash_fn").distinct().collect()]
-           if "hash_fn" in filters.columns else ["metro64"])
-    if len(fns) > 1:
-        raise ValueError(f"filters frame mixes hash_fns {sorted(fns)}")
-    hash_fn = fns[0] if fns else "metro64"
+    hash_fn = _recorded_hash_fn(
+        [r[0] for r in filters.select("hash_fn").distinct().collect()]
+        if "hash_fn" in filters.columns else [])
 
     gcol = filters.columns[0]
     # NULL-group parity with the broadcast probe (see docstring): the
@@ -321,9 +324,7 @@ def grouped_might_contain_join(
     # cogroup against an empty right side and flag False
     blobs = filters.select(F.col(gcol).alias(group_col), "blob").where(
         F.col(group_col).isNotNull())
-    probe_k = probe
-    if hash_fn == "xxhash64":
-        probe_k = probe_k.withColumn("__h", F.xxhash64(F.col(key_col)))
+    probe_k = probe.withColumn("__h", key_hash_udf(hash_fn)(F.col(key_col)))
     group_keys = [group_col]
     if salt is not None:
         if salt <= 0:
@@ -336,35 +337,10 @@ def grouped_might_contain_join(
             "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
         group_keys = [group_col, "__salt"]
 
-    def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=cols + [flag_col])
-        out = left[cols].copy()
-        if len(right) == 0:
-            out[flag_col] = False
-            return out
-        if len(right) > 1:
-            # ADVICE r4: probing only blob row 0 would silently drop
-            # the other filters' memberships (false negatives) — e.g.
-            # an accidental union of two builds' filter frames
-            raise ValueError(
-                f"grouped_might_contain_join: {len(right)} blob rows "
-                f"for one (group[, salt]) — the filters frame must "
-                f"carry exactly one row per group (were two builds "
-                f"unioned?)")
-        kern = CuckooProbe(bytes(right["blob"].iloc[0]))
-        if hash_fn == "xxhash64":
-            h = left["__h"].to_numpy(dtype="int64").view(np.uint64)
-            idx, tag = kern.params.split(h)
-            out[flag_col] = kern.contain_hashed(idx, tag)
-        else:
-            out[flag_col] = kern.contain(left[key_col])
-        return out
-
     return (
         probe_k.groupBy(*group_keys)
         .cogroup(blobs.groupBy(*group_keys))
-        .applyInPandas(probe_group, out_schema)
+        .applyInArrow(cogroup_prober(cols, flag_col), out_schema)
     )
 
 
@@ -391,17 +367,6 @@ def grouped_anti_join(
     cogroup above AUTO_COGROUP_GROUPS groups."""
     if via not in ("broadcast", "cogroup", "auto"):
         raise ValueError(f"unknown via {via!r}")
-    if build_kwargs.get("hash_fn", "metro64") != "metro64":
-        # the cogroup probe handles xxhash64 (JVM-side pre-hash, checked
-        # against the filters frame's recorded hash_fn); the BROADCAST
-        # probe is metro64-only, so xxhash64 routes to cogroup and an
-        # explicit via='broadcast' fails loud
-        if via == "broadcast":
-            raise ValueError(
-                "grouped_anti_join via='broadcast' probes with metro64; "
-                "use via='cogroup' (or 'auto') for an xxhash64 grouped "
-                "build")
-        via = "cogroup"
     built_here = filters is None
     if built_here:
         # materialize the internally-built filters ONCE (one tiny row

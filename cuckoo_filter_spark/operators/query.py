@@ -1,9 +1,12 @@
 """Membership queries over built filters (SURVEY.md §2.2, §3 query path).
 
 ``might_contain`` is the Contain predicate (cuckoofilter.go:178-188) as a
-vectorized pandas UDF over a broadcast blob: hashing + bucket probes are
-numpy batch ops; the decoded (unpacked) table is cached per executor
-process so each task pays decode cost at most once per blob.
+vectorized Arrow UDF over a broadcast blob: per Arrow batch the present
+keys are hashed once (``hashing.present_hashes``, no pandas) and the
+bucket probes are numpy batch ops; the probe view of each blob is cached
+per executor process so each task pays decode cost at most once per
+blob. A single filter, a sharded filter and the per-group filters
+(``operators.grouped``) share that key step and that cache.
 
 Join patterns (no false negatives ⇒ safe pruning):
 
@@ -21,71 +24,104 @@ Join patterns (no false negatives ⇒ safe pruning):
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
+from cuckoo_filter_spark.hashing import present_hashes
 from cuckoo_filter_spark.kernel.filter import CuckooProbe
 from cuckoo_filter_spark.operators.build import CuckooBuild
 
-# per-executor probe cache: broadcast id → CuckooProbe (zero-copy view of
-# the broadcast blob for byte-aligned layouts — no unpacked second copy)
-_KERNEL_CACHE: dict[int, CuckooProbe] = {}
+# per-executor probe cache: (broadcast id, route) → CuckooProbe, the
+# route being the shard (0 for a single filter) or the group — a
+# zero-copy view of the broadcast blob for byte-aligned layouts, no
+# unpacked second copy
+_PROBE_CACHE: dict[tuple, CuckooProbe] = {}
 
 
-def _cached_kernel(key: int, bcast) -> CuckooProbe:
-    kern = _KERNEL_CACHE.get(key)
+def cached_probe(bid: int, route, blob: bytes) -> CuckooProbe:
+    """This executor's probe view of ``blob``, the filter of ``route``
+    in broadcast ``bid``."""
+    key = (bid, route)
+    kern = _PROBE_CACHE.get(key)
     if kern is None:
-        if len(_KERNEL_CACHE) > 64:  # bound executor memory across builds
-            _KERNEL_CACHE.clear()
-        kern = CuckooProbe(bytes(bcast.value))
-        _KERNEL_CACHE[key] = kern
+        if len(_PROBE_CACHE) > 256:  # bound executor memory across builds
+            _PROBE_CACHE.clear()
+        kern = CuckooProbe(blob)
+        _PROBE_CACHE[key] = kern
     return kern
+
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def probe_input(hash_fn: str):
+    """(column → probe column, prehashed) for a ``hash_fn`` build — the
+    one place a probe branches on hash_fn. A metro64 probe reads the key
+    and hashes it in the UDF; an xxhash64 probe reads the JVM hash of
+    each non-NULL key, and a NULL stays NULL (``F.xxhash64(NULL)`` is
+    the seed 42, a phantom member — ``build.key_column``'s rule)."""
+    if hash_fn == "metro64":
+        return _col, False
+    if hash_fn == "xxhash64":
+        return (lambda c: F.when(_col(c).isNotNull(), F.xxhash64(_col(c))),
+                True)
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
+def key_hash_udf(hash_fn: str):
+    """``f(col) -> bigint Column``: the 64-bit hash of each present key
+    of a ``hash_fn`` build, NULL for a missing key — the routing and
+    probe input of the cogroup probes and the sharded delete."""
+    to_col, prehashed = probe_input(hash_fn)
+
+    @arrow_udf("bigint")
+    def key_hash(keys: pa.Array) -> pa.Array:
+        present, h = present_hashes(keys, prehashed)
+        out = np.zeros(len(present), dtype=np.int64)
+        out[present] = h.view(np.int64)
+        return pa.array(out, mask=~present)
+
+    return lambda col: key_hash(to_col(col))
 
 
 def might_contain_udf(spark, build: "CuckooBuild | bytes"):
     """Returns ``f(col) -> boolean Column`` probing the filter with the
-    same hash_fn the build used. For xxhash64 builds the hash runs
-    JVM-side (whole-stage codegen) and the UDF only splits/probes.
+    same hash_fn the build used (raw blob bytes are taken as metro64).
+    For xxhash64 builds the hash runs JVM-side (whole-stage codegen) and
+    the UDF only splits/probes. Missing (NULL/NaN) keys answer False.
 
     Accepts a ShardedCuckooBuild too (what build_cuckoo_filter returns
-    when the key count crosses its auto-shard threshold) — probes then
-    route by shard inside the UDF, same call shape."""
+    when the key count crosses its auto-shard threshold): probes then
+    route by shard inside the UDF, same call shape. A single filter is
+    the one-shard case, ``{0: blob}``. For metro64 the result is the
+    Arrow UDF itself, so it registers as a SQL function."""
     from cuckoo_filter_spark.operators.sharded import (
         ShardedCuckooBuild,
-        sharded_might_contain_udf,
+        _probe_sharded,
     )
 
     if isinstance(build, ShardedCuckooBuild):
-        return sharded_might_contain_udf(spark, build)
-    blob = build.blob if isinstance(build, CuckooBuild) else build
-    hash_fn = build.hash_fn if isinstance(build, CuckooBuild) else "metro64"
-    bcast = spark.sparkContext.broadcast(blob)
+        blobs = build.load_blobs(spark) if build.path else build.blobs
+        num_shards = build.num_shards
+    else:
+        blobs = {0: build.blob if isinstance(build, CuckooBuild) else build}
+        num_shards = 1
+    to_col, prehashed = probe_input(getattr(build, "hash_fn", "metro64"))
+    bcast = spark.sparkContext.broadcast(blobs)
     bid = bcast._jbroadcast.id()  # capture on driver; keys the executor cache
 
-    if hash_fn == "xxhash64":
-        import numpy as np
+    @arrow_udf("boolean")
+    def might_contain(keys: pa.Array) -> pa.Array:
+        present, h = present_hashes(keys, prehashed)
+        out = np.zeros(len(present), dtype=bool)
+        out[present] = _probe_sharded(h, bcast.value, num_shards, bid)
+        return pa.array(out)
 
-        @pandas_udf("boolean")
-        def probe_hashed(h: pd.Series) -> pd.Series:
-            kern = _cached_kernel(bid, bcast)
-            hv = h.to_numpy(dtype="int64").view(np.uint64)
-            # layout-aware split: a vacuum build indexes by modulo, and
-            # the pow2 mask would probe the wrong buckets (silent FNs)
-            idx, tag = kern.params.split(hv)
-            return pd.Series(kern.contain_hashed(idx, tag))
-
-        def might_contain(col):
-            c = F.col(col) if isinstance(col, str) else col
-            return probe_hashed(F.xxhash64(c))
-
-        return might_contain
-
-    @pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
-        kern = _cached_kernel(bid, bcast)
-        return pd.Series(kern.contain(keys))
-
+    if prehashed:
+        return lambda col: might_contain(to_col(col))
     return might_contain
 
 
@@ -93,22 +129,10 @@ def register_might_contain(spark, name: str, build: "CuckooBuild | bytes") -> No
     """Register the membership predicate as a SQL function, so pure-SQL
     pipelines can use it: ``SELECT * FROM t WHERE <name>(url)``.
     Accepts a ShardedCuckooBuild (what build_cuckoo_filter returns past
-    its auto-shard threshold) — its metro64 probe is itself a pandas
-    UDF and registers the same way."""
-    from cuckoo_filter_spark.operators.sharded import (
-        ShardedCuckooBuild,
-        sharded_might_contain_udf,
-    )
-
-    hash_fn = getattr(build, "hash_fn", "metro64")
-    if hash_fn != "metro64":
+    its auto-shard threshold) the same way."""
+    if getattr(build, "hash_fn", "metro64") != "metro64":
         raise ValueError("SQL registration supports metro64 builds "
                          "(xxhash64 probes compose a JVM expression)")
-    if isinstance(build, ShardedCuckooBuild):
-        spark.udf.register(name, sharded_might_contain_udf(spark, build))
-        return
-    # the metro64 branch of might_contain_udf IS the registerable pandas
-    # UDF (one definition of the probe + executor cache logic)
     spark.udf.register(name, might_contain_udf(spark, build))
 
 

@@ -19,10 +19,11 @@ sharded build keeps everything distributed:
   (:func:`combine_shards`). Shuffle volume is 8 bytes/key regardless of
   table size.
 * query: with a modest shard count the blobs are collected + broadcast
-  and probes route by shard inside the UDF; at full scale use
-  ``sharded_might_contain_join`` which co-partitions the probe side with
-  the blob rows instead of broadcasting (one shuffle of the probe keys,
-  no driver materialization).
+  and probes route by shard inside the Arrow probe UDF
+  (``query.might_contain_udf``); at full scale use
+  ``sharded_might_contain_join``, which co-partitions the probe side's
+  key hashes with the blob rows instead of broadcasting (one shuffle of
+  the probe rows, applyInArrow per shard, no driver materialization).
 
 Each shard is an independent reference-layout filter (§1.5 bytes), so
 all single-filter semantics (merge, delete, serialization, FP bounds)
@@ -38,8 +39,9 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import metro64_batch, present_hashes
 from cuckoo_filter_spark.kernel.filter import CuckooKernel, CuckooProbe
 from cuckoo_filter_spark.operators.build import (
     DEFAULT_HEADROOM,
@@ -50,11 +52,16 @@ from cuckoo_filter_spark.operators.build import (
     pack_pairs,
     unpack_pairs,
 )
+from cuckoo_filter_spark.operators.query import (
+    cached_probe,
+    key_hash_udf,
+    might_contain_udf,
+)
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
 #: one row per (source partition, shard) of the pair-blob frame
 PAIRS_ROW = pa.schema([
-    ("shard", pa.int32()), ("src_partition", pa.int32()), ("n", pa.int64()),
+    ("shard", pa.int32()), ("src_partition", pa.int32()),
     ("rows", pa.int64()), ("distinct_keys", pa.int64()),
     ("blob", pa.binary()),
 ])
@@ -97,7 +104,9 @@ def check_shard_format(shards_df, where: str) -> None:
 def iter_shard_groups(shards: np.ndarray):
     """Group row indices by shard id (stable within a shard): yields
     (shard, row_indices). One stable integer argsort + boundary scan —
-    the shared grouping used by the shard split and the probe router."""
+    the shared grouping used by the shard split and the probe routers."""
+    if len(shards) == 0:
+        return
     order = np.argsort(shards, kind="stable")
     ss = shards[order]
     bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
@@ -178,52 +187,39 @@ class ShardedCuckooBuild:
         out = np.zeros(len(notna), dtype=bool)
         if len(nn):
             out[notna] = _probe_sharded(
-                metro64_batch(nn), self.blobs, self.params, self.num_shards)
+                metro64_batch(nn), self.blobs, self.num_shards)
         return out
 
     def contain_hashed64(self, h: np.ndarray) -> np.ndarray:
-        return _probe_sharded(h.astype(np.uint64), self.blobs, self.params,
+        return _probe_sharded(h.astype(np.uint64), self.blobs,
                               self.num_shards)
 
 
-_SHARD_KERNEL_CACHE: dict[tuple, CuckooProbe] = {}
-
-
-def _probe_sharded(
-    h: np.ndarray, blobs: dict[int, bytes], params: CuckooParams, num_shards: int,
-    cache_key=None,
-) -> np.ndarray:
+def _probe_sharded(h: np.ndarray, blobs: dict[int, bytes], num_shards: int,
+                   cache_key=None) -> np.ndarray:
+    """Flags of hashes ``h``: each routes to its shard's blob and
+    splits with that blob's own params (a vacuum build indexes by
+    modulo; the pow2 mask would probe the wrong buckets). With
+    ``cache_key`` (a broadcast id) the probe views come from the
+    executor cache."""
     out = np.zeros(len(h), dtype=bool)
-    if len(h) == 0:
-        return out
-    shards = shard_of(h, num_shards)
-    for s, rows in iter_shard_groups(shards):
+    for s, rows in iter_shard_groups(shard_of(h, num_shards)):
         blob = blobs.get(s)
         if blob is None:
             continue
-        if cache_key is not None:
-            ck = (cache_key, s)
-            kern = _SHARD_KERNEL_CACHE.get(ck)
-            if kern is None:
-                if len(_SHARD_KERNEL_CACHE) > 256:  # bound executor memory
-                    _SHARD_KERNEL_CACHE.clear()
-                kern = CuckooProbe(bytes(blob))
-                _SHARD_KERNEL_CACHE[ck] = kern
-        else:
-            kern = CuckooProbe(bytes(blob))
-        idx, tag = params.split(h[rows])
-        out[rows] = kern.contain_hashed(idx, tag)
+        kern = (CuckooProbe(bytes(blob)) if cache_key is None
+                else cached_probe(cache_key, s, blob))
+        out[rows] = kern.contain_hashed(*kern.params.split(h[rows]))
     return out
 
 
 def shard_pair_blobs(params: CuckooParams, h: np.ndarray, num_shards: int,
-                     unique: bool) -> list[tuple[int, int, int, bytes]]:
+                     unique: bool) -> list[tuple[int, int, bytes]]:
     """One partition's hashes split by shard into packed (bucket, tag)
-    pair blobs: ``[(shard, rows, pairs, blob)]`` in shard order, rows in
-    scan order within a shard, canon-deduped per shard in unique modes
-    (``rows`` counts the shard's hashes before that dedupe, ``pairs``
-    after). THE shard split of the sharded, checkpointed and auto-shard
-    routes."""
+    pair blobs: ``[(shard, rows, blob)]`` in shard order, rows in scan
+    order within a shard, canon-deduped per shard in unique modes
+    (``rows`` counts the shard's hashes before that dedupe). THE shard
+    split of the sharded, checkpointed and auto-shard routes."""
     if len(h) == 0:
         return []
     idx, tag = params.split(h)
@@ -232,20 +228,20 @@ def shard_pair_blobs(params: CuckooParams, h: np.ndarray, num_shards: int,
         bi, tg = idx[rs], tag[rs]
         if unique:
             bi, tg = canon_dedupe_pairs(params, bi, tg)
-        out.append((s, len(rs), len(bi), pack_pairs(bi, tg)))
+        out.append((s, len(rs), pack_pairs(bi, tg)))
     return out
 
 
-def pairs_batch(pid: int, groups: list[tuple[int, int, int, bytes]],
+def pairs_batch(pid: int, groups: list[tuple[int, int, bytes]],
                 dk_by_shard: dict[int, int] | None = None) -> pa.RecordBatch:
     """``PAIRS_ROW`` rows of one source partition: its
     ``shard_pair_blobs`` groups and per-shard raw-key counts when they
     were computed (else NULL)."""
     dk = dk_by_shard or {}
     return pa.RecordBatch.from_pylist(
-        [{"shard": s, "src_partition": pid, "n": n, "rows": rows,
+        [{"shard": s, "src_partition": pid, "rows": rows,
           "distinct_keys": dk.get(s), "blob": blob}
-         for s, rows, n, blob in groups], schema=PAIRS_ROW)
+         for s, rows, blob in groups], schema=PAIRS_ROW)
 
 
 def _shard_finisher(params: CuckooParams, num_shards: int, unique: bool):
@@ -411,25 +407,30 @@ def load_sharded_blobs(spark, path: str) -> dict[int, bytes]:
     return {int(r["shard"]): bytes(r["blob"]) for r in rows}
 
 
-def _shard_udf(num_shards: int):
-    """pandas UDF ``shard_udf``: each metro64 key's shard id, for the
-    cogroup probe and delete. NULL keys route to shard 0 (any shard
-    works: the probe answers False and the delete is a no-op for them)
-    instead of crashing the hash; integral dtype is restored for
-    null-bearing batches."""
-    from pyspark.sql.functions import pandas_udf
+def cogroup_prober(cols: list[str], flag_col: str):
+    """The applyInArrow body of the cogroup probes (by shard here, by
+    group in ``grouped.grouped_might_contain_join``): one cogroup key's
+    probe rows, carrying ``__h`` from ``query.key_hash_udf``, against its
+    one blob row. ``cols`` plus a boolean ``flag_col`` come out; a key
+    with no blob row, or a missing probe key (NULL ``__h``), answers
+    False."""
 
-    @pandas_udf("int")
-    def shard_udf(keys: pd.Series) -> pd.Series:
-        from cuckoo_filter_spark.hashing import key_mask_and_values
+    def probe_group(key, left: pa.Table, right: pa.Table) -> pa.Table:
+        flags = np.zeros(left.num_rows, dtype=bool)
+        if left.num_rows and right.num_rows > 1:
+            # probing only blob row 0 would silently miss every key
+            # stored in the other blob (false negatives)
+            raise ValueError(
+                f"cogroup key {[k.as_py() for k in key]} has "
+                f"{right.num_rows} blob rows — duplicate rows per "
+                f"shard/group (were two builds' frames unioned?)")
+        if left.num_rows and right.num_rows:
+            kern = CuckooProbe(right["blob"][0].as_py())
+            present, h = present_hashes(left["__h"], prehashed=True)
+            flags[present] = kern.contain_hashed(*kern.params.split(h))
+        return left.select(cols).append_column(flag_col, pa.array(flags))
 
-        nn, notna = key_mask_and_values(keys)
-        out = np.zeros(len(notna), dtype=np.int32)
-        if len(nn):
-            out[notna] = shard_of(metro64_batch(nn), num_shards)
-        return pd.Series(out)
-
-    return shard_udf
+    return probe_group
 
 
 def sharded_might_contain_join(
@@ -460,10 +461,6 @@ def sharded_might_contain_join(
         # stale pre-r5 artifact (silent false negatives if probed)
         check_shard_format(shards_df, "sharded_might_contain_join")
         shards_df = shards_df.select("shard", "blob")
-    params = build.params
-    num_shards = build.num_shards
-    hash_fn = build.hash_fn
-
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     cols = probe.columns
@@ -474,59 +471,24 @@ def sharded_might_contain_join(
     out_schema = StructType(list(probe.schema.fields)
                             + [StructField(flag_col, BooleanType())])
 
-    if hash_fn == "xxhash64":
-        withsh = probe.withColumn("__h", F.xxhash64(F.col(key_col)))
-        probe_sh = withsh.withColumn(
-            "__shard", _shard_expr_jvm(F.col("__h"), num_shards))
-    else:
-        probe_sh = probe.withColumn(
-            "__shard", _shard_udf(num_shards)(F.col(key_col)))
-
-    def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=cols + [flag_col])
-        if len(right) == 0:
-            out = left[cols].copy()
-            out[flag_col] = False
-            return out
-        if len(right) > 1:
-            # same guard as the grouped probes: probing only iloc[0]
-            # would silently miss every key stored in the other blob
-            # (false negatives)
-            raise ValueError(
-                f"shard {int(right['__shard'].iloc[0])} has {len(right)} "
-                f"blob rows — duplicate rows per shard (were two builds' "
-                f"frames unioned?)")
-        kern = CuckooProbe(bytes(right["blob"].iloc[0]))
-        out = left[cols].copy()
-        if hash_fn == "xxhash64":
-            h = left["__h"].to_numpy(dtype="int64").view(np.uint64)
-            idx, tag = params.split(h)
-            out[flag_col] = kern.contain_hashed(idx, tag)
-        else:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
-            # NULL probe keys answer False; dtype-canonicalized
-            nn, notna = key_mask_and_values(left[key_col])
-            flags = np.zeros(len(notna), dtype=bool)
-            if len(nn):
-                idx, tag = params.split(metro64_batch(nn))
-                flags[notna] = kern.contain_hashed(idx, tag)
-            out[flag_col] = flags
-        return out
-
+    probe_sh = probe.withColumn(
+        "__h", key_hash_udf(build.hash_fn)(F.col(key_col)))
+    probe_sh = probe_sh.withColumn(
+        "__shard", _shard_expr_jvm(F.col("__h"), build.num_shards))
     blobs_sh = shards_df.withColumnRenamed("shard", "__shard")
     return (
         probe_sh.groupBy("__shard")
         .cogroup(blobs_sh.groupBy("__shard"))
-        .applyInPandas(probe_group, out_schema)
+        .applyInArrow(cogroup_prober(cols, flag_col), out_schema)
     )
 
 
-DELETE_SCHEMA = (
-    "shard int, requested bigint, deleted bigint, victim_used boolean, "
-    "blob binary, format_version int"
-)
+#: one row per shard of the sharded delete
+DELETE_ROW = pa.schema([
+    ("shard", pa.int32()), ("requested", pa.int64()), ("deleted", pa.int64()),
+    ("victim_used", pa.bool_()), ("blob", pa.binary()),
+    ("format_version", pa.int32()),
+])
 
 
 def sharded_delete(
@@ -542,7 +504,7 @@ def sharded_delete(
     The delete keys are cogrouped with the shard blob rows by shard id,
     so each task rewrites exactly ONE shard kernel — delete keys never
     pass through the driver and no blob is broadcast. One shuffle of
-    (hash/key, shard) rows; per-shard deletes run in parallel on
+    (hash, shard) rows; per-shard deletes run in parallel on
     executors. The build should be mode='multiset' (reference semantics:
     Delete removes one stored copy per call; a deduped membership build
     would make the second delete of a colliding key fail).
@@ -570,63 +532,45 @@ def sharded_delete(
         # probe join — legit producers always stamp format_version
         check_shard_format(shards_df, "sharded_delete")
         shards_df = shards_df.select("shard", "blob")
-    params = build.params
-    num_shards = build.num_shards
-    hash_fn = build.hash_fn
+    keyed = keys_df.select(
+        key_hash_udf(build.hash_fn)(F.col(key_col)).alias("__h"))
+    keyed = keyed.withColumn(
+        "__shard", _shard_expr_jvm(F.col("__h"), build.num_shards))
 
-    if hash_fn == "xxhash64":
-        keyed = keys_df.select(F.xxhash64(F.col(key_col)).alias("__h"))
-        keyed = keyed.withColumn("__shard", _shard_expr_jvm(F.col("__h"), num_shards))
-    else:
-        keyed = keys_df.select(F.col(key_col)).withColumn(
-            "__shard", _shard_udf(num_shards)(F.col(key_col)))
+    def delete_group(left: pa.Table, right: pa.Table) -> pa.Table:
+        def row(shard, deleted=0, victim_used=False, blob=None):
+            return pa.Table.from_pylist([{
+                "shard": shard, "requested": left.num_rows,
+                "deleted": deleted, "victim_used": victim_used,
+                "blob": blob, "format_version": SHARD_FORMAT_VERSION,
+            }], schema=DELETE_ROW)
 
-    def delete_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(right) == 0:
+        if right.num_rows == 0:
             # keys routed to a shard that was never built: nothing stored
             # there, so nothing deletes (reference Delete returns false)
-            shard = int(left["__shard"].iloc[0])
-            return pd.DataFrame(
-                {"shard": [shard], "requested": [len(left)], "deleted": [0],
-                 "victim_used": [False], "blob": [None],
-                 "format_version": [SHARD_FORMAT_VERSION]})
-        if len(right) > 1:
-            # rewriting only iloc[0] would drop the other blob from the
-            # output artifact — permanent data loss
+            return row(left["__shard"][0].as_py())
+        shard = right["__shard"][0].as_py()
+        if right.num_rows > 1:
+            # rewriting only blob row 0 would drop the other blob from
+            # the output artifact — permanent data loss
             raise ValueError(
-                f"shard {int(right['__shard'].iloc[0])} has {len(right)} "
-                f"blob rows — duplicate rows per shard (were two builds' "
-                f"frames unioned?)")
-        shard = int(right["__shard"].iloc[0])
-        blob = bytes(right["blob"].iloc[0])
-        if len(left) == 0:  # untouched shard passes through unchanged
-            return pd.DataFrame(
-                {"shard": [shard], "requested": [0], "deleted": [0],
-                 "victim_used": [False], "blob": [blob],
-                 "format_version": [SHARD_FORMAT_VERSION]})
+                f"shard {shard} has {right.num_rows} blob rows — duplicate "
+                f"rows per shard (were two builds' frames unioned?)")
+        blob = right["blob"][0].as_py()
+        if left.num_rows == 0:  # untouched shard passes through unchanged
+            return row(shard, blob=blob)
         kern = CuckooKernel.from_bytes(blob)
-        if hash_fn == "xxhash64":
-            h = left["__h"].to_numpy(dtype="int64").view(np.uint64)
-        else:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
-            # NULL delete requests are no-ops (nothing is stored under
-            # NULL) — and must not crash/alias the hash
-            nn, _ = key_mask_and_values(left[key_col])
-            h = metro64_batch(nn) if len(nn) else np.zeros(0, dtype=np.uint64)
-        idx, tag = params.split(h)
-        ok = kern.delete_hashed(idx, tag)
-        return pd.DataFrame(
-            {"shard": [shard], "requested": [len(left)],
-             "deleted": [int(ok.sum())], "victim_used": [kern.victim_used],
-             "blob": [kern.to_bytes()],
-             "format_version": [SHARD_FORMAT_VERSION]})
+        # NULL delete requests (NULL __h) are no-ops: nothing is stored
+        # under NULL
+        _, h = present_hashes(left["__h"], prehashed=True)
+        ok = kern.delete_hashed(*kern.params.split(h))
+        return row(shard, int(ok.sum()), kern.victim_used, kern.to_bytes())
 
     blobs_sh = shards_df.withColumnRenamed("shard", "__shard")
     updated = (
         keyed.groupBy("__shard")
         .cogroup(blobs_sh.groupBy("__shard"))
-        .applyInPandas(delete_group, DELETE_SCHEMA)
+        .applyInArrow(delete_group, from_arrow_schema(DELETE_ROW))
     )
 
     if output_path is not None:
@@ -649,47 +593,12 @@ def sharded_delete(
         for r in mrows
     ]
     return ShardedCuckooBuild(
-        params=params, num_shards=num_shards, blobs=blobs, metrics=metrics,
-        path=output_path, hash_fn=hash_fn,
+        params=build.params, num_shards=build.num_shards, blobs=blobs,
+        metrics=metrics, path=output_path, hash_fn=build.hash_fn,
     )
 
 
 def sharded_might_contain_udf(spark, build: ShardedCuckooBuild):
-    """Broadcast probe: hash once, route by shard, probe per shard.
-    Uses the build's hash_fn (xxhash64 hashes JVM-side)."""
-    blobs = build.load_blobs(spark) if build.path else build.blobs
-    bcast = spark.sparkContext.broadcast(blobs)
-    bid = bcast._jbroadcast.id()
-    params = build.params
-    num_shards = build.num_shards
-    from pyspark.sql.functions import pandas_udf
-
-    if build.hash_fn == "xxhash64":
-
-        @pandas_udf("boolean")
-        def probe_hashed(h: pd.Series) -> pd.Series:
-            hv = h.to_numpy(dtype="int64").view(np.uint64)
-            return pd.Series(
-                _probe_sharded(hv, bcast.value, params, num_shards, cache_key=bid)
-            )
-
-        def might_contain(col):
-            c = F.col(col) if isinstance(col, str) else col
-            return probe_hashed(F.xxhash64(c))
-
-        return might_contain
-
-    @pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
-        from cuckoo_filter_spark.hashing import key_mask_and_values
-
-        # NULL probe keys answer False; dtype-canonicalized
-        nn, notna = key_mask_and_values(keys)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            out[notna] = _probe_sharded(
-                metro64_batch(nn), bcast.value, params, num_shards,
-                cache_key=bid)
-        return pd.Series(out)
-
-    return might_contain
+    """Broadcast probe: hash once, route by shard, probe per shard —
+    ``query.might_contain_udf``, which takes sharded builds too."""
+    return might_contain_udf(spark, build)

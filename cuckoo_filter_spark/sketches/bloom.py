@@ -14,8 +14,9 @@ import struct
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import metro64_batch, present_hashes
 
 _MAGIC = b"BLM1"
 
@@ -108,29 +109,29 @@ def bloom_might_contain_udf(spark, sketch: "BloomSketch | bytes"):
     """Broadcast Bloom membership predicate: ``f(col) -> boolean
     Column`` (no false negatives ⇒ safe semi-join pruning, same
     prune-then-verify pattern as the cuckoo ``might_contain_udf``).
+    An Arrow UDF with the cuckoo probes' key step
+    (``hashing.present_hashes``): missing (NULL/NaN) keys answer False.
     The decoded sketch is cached per executor process."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     blob = sketch.to_bytes() if isinstance(sketch, BloomSketch) else sketch
     bcast = spark.sparkContext.broadcast(blob)
     bid = bcast._jbroadcast.id()
 
-    @pandas_udf("boolean")
-    def probe(keys: pd.Series) -> pd.Series:
+    @arrow_udf("boolean")
+    def probe(keys: pa.Array) -> pa.Array:
         sk = _BLOOM_CACHE.get(bid)
         if sk is None:
             if len(_BLOOM_CACHE) > 64:
                 _BLOOM_CACHE.clear()
             sk = BloomSketch.from_bytes(bytes(bcast.value))
             _BLOOM_CACHE[bid] = sk
-        return pd.Series(sk.contains(keys))
+        present, h = present_hashes(keys)
+        out = np.zeros(len(present), dtype=bool)
+        out[present] = sk.contains_hashed(h)
+        return pa.array(out)
 
-    def might_contain(col):
-        c = F.col(col) if isinstance(col, str) else col
-        return probe(c)
-
-    return might_contain
+    return probe
 
 
 #: Refuse single-filter Bloom builds whose geometry exceeds this many
@@ -199,18 +200,12 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
             lambda: BloomSketch(capacity=max(capacity_hint, 64), fpp=fpp))
 
     def hasher(batches):
-        import pyarrow as pa
-
-        from cuckoo_filter_spark.hashing import arrow_key_hashes
-        from cuckoo_filter_spark.sketches.base import drop_missing
-
         for batch in batches:
             # same NULL exclusion and key identity as the keys partial
-            vals = drop_missing(batch.column(0))
-            if len(vals):
+            _, h = present_hashes(batch.column(0))
+            if len(h):
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(arrow_key_hashes(vals).view(np.int64))],
-                    names=["h"])
+                    [pa.array(h.view(np.int64))], names=["h"])
 
     hashed = df.select(key_col).mapInArrow(hasher, "h bigint").localCheckpoint(
         eager=False)  # lazy: the count below materializes it (one job,

@@ -144,9 +144,9 @@ def main() -> None:
     probed = sharded_might_contain_join(
         li.select("l_partkey"), "l_partkey", build, shards_df=shards_df)
     p = plan_of(probed)
-    ok = ("FlatMapCoGroupsInPandas" in p
+    ok = ("FlatMapCoGroupsInArrow" in p
           and "BroadcastExchange" not in p)
-    sections.append(("sharded cogroup probe: FlatMapCoGroupsInPandas, "
+    sections.append(("sharded cogroup probe: FlatMapCoGroupsInArrow, "
                      "no blob broadcast", ok, p))
 
     # 7. anti join: definite non-members bypass (Union of the bypass

@@ -1,8 +1,8 @@
 """The Arrow-batch cuckoo build partial (``operators.build.key_partials``):
 the deferred route's blob equals a driver-side reference build over
 every key type, and a bigint column with NULL-bearing batches keeps
-its identity beyond 2^53 on every build route. The ``typed_df``
-fixture lives in conftest.py."""
+its identity beyond 2^53 on every build route and every probe. The
+``typed_df`` fixture lives in conftest.py."""
 
 import numpy as np
 import pandas as pd
@@ -50,11 +50,13 @@ def test_cuckoo_builds_keep_big_int_identity(spark):
     """A bigint key column whose null-bearing batches hold values beyond
     2^53: Arrow keeps int64 plus a validity bitmap, so the deferred,
     declared-capacity and sharded builds store every one of the 180
-    keys under its int64 hash. The pandas probe UDF still sees float64
-    batches and raises."""
+    keys under its int64 hash, and the Arrow probes (single and sharded
+    UDF, sharded cogroup join) find every one of them."""
     from cuckoo_filter_spark.operators.query import might_contain_udf
     from cuckoo_filter_spark.operators.sharded import (
+        SHARD_FORMAT_VERSION,
         build_sharded_cuckoo_filter,
+        sharded_might_contain_join,
     )
 
     big = spark.range(0, 360, 1, 2).select(
@@ -72,5 +74,13 @@ def test_cuckoo_builds_keep_big_int_identity(spark):
     assert sharded.contain_hashed64(h).all()
     assert sharded.size == 180
 
-    with pytest.raises(PythonException, match="2\\^53"):
-        big.select(might_contain_udf(spark, deferred)(F.col("key"))).collect()
+    present = big.where(F.col("key").isNotNull())
+    for b in (deferred, sharded):
+        assert present.where(
+            might_contain_udf(spark, b)(F.col("key"))).count() == 180
+    frame = spark.createDataFrame(
+        [(s, bytearray(b), SHARD_FORMAT_VERSION)
+         for s, b in sharded.blobs.items()],
+        "shard int, blob binary, format_version int")
+    joined = sharded_might_contain_join(big, "key", sharded, shards_df=frame)
+    assert joined.where(F.col("might_contain")).count() == 180

@@ -172,21 +172,36 @@ def test_grouped_filters_xxhash_counts(spark, docs):
 
 
 def test_grouped_anti_join_rejects_xxhash64(spark, docs):
+    """A filters frame that mixes xxhash64 groups with metro64 groups has
+    no one probe hash: both probe routes reject it instead of probing
+    half the groups with the wrong hash (false negatives)."""
+    langs = sorted(r[0] for r in docs.select("lang").distinct().collect())
+    assert len(langs) >= 2
+    head = F.col("lang") == langs[0]
     seen = docs.where(F.col("doc_id") < 100)
-    with pytest.raises(ValueError, match="metro64"):
-        grouped_anti_join(docs, "lang", "text", seen, hash_fn="xxhash64")
+    mixed = build_grouped_filters(
+        docs.where(head), "lang", "text", hash_fn="xxhash64").unionByName(
+        build_grouped_filters(docs.where(~head), "lang", "text"))
+    for via in ("broadcast", "cogroup"):
+        with pytest.raises(ValueError, match="mixes hash_fns"):
+            grouped_anti_join(docs, "lang", "text", seen, filters=mixed,
+                              via=via)
 
 
-def test_grouped_probe_rejects_prebuilt_xxhash_filters(spark, docs):
-    """The filters frame records hash_fn, so even PREBUILT xxhash64
-    filters passed via filters= are rejected instead of silently missing
-    every member."""
+def test_grouped_probe_reads_prebuilt_xxhash_filters(spark, docs):
+    """The filters frame records hash_fn, so the broadcast probe of
+    PREBUILT xxhash64 filters passed via filters= hashes like the build
+    (no false negatives) and the anti join stays exact."""
     filters = build_grouped_filters(docs, "lang", "text", hash_fn="xxhash64")
-    with pytest.raises(ValueError, match="metro64"):
-        grouped_might_contain_udf(spark, filters)
+    mc = grouped_might_contain_udf(spark, filters)
+    assert docs.where(~mc("lang", "text")).count() == 0
     seen = docs.where(F.col("doc_id") < 100)
-    with pytest.raises(ValueError, match="metro64"):
-        grouped_anti_join(docs, "lang", "text", seen, filters=filters)
+    sfilters = build_grouped_filters(seen, "lang", "text", hash_fn="xxhash64")
+    want = docs.join(
+        seen.select("lang", "text").dropDuplicates(["lang", "text"]),
+        on=["lang", "text"], how="left_anti").count()
+    assert grouped_anti_join(docs, "lang", "text", seen,
+                             filters=sfilters).count() == want
 
 
 def test_grouped_cogroup_join_rejects_duplicate_blob_rows(spark):
@@ -238,10 +253,8 @@ def test_grouped_build_xxhash64_excludes_null_keys(spark):
 
 
 def test_grouped_anti_join_xxhash64_routes_to_cogroup(spark):
-    """xxhash64 grouped builds work through the cogroup probe; only the
-    broadcast probe is metro64-only (fails loud)."""
-    import pytest
-
+    """xxhash64 grouped builds work through the cogroup and the
+    broadcast probe alike: both read the recorded hash_fn."""
     from cuckoo_filter_spark.operators.grouped import grouped_anti_join
 
     seen = spark.createDataFrame(
@@ -251,13 +264,14 @@ def test_grouped_anti_join_xxhash64_routes_to_cogroup(spark):
     out = grouped_anti_join(probe, "g", "key", seen, via="cogroup",
                             hash_fn="xxhash64")
     assert {r["key"] for r in out.collect()} == {f"k{i}" for i in range(50, 60)}
-    # auto with xxhash64 silently routes to cogroup too
+    # auto picks the route by group count alone
     out2 = grouped_anti_join(probe, "g", "key", seen, via="auto",
                              hash_fn="xxhash64")
     assert out2.count() == 10
-    with pytest.raises(ValueError, match="broadcast"):
-        grouped_anti_join(probe, "g", "key", seen, via="broadcast",
-                          hash_fn="xxhash64")
+    out3 = grouped_anti_join(probe, "g", "key", seen, via="broadcast",
+                             hash_fn="xxhash64")
+    assert sorted(r["key"] for r in out3.collect()) == sorted(
+        r["key"] for r in out.collect())
 
 
 def test_grouped_probe_null_group_parity(spark):
