@@ -294,6 +294,15 @@ def arrow_key_hashes(arr, seed: int = DEFAULT_SEED) -> np.ndarray:
     return metro64_flat(*to_flat_bytes(arr), seed)
 
 
+def present_mask(arr) -> np.ndarray:
+    """bool mask of the present (not NULL, not NaN) slots of an Arrow
+    key array: the missing-key rule of :func:`present_hashes`."""
+    import pyarrow.compute as pc
+
+    return pc.invert(pc.is_null(arr, nan_is_null=True)).to_numpy(
+        zero_copy_only=False)
+
+
 def present_hashes(arr, prehashed: bool = False) -> tuple[np.ndarray, np.ndarray]:
     """(present mask, uint64 hashes of the present keys) of one Arrow key
     batch — THE per-batch key step of every cuckoo build partial and
@@ -306,13 +315,11 @@ def present_hashes(arr, prehashed: bool = False) -> tuple[np.ndarray, np.ndarray
     column already holds a JVM 64-bit hash such as ``F.xxhash64``), are
     viewed as uint64."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    present = pc.invert(pc.is_null(arr, nan_is_null=True))
-    mask = present.to_numpy(zero_copy_only=False)
-    keys = arr if mask.all() else arr.filter(present)
+    mask = present_mask(arr)
+    keys = arr if mask.all() else arr.filter(pa.array(mask))
     if prehashed:
         return mask, np.asarray(keys.to_numpy(zero_copy_only=False),
                                 dtype=np.int64).view(np.uint64)

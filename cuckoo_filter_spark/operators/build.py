@@ -42,10 +42,9 @@ from dataclasses import dataclass, field
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
-from cuckoo_filter_spark.hashing import metro64_batch, present_hashes
+from cuckoo_filter_spark.hashing import present_hashes
 from cuckoo_filter_spark.kernel.filter import CuckooKernel
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
@@ -135,70 +134,18 @@ class CuckooBuild:
         )
 
 
-class DistinctAccum:
-    """Vectorized exact distinct accumulator over pandas Series OR
-    DataFrames — replaces the per-row Python ``set.update(tolist())``
-    pattern (hash-based pandas dedupe, no per-row object churn).
-    With dropna=True (default, Series key columns): COUNT(DISTINCT)
-    semantics — nulls and NaN are dropped, so a float-NaN key can never
-    inflate the count (NaN != NaN made Python sets accumulate one entry
-    per NaN batch). Frame inputs (e.g. (group, key) pairs, where null
-    GROUPS must survive) pass dropna=False and filter nulls themselves.
-
-    Memory: holds the partition's distinct values. Consolidation is
-    amortized-linear: new batches buffer until the buffered volume
-    reaches max(threshold, size of the consolidated base) — a fixed
-    threshold alone would re-dedupe the whole base on EVERY batch once
-    the base outgrew it (quadratic at 10^7+ distinct keys/partition).
-    ONE definition of this policy — grouped._partial_emitter shares it."""
-
-    __slots__ = ("_parts", "_pending", "_base_len", "_dropna")
-    _CONSOLIDATE_AT = 4_000_000
-
-    def __init__(self, dropna: bool = True) -> None:
-        self._parts: list = []
-        self._pending = 0  # buffered rows NOT yet in the consolidated base
-        self._base_len = 0
-        self._dropna = dropna
-
-    def add(self, keys) -> None:
-        u = (keys.dropna() if self._dropna else keys).drop_duplicates()
-        if len(u) == 0:
-            return
-        self._parts.append(u)
-        self._pending += len(u)
-        if self._pending >= max(self._CONSOLIDATE_AT, self._base_len):
-            self._consolidate()
-
-    def _consolidate(self) -> None:
-        if len(self._parts) > 1 or self._pending:
-            self._parts = [
-                pd.concat(self._parts, ignore_index=True).drop_duplicates()]
-            self._base_len = len(self._parts[0])
-            self._pending = 0
-
-    def consolidated(self):
-        """The deduped accumulation (Series or DataFrame; empty Series
-        when nothing was added)."""
-        self._consolidate()
-        return self._parts[0] if self._parts else pd.Series(dtype=object)
-
-    def __len__(self) -> int:
-        self._consolidate()
-        return self._base_len
-
-
-# per-partition key budget for count_distinct_exact's in-memory
-# DistinctAccum (raw keys, no spill): ~20M URL-sized keys ≈ 1-3 GB of
-# pandas string storage — safely inside one executor task's memory.
+# per-partition key budget for count_distinct_exact's in-memory raw-key
+# distinct (``sketches.base.DistinctRows``, no spill): ~20M URL-sized
+# keys ≈ 1-3 GB of Arrow string storage — safely inside one executor
+# task's memory.
 # Mirrors _choose_num_shards' ~8M-keys-per-shard sizing rule.
 KEYS_PER_COUNT_PARTITION = 20_000_000
 
 
 def choose_count_partitions(default_parallelism: int, est_rows: int | None) -> int:
     """Auto partition count for count_distinct_exact: enough partitions
-    that no DistinctAccum holds more than ~KEYS_PER_COUNT_PARTITION raw
-    keys, floored at the session parallelism."""
+    that no partition's raw-key distinct holds more than
+    ~KEYS_PER_COUNT_PARTITION keys, floored at the session parallelism."""
     if est_rows is None:
         return default_parallelism
     return max(default_parallelism, -(-est_rows // KEYS_PER_COUNT_PARTITION))
@@ -216,12 +163,13 @@ def count_distinct_exact(
     pays 8 B/key of pair blobs for it; at 10^9+ distinct keys that
     collect is a driver OOM the count never needed).
 
-    Shape: repartition(key) co-locates duplicates, a mapInPandas pass
-    dedupes RAW keys per partition (vectorized DistinctAccum —
-    COUNT(DISTINCT) null semantics, exact under co-location), and the
-    per-partition counts are summed JVM-side; exactly ONE aggregated row
-    reaches the driver. Same two-phase shape as grouped_distinct_count
-    (grouped.py) with a single global group.
+    Shape: repartition(key) co-locates duplicates, the grouped Arrow
+    partial (``sketches.base.grouped_partials``) with no group column
+    dedupes RAW keys per partition (COUNT(DISTINCT) null semantics:
+    NULL/NaN excluded, -0.0 counts as 0.0; exact under co-location),
+    and the per-partition counts are summed JVM-side; exactly ONE
+    aggregated row reaches the driver. Same two-phase shape as
+    grouped_distinct_count (grouped.py) with a single global group.
 
     ``df.select(key).distinct().count()`` is the pure-JVM equivalent —
     use it when no lineage is needed; this path exists so callers of the
@@ -229,7 +177,7 @@ def count_distinct_exact(
     dedupe, which never shuffles more than one row per partition after
     the key shuffle) without constructing a filter.
 
-    Partition sizing (VERDICT r4 #3): each partition's DistinctAccum
+    Partition sizing (VERDICT r4 #3): each partition's raw-key distinct
     holds its slice of the DISTINCT raw keys in memory (no spill), so
     at 10^12-key scale ``defaultParallelism`` partitions would OOM the
     executors. Pass ``est_rows`` (an upper bound is fine — extra
@@ -242,18 +190,13 @@ def count_distinct_exact(
     """
     from pyspark.sql import functions as F
 
+    from cuckoo_filter_spark.sketches.base import grouped_partials
+
     dp = df.sparkSession.sparkContext.defaultParallelism
     n = num_partitions or choose_count_partitions(dp, est_rows)
     sel = df.select(key_col).repartition(n, F.col(key_col))
-
-    def counter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = DistinctAccum()
-        for pdf in batches:
-            acc.add(pdf[key_col])
-        yield pd.DataFrame({"distinct_keys": [len(acc)]})
-
-    parts = sel.mapInPandas(counter, "distinct_keys bigint")
-    row = parts.agg(F.sum("distinct_keys").alias("n")).collect()[0]
+    parts = grouped_partials(sel, [], key_col)
+    row = parts.agg(F.sum("n").alias("n")).collect()[0]
     return int(row["n"] or 0)
 
 
@@ -279,21 +222,6 @@ def canon_dedupe_pairs(params: CuckooParams, bi: np.ndarray,
     return bi[first], tags[first]
 
 
-def hashes_of(pdf_col, hash_fn: str) -> np.ndarray:
-    """Column batch → uint64 hashes. 'metro64' hashes key bytes in numpy
-    (reference parity); '__prehashed__' means the column already holds
-    a JVM-computed 64-bit hash (e.g. F.xxhash64 — whole-stage codegen,
-    no Python hashing cost). Callers must have EXCLUDED null keys;
-    integral identity is restored here (a bigint column's null-bearing
-    batches reach pandas as float64 — hashing those bytes would split
-    fingerprint identity from the int64 batches)."""
-    from cuckoo_filter_spark.hashing import canon_int_keys
-
-    if hash_fn == "__prehashed__":
-        return pdf_col.to_numpy(dtype="int64").view(np.uint64)
-    return metro64_batch(canon_int_keys(pdf_col))
-
-
 def key_column(df, key_col: str, hash_fn: str):
     """``df[key_col]`` as the one column a key partial reads. For
     ``hash_fn='xxhash64'`` that is the JVM-side xxhash64 of each
@@ -312,9 +240,9 @@ def key_column(df, key_col: str, hash_fn: str):
 
 
 #: a key partial's per-route end of partition: (partition id, non-null
-#: rows, the partition's hashes in scan order, raw-key accumulator or
-#: None, start time) -> the output RecordBatch
-Finisher = Callable[[int, int, np.ndarray, "DistinctAccum | None", float],
+#: rows, the partition's hashes in scan order, the distinct (key, h)
+#: rows of its raw keys or None, start time) -> the output RecordBatch
+Finisher = Callable[[int, int, np.ndarray, "DistinctRows | None", float],
                     pa.RecordBatch]
 
 
@@ -330,8 +258,13 @@ def _key_partial_fn(finish: Finisher, prehashed: bool, count_keys: bool):
         rows = 0
         hs: list[np.ndarray] = []
         # count_keys: dedupe RAW keys (with their hash, so the sharded
-        # finisher can group the distinct keys by shard)
-        seen = DistinctAccum(dropna=False) if count_keys else None
+        # finisher can group the distinct keys by shard). Imported only
+        # then: the sketches package is not a cuckoo task's import cost
+        seen = None
+        if count_keys:
+            from cuckoo_filter_spark.sketches.base import DistinctRows
+
+            seen = DistinctRows()
         for batch in batches:
             keys = batch.column(0)
             present, h = present_hashes(keys, prehashed)
@@ -339,8 +272,8 @@ def _key_partial_fn(finish: Finisher, prehashed: bool, count_keys: bool):
                 continue
             rows += len(h)
             if seen is not None:
-                keys = keys.filter(pa.array(present))
-                seen.add(pd.DataFrame({"h": h, "key": keys.to_pandas()}))
+                seen.add(pa.table({"key": keys.filter(pa.array(present)),
+                                   "h": h}))
             hs.append(h)
         h = np.concatenate(hs) if hs else np.zeros(0, dtype=np.uint64)
         yield finish(pid, rows, h, seen, t0)
@@ -355,8 +288,9 @@ def key_partials(df, key_col: str, hash_fn: str, mode: str,
     mapInArrow pass over ``df[key_col]``. Per batch the missing keys are
     dropped and the rest hashed once (``hashing.present_hashes``, the
     key step every probe shares) and counted; under
-    ``mode='unique_global'`` the raw keys also feed a ``DistinctAccum``. ``finish`` turns the partition's
-    hashes into its output rows (``schema``).
+    ``mode='unique_global'`` the raw keys also feed the Arrow raw-key
+    distinct (``sketches.base.DistinctRows``). ``finish`` turns the
+    partition's hashes into its output rows (``schema``).
 
     ``unique_global`` repartitions by key first (``num_partitions`` or
     the session parallelism) so duplicate keys co-locate and the

@@ -1,24 +1,28 @@
 """Per-group cuckoo filters and exact grouped distinct counts.
 
-The naive "one applyInPandas task per group" funnels a whole group's
-rows through a single task — at web scale one language can be tens of
-TB. Both operators here are two-phase instead:
+A naive "one task per group" build funnels a whole group's rows
+through a single task — at web scale one language can be tens of TB.
+Both operators here are two-phase instead:
 
 * phase 1 — ``repartition(group, key)`` co-locates identical
-  (group, key) pairs, then a ``mapInPandas`` pass dedupes on the RAW
-  key per (partition, group) and emits tiny partial rows. Because
-  duplicates are co-located, partial distinct counts sum to the exact
-  global per-group distinct count — no group ever sits in one task.
+  (group, key) pairs, then the grouped Arrow partial
+  (``sketches.base.grouped_partials``, the build's key rule) dedupes the
+  RAW keys per (partition, group) and emits one tiny row per (partition,
+  group). Because duplicates are co-located, partial distinct counts sum
+  to the exact global per-group distinct count — no group ever sits in
+  one task.
 * phase 2 — a per-group combine of the partials. For counting this is
   a plain JVM ``groupBy(group).sum`` (bytes per group ≈ 8·P). For
-  filter building the combine receives 8 bytes per distinct key of the
-  group (the deduped 64-bit hashes), sizes a reference-layout kernel
-  for exactly that group's cardinality, and runs the kick loop once.
+  filter building the combine (``sketches.base.merge_groups``) receives
+  8 bytes per distinct key of the group (the deduped 64-bit hashes) in
+  source-partition order, sizes a reference-layout kernel for exactly
+  that group's cardinality, and runs the kick loop once.
 
 Scale note: the filter combine is inherently one task per group
 (a single filter is one blob); it is bounded by 8 B × group distinct
-count, fine to ~10⁸ distinct per group. Beyond that, build per-group
-*sharded* filters (operators.sharded) with a composite shard key.
+count and refuses a group above ``MAX_GROUP_KEYS`` (10⁸) distinct keys.
+Beyond that, build per-group ``build_sharded_cuckoo_filter`` filters
+with a composite shard key.
 
 Reference parity: each per-group blob is a §1.5-layout filter
 (cuckoofilter.go:216-266 Encode), so merge/delete/probe semantics apply
@@ -28,21 +32,15 @@ share the Arrow key step of ``operators.query``.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import arrow_udf
 
 from cuckoo_filter_spark.hashing import present_hashes
 from cuckoo_filter_spark.kernel.filter import CuckooKernel
-from cuckoo_filter_spark.operators.build import (
-    DEFAULT_HEADROOM,
-    DistinctAccum,
-    hashes_of,
-)
+from cuckoo_filter_spark.operators.build import DEFAULT_HEADROOM
 from cuckoo_filter_spark.operators.query import (
     cached_probe,
     key_hash_udf,
@@ -53,61 +51,11 @@ from cuckoo_filter_spark.operators.sharded import (
     iter_shard_groups,
 )
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
-
-
-def _group_field_ddl(df: DataFrame, group_col: str) -> str:
-    return f"{group_col} {df.schema[group_col].dataType.simpleString()}"
-
-
-def _partial_emitter(group_col: str, key_col: str, with_hashes: bool,
-                     hash_fn: str = "metro64"):
-    """Vectorized per-(partition, group) raw-key dedupe: per-batch pandas
-    drop_duplicates on (group, key) + periodic consolidation — no Python
-    sets, no per-row object churn. COUNT(DISTINCT) null semantics: null
-    keys are excluded (null groups are kept — SQL groups by NULL)."""
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # shared amortized consolidation policy (build.DistinctAccum);
-        # dropna=False — null GROUPS are legal (SQL groups by NULL),
-        # null KEYS are filtered per batch below
-        acc = DistinctAccum(dropna=False)
-        # count-only path: groups whose keys are ALL null must still
-        # appear (SQL: COUNT(DISTINCT k) = 0 for them) — track every
-        # group seen, not just those contributing non-null keys. The
-        # filter-build path intentionally skips them (no keys -> no
-        # filter; probes of that group return False).
-        gacc = DistinctAccum(dropna=False) if not with_hashes else None
-        for pdf in batches:
-            u = pdf[[group_col, key_col]]
-            acc.add(u[u[key_col].notna()])
-            if gacc is not None:
-                gacc.add(u[[group_col]].drop_duplicates())
-        alldf = acc.consolidated()
-        groups, ns, blobs = [], [], []
-        if len(alldf) == 0:
-            # empty consolidation has no columns — normalize so the
-            # group-by below (and dtype probing) still work
-            alldf = pd.DataFrame({group_col: [], key_col: []})
-        for g, sub in alldf.groupby(group_col, dropna=False, sort=False):
-            groups.append(g)
-            ns.append(len(sub))
-            if with_hashes:
-                keys = sub[key_col].reset_index(drop=True)
-                blobs.append(hashes_of(keys, hash_fn).astype("<u8").tobytes())
-        if gacc is not None:
-            gdf = gacc.consolidated()
-            seen = (gdf[group_col] if len(gdf)
-                    else pd.Series([], dtype=object))
-            have = pd.Series(groups, dtype=seen.dtype if len(seen) else None)
-            for g in seen[~seen.isin(have)]:
-                groups.append(g)
-                ns.append(0)
-        out = {group_col: groups, "n": ns}
-        if with_hashes:
-            out["blob"] = blobs
-        yield pd.DataFrame(out)
-
-    return emit
+from cuckoo_filter_spark.sketches.base import (
+    group_schema,
+    grouped_partials,
+    merge_groups,
+)
 
 
 def grouped_distinct_count(
@@ -121,20 +69,55 @@ def grouped_distinct_count(
 
     One shuffle of (group, key) rows + one tiny shuffle of partial
     counts; the only per-group work is summing P integers (JVM-side).
+    NULL/NaN keys do not count, -0.0 counts as 0.0, and a group whose
+    keys are all NULL reports 0 (NULL groups are kept).
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     sel = df.select(group_col, key_col).repartition(n, F.col(group_col),
                                                    F.col(key_col))
-    schema = f"{_group_field_ddl(df, group_col)}, n bigint"
-    partials = sel.mapInPandas(
-        _partial_emitter(group_col, key_col, with_hashes=False), schema)
+    partials = grouped_partials(sel, [group_col], key_col)
     return partials.groupBy(group_col).agg(F.sum("n").alias(out_col))
 
 
-GROUPED_BUILD_METRICS = (
-    "n_distinct bigint, stored bigint, load_factor double, hash_fn string, "
-    "blob binary"
-)
+#: the grouped filter combine refuses a group with more distinct keys
+#: than this: its combine task holds 8 B per distinct key of hashes plus
+#: the group's table, one task per group (read at call time)
+MAX_GROUP_KEYS = 100_000_000
+
+#: the output columns of a grouped build after its group column
+GROUPED_BUILD_ROW = [
+    ("n_distinct", pa.int64()), ("stored", pa.int64()),
+    ("load_factor", pa.float64()), ("hash_fn", pa.string()),
+    ("blob", pa.binary()),
+]
+
+
+def _filter_combiner(group_col: str, hash_fn: str, tags_per_bucket: int,
+                     bits_per_item: int, table_type: int, headroom: float,
+                     limit: int):
+    """The grouped build's merge: one group's distinct-key hash blobs
+    (in source-partition order) into one filter sized for the group."""
+
+    def combine(t: pa.Table) -> list[dict]:
+        group = t[group_col][0].as_py()
+        n_distinct = pc.sum(t["n"]).as_py()
+        if n_distinct > limit:
+            raise ValueError(
+                f"build_grouped_filters: group {group!r} has {n_distinct} "
+                f"distinct keys, above MAX_GROUP_KEYS={limit} for one "
+                f"combine task; build it with build_sharded_cuckoo_filter "
+                f"(a composite shard key) instead")
+        h = np.frombuffer(b"".join(t["blob"].to_pylist()), dtype="<u8")
+        params = CuckooParams.for_capacity(
+            max(int(n_distinct * headroom), 64), tags_per_bucket,
+            bits_per_item, table_type)
+        kern = CuckooKernel(params)
+        stored = kern.insert_pairs(*params.split(h), dedupe=True)
+        return [{group_col: group, "n_distinct": n_distinct,
+                 "stored": stored, "load_factor": kern.load_factor(),
+                 "hash_fn": hash_fn, "blob": kern.to_bytes()}]
+
+    return combine
 
 
 def build_grouped_filters(
@@ -153,52 +136,30 @@ def build_grouped_filters(
     8 B per distinct key reaches each group's combiner, which sizes the
     kernel for exactly that group's cardinality.
 
-    Returns a DataFrame (group, n_distinct, stored, load_factor, blob);
-    ``n_distinct`` is the exact raw-key distinct count, ``stored`` the
-    fingerprint-deduped slot count actually in the filter.
+    Returns a DataFrame (group, n_distinct, stored, load_factor,
+    hash_fn, blob); ``n_distinct`` is the exact raw-key distinct count,
+    ``stored`` the fingerprint-deduped slot count actually in the
+    filter. A group above ``MAX_GROUP_KEYS`` distinct keys raises: build
+    it with ``build_sharded_cuckoo_filter`` instead.
     """
     if hash_fn not in ("metro64", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    inner_hash = hash_fn
     sel = df.select(group_col, key_col)
     if hash_fn == "xxhash64":
         # drop null keys BEFORE hashing: F.xxhash64(NULL) = seed 42 (a
-        # non-null bigint) would slip past the emitter's notna() filter,
-        # inflating n_distinct ("the exact raw-key distinct count") and
-        # storing a phantom fingerprint
+        # non-null bigint) would slip past the partial's missing-key
+        # drop, inflating n_distinct ("the exact raw-key distinct
+        # count") and storing a phantom fingerprint
         sel = sel.where(F.col(key_col).isNotNull()).select(
             group_col, F.xxhash64(key_col).alias(key_col))
-        inner_hash = "__prehashed__"
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     sel = sel.repartition(n, F.col(group_col), F.col(key_col))
-    gddl = _group_field_ddl(df, group_col)
-    partials = sel.mapInPandas(
-        _partial_emitter(group_col, key_col, with_hashes=True, hash_fn=inner_hash),
-        f"{gddl}, n bigint, blob binary",
-    )
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_distinct = int(pdf["n"].sum())
-        h = (np.concatenate(
-            [np.frombuffer(bytes(b), dtype="<u8") for b in pdf["blob"]])
-            if len(pdf) else np.zeros(0, dtype=np.uint64))
-        params = CuckooParams.for_capacity(
-            max(int(n_distinct * headroom), 64), tags_per_bucket,
-            bits_per_item, table_type)
-        kern = CuckooKernel(params)
-        idx, tag = params.split(h)
-        stored = kern.insert_pairs(idx, tag, dedupe=True)
-        return pd.DataFrame({
-            group_col: [pdf[group_col].iloc[0]],
-            "n_distinct": [n_distinct],
-            "stored": [stored],
-            "load_factor": [kern.load_factor()],
-            "hash_fn": [hash_fn],
-            "blob": [kern.to_bytes()],
-        })
-
-    return partials.groupBy(group_col).applyInPandas(
-        combine, f"{gddl}, {GROUPED_BUILD_METRICS}")
+    partials = grouped_partials(sel, [group_col], key_col, hash_fn=hash_fn)
+    combine = _filter_combiner(group_col, hash_fn, tags_per_bucket,
+                               bits_per_item, table_type, headroom,
+                               MAX_GROUP_KEYS)
+    return merge_groups(partials, [group_col], combine,
+                        group_schema(sel, [group_col], GROUPED_BUILD_ROW))
 
 
 # grouped_anti_join(via='auto') switches from the broadcast probe to the

@@ -14,10 +14,11 @@ sharded build keeps everything distributed:
 * build: the one cuckoo key partial (``build.key_partials``, mapInArrow)
   fingerprints each scan partition and emits one packed (bucket, tag)
   pair blob per (partition, shard) (:func:`sharded_pairs`); a single
-  shuffle groups pair blobs by shard; applyInPandas runs the kick-loop
-  combine per shard in parallel → one filter blob row per shard
-  (:func:`combine_shards`). Shuffle volume is 8 bytes/key regardless of
-  table size.
+  shuffle groups pair blobs by shard; the one blob merge
+  (``sketches.base.merge_groups``, applyInArrow) runs the kick-loop
+  combine per shard in parallel, pair blobs in source-partition order
+  → one filter blob row per shard (:func:`combine_shards`). Shuffle
+  volume is 8 bytes/key regardless of table size.
 * query: with a modest shard count the blobs are collected + broadcast
   and probes route by shard inside the Arrow probe UDF
   (``query.might_contain_udf``); at full scale use
@@ -36,8 +37,8 @@ import time
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -61,7 +62,7 @@ from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
 #: one row per (source partition, shard) of the pair-blob frame
 PAIRS_ROW = pa.schema([
-    ("shard", pa.int32()), ("src_partition", pa.int32()),
+    ("shard", pa.int32()), ("partition_id", pa.int32()),
     ("rows", pa.int64()), ("distinct_keys", pa.int64()),
     ("blob", pa.binary()),
 ])
@@ -74,11 +75,14 @@ PAIRS_ROW = pa.schema([
 # returning silent false negatives when probed with current code.
 SHARD_FORMAT_VERSION = 2
 
-SHARD_SCHEMA = (
-    "shard int, rows bigint, stored bigint, distinct_keys bigint, "
-    "kicks bigint, victim_used boolean, "
-    "load_factor double, wall_ms double, blob binary, format_version int"
-)
+#: one filter blob row per shard
+SHARD_ROW = pa.schema([
+    ("shard", pa.int32()), ("rows", pa.int64()), ("stored", pa.int64()),
+    ("distinct_keys", pa.int64()), ("kicks", pa.int64()),
+    ("victim_used", pa.bool_()), ("load_factor", pa.float64()),
+    ("wall_ms", pa.float64()), ("blob", pa.binary()),
+    ("format_version", pa.int32()),
+])
 
 
 def check_shard_format(shards_df, where: str) -> None:
@@ -239,7 +243,7 @@ def pairs_batch(pid: int, groups: list[tuple[int, int, bytes]],
     were computed (else NULL)."""
     dk = dk_by_shard or {}
     return pa.RecordBatch.from_pylist(
-        [{"shard": s, "src_partition": pid, "rows": rows,
+        [{"shard": s, "partition_id": pid, "rows": rows,
           "distinct_keys": dk.get(s), "blob": blob}
          for s, rows, blob in groups], schema=PAIRS_ROW)
 
@@ -254,7 +258,7 @@ def _shard_finisher(params: CuckooParams, num_shards: int, unique: bool):
     def finish(pid, rows, h, seen, t0):
         dk_by_shard = None
         if seen is not None and len(seen):
-            hs = seen.consolidated()["h"].to_numpy(dtype=np.uint64)
+            hs = seen.table()["h"].to_numpy()
             s, c = np.unique(shard_of(hs, num_shards), return_counts=True)
             dk_by_shard = dict(zip(s.tolist(), c.tolist()))
         return pairs_batch(pid,
@@ -274,47 +278,40 @@ def sharded_pairs(df, key_col: str, params: CuckooParams, num_shards: int,
 
 
 def _shard_combiner(params: CuckooParams, unique: bool):
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
+    def combine(t: pa.Table) -> list[dict]:
+        shard = t["shard"][0].as_py()
         t0 = time.perf_counter()
         kern = CuckooKernel(params, seed=0x1337C0FFEE ^ shard)
-        pdf = pdf.sort_values("src_partition")  # deterministic combine order
-        bis, tgs = [], []
-        for blob in pdf["blob"]:
-            bi, tg = unpack_pairs(bytes(blob))
-            bis.append(bi)
-            tgs.append(tg)
-        bi = np.concatenate(bis) if bis else np.zeros(0, dtype=np.int64)
-        tg = np.concatenate(tgs) if tgs else np.zeros(0, dtype=np.uint32)
+        pairs = [unpack_pairs(b) for b in t["blob"].to_pylist()]
+        bi = np.concatenate([p[0] for p in pairs] or [np.zeros(0, np.int64)])
+        tg = np.concatenate([p[1] for p in pairs]
+                            or [np.zeros(0, np.uint32)])
         stored = kern.insert_pairs(bi, tg, dedupe=unique)
-        dk = pdf["distinct_keys"].sum(min_count=1)  # NaN → None when the
-        # emitter did not count raw keys (non-unique_global builds)
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "rows": [int(pdf["rows"].sum())],
-                "stored": [stored],
-                "distinct_keys": pd.array(
-                    [None if pd.isna(dk) else int(dk)], dtype="Int64"),
-                "kicks": [kern.kicks],
-                "victim_used": [kern.victim_used],
-                "load_factor": [kern.load_factor()],
-                "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-                "blob": [kern.to_bytes()],
-                "format_version": [SHARD_FORMAT_VERSION],
-            }
-        )
+        return [{
+            "shard": shard, "rows": pc.sum(t["rows"]).as_py(),
+            "stored": stored,
+            # NULL when the partial did not count raw keys (every
+            # non-unique_global build)
+            "distinct_keys": pc.sum(t["distinct_keys"]).as_py(),
+            "kicks": kern.kicks, "victim_used": kern.victim_used,
+            "load_factor": kern.load_factor(),
+            "wall_ms": (time.perf_counter() - t0) * 1000.0,
+            "blob": kern.to_bytes(), "format_version": SHARD_FORMAT_VERSION,
+        }]
 
     return combine
 
 
 def combine_shards(pairs: DataFrame, params: CuckooParams,
                    unique: bool) -> DataFrame:
-    """Pair-blob frame → one filter blob row per shard (``SHARD_SCHEMA``):
-    ONE shuffle by shard, then the kick-loop combine per shard in
-    applyInPandas."""
-    return pairs.groupBy("shard").applyInPandas(
-        _shard_combiner(params, unique), SHARD_SCHEMA)
+    """Pair-blob frame → one filter blob row per shard (``SHARD_ROW``):
+    ONE shuffle by shard, then the kick-loop combine per shard through
+    ``sketches.base.merge_groups`` (pair blobs in source-partition
+    order, so a shard's bytes do not depend on shuffle order)."""
+    from cuckoo_filter_spark.sketches.base import merge_groups
+
+    return merge_groups(pairs, ["shard"], _shard_combiner(params, unique),
+                        SHARD_ROW)
 
 
 #: the metrics keys of every sharded route (declared, auto-shard,

@@ -13,10 +13,9 @@ import math
 import struct
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
-from cuckoo_filter_spark.hashing import metro64_batch, present_hashes
+from cuckoo_filter_spark.hashing import present_hashes
 
 _MAGIC = b"BLM1"
 
@@ -48,14 +47,11 @@ class BloomSketch:
 
     # -- shared Arrow-batch update path --
     def update(self, items) -> None:
-        # NULL keys are EXCLUDED (the cuckoo-build convention): a NULL
-        # string slot has zero Arrow length and would hash identically
-        # to '' (phantom member), and a NULL numeric key crashes the
-        # flat-bytes path
-        vals = items if isinstance(items, pd.Series) else pd.Series(items)
-        vals = vals.dropna()
-        if len(vals):
-            self.update_hashed(metro64_batch(vals))
+        """Add the present keys of ``items`` (NULL/NaN keys are never
+        stored: the key rule of the Bloom UDF and the build partials)."""
+        _, h = present_hashes(pa.array(items))
+        if len(h):
+            self.update_hashed(h)
 
     def _positions(self, h: np.ndarray) -> np.ndarray:
         h1 = (h >> np.uint64(32)).astype(np.uint64)
@@ -70,7 +66,11 @@ class BloomSketch:
         self.n_items += len(h)
 
     def contains(self, items) -> np.ndarray:
-        return self.contains_hashed(metro64_batch(items))
+        """Membership flags of ``items``; a NULL/NaN key answers False."""
+        present, h = present_hashes(pa.array(items))
+        out = np.zeros(len(present), dtype=bool)
+        out[present] = self.contains_hashed(h)
+        return out
 
     def contains_hashed(self, h: np.ndarray) -> np.ndarray:
         pos = self._positions(h)  # [k, n]

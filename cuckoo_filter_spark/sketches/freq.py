@@ -27,8 +27,11 @@ the engine-portable ``CAST(x AS VARCHAR)`` convention of
 operators/sampling.py; NULLs are excluded (a NULL is not an item).
 CAVEAT: an int-with-nulls Spark column arrives in pandas as float64,
 so raw ``update`` would register '402.0' — build via
-``build_mg_sketches`` (Arrow batches keep int64, one scan for many
-``when(cond, key)`` subset sketches) or pre-cast keys to string.
+``build_mg_sketches`` or ``grouped_mg_topk`` (both read Arrow batches,
+which keep int64; the first builds many ``when(cond, key)`` subset
+sketches in one scan, the second one sketch per group through the
+grouped Arrow partial and merge of ``sketches.base``) or pre-cast keys
+to string.
 """
 
 from __future__ import annotations
@@ -36,6 +39,7 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
+import pyarrow as pa
 
 
 class MGSketch:
@@ -170,6 +174,27 @@ def build_mg_sketches(df, cols: list[str], k: int = 256):
     return _build(df, [(c, lambda: MGSketch(k=k), "keys") for c in cols])
 
 
+#: the output columns of grouped_mg_topk after its group column
+MG_TOPK_ROW = [("item", pa.string()), ("freq_lo", pa.int64()),
+               ("freq_hi", pa.int64()), ("exact_mode", pa.bool_())]
+
+
+def _mg_combiner(group_col: str, k: int, top_n: int):
+    """grouped_mg_topk's merge: one group's MG blobs (in source-partition
+    order) into its top-N rows."""
+
+    def combine(t: pa.Table) -> list[dict]:
+        sk = MGSketch(k=k)
+        for b in t["blob"].to_pylist():
+            sk.merge(MGSketch.from_bytes(b))
+        g = t[group_col][0].as_py()
+        return [{group_col: g, "item": item, "freq_lo": lo, "freq_hi": hi,
+                 "exact_mode": sk.is_exact()}
+                for item, lo, hi in sk.top_k(top_n)]
+
+    return combine
+
+
 def grouped_mg_topk(df, group_col: str, item_col: str, k: int = 256,
                     top_n: int = 10):
     """Per-group Misra-Gries top-N: (group, item, freq_lo, freq_hi,
@@ -179,71 +204,42 @@ def grouped_mg_topk(df, group_col: str, item_col: str, k: int = 256,
 
     Two-phase mergeable shape (the grouped_distinct_count pattern, but
     with NO raw-key shuffle at all): phase 1 builds one MG partial per
-    (input partition, group) in mapInPandas on the NATURAL partitions —
-    hot groups parallelize across partitions instead of funneling into
-    one task; phase 2 shuffles only the <= partitions x groups blobs
+    (input partition, group) in the grouped Arrow partial
+    (``base.grouped_partials``) on the NATURAL partitions — hot groups
+    parallelize across partitions instead of funneling into one task;
+    phase 2 shuffles only the <= partitions x groups blobs
     (~k * avg_key_len bytes each) and merges per group in
-    applyInPandas. At 100 TB: a full GROUP BY(group, item) shuffle is
-    replaced by a blob shuffle ~1e6x smaller.
+    source-partition order (``base.merge_groups``). At 100 TB: a full
+    GROUP BY(group, item) shuffle is replaced by a blob shuffle ~1e6x
+    smaller.
 
     Bounds per group: freq_lo <= f <= freq_hi always; when the group's
     distinct-item count stays below k the sketch is EXACT (exact_mode
     true, freq_lo == freq_hi == f) and the output equals the exact
     top-N — the regime the contract query pins against SQL. In
     estimation mode the BOUNDS hold for any partitioning/merge order
-    but tail membership of the top-N may vary run-to-run (document of
-    record: freq.py header). NULL groups and NULL items are excluded
-    (a NULL is not a group / an item). Driver-side memory: phase 1
-    holds one sketch per LOCAL group per partition — sized for
-    moderate group cardinality (<= ~1e5 groups); item identity is
-    str(value) with int-with-nulls restored to '402'.
+    but tail membership of the top-N may vary with the partitioning
+    (document of record: freq.py header); the merge order is the source
+    partition order, so a given partitioning gives the same top-N.
+    NULL groups and NULL items are excluded (a NULL is not a group / an
+    item). Executor memory: phase 1 holds one sketch per LOCAL group per
+    partition — sized for moderate group cardinality (<= ~1e5 groups);
+    item identity is str(value) of the Arrow value ('402', never
+    '402.0').
     """
-    from functools import reduce as _reduce
-
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+
+    from cuckoo_filter_spark.sketches.base import (
+        group_schema,
+        grouped_partials,
+        merge_groups,
+    )
 
     MGSketch(k=k)  # validate k on the driver, not in an executor task
     if top_n < 1:
         raise ValueError("grouped_mg_topk top_n must be >= 1")
     sel = df.select(group_col, item_col).where(F.col(group_col).isNotNull())
-    integral = isinstance(
-        sel.schema[item_col].dataType,
-        (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
-    gddl = f"{group_col} {sel.schema[group_col].dataType.simpleString()}"
-
-    def partials(batches):
-        sks: dict = {}
-        for pdf in batches:
-            for g, vals in pdf.groupby(group_col, sort=False)[item_col]:
-                vals = vals.dropna()
-                if len(vals) == 0:
-                    continue
-                if integral:
-                    vals = vals.astype("int64")
-                sk = sks.get(g)
-                if sk is None:
-                    sk = sks[g] = MGSketch(k=k)
-                sk.update(vals)
-        yield pd.DataFrame({
-            group_col: list(sks.keys()),
-            "blob": [sk.to_bytes() for sk in sks.values()],
-        })
-
-    def combine(key, pdf):
-        sk = _reduce(lambda a, b: a.merge(b),
-                     (MGSketch.from_bytes(bytes(b)) for b in pdf["blob"]))
-        rows = sk.top_k(top_n)
-        return pd.DataFrame({
-            group_col: [key[0]] * len(rows),
-            "item": [r[0] for r in rows],
-            "freq_lo": [r[1] for r in rows],
-            "freq_hi": [r[2] for r in rows],
-            "exact_mode": [sk.is_exact()] * len(rows),
-        })
-
-    parts = sel.mapInPandas(partials, f"{gddl}, blob binary")
-    return parts.groupBy(group_col).applyInPandas(
-        combine,
-        f"{gddl}, item string, freq_lo bigint, freq_hi bigint, "
-        "exact_mode boolean")
+    parts = grouped_partials(sel, [group_col], item_col,
+                             make=lambda: MGSketch(k=k))
+    return merge_groups(parts, [group_col], _mg_combiner(group_col, k, top_n),
+                        group_schema(sel, [group_col], MG_TOPK_ROW))

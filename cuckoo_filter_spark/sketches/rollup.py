@@ -1,157 +1,16 @@
-"""Sketch rollup — approximate distinct counts at every cube level from
-ONE scan, merging sketches up the hierarchy instead of re-scanning.
-
-``GROUP BY ROLLUP(g1..gk) COUNT(DISTINCT key)`` is the classic
-web-analytics cube (distinct users per (event_type, day), per
-event_type, grand total). Computed exactly it needs either k+1 scans or
-one scan carrying every raw key through k+1 aggregates (Spark's Expand
-multiplies the input k+1×, then shuffles raw keys per level). The
-mergeable-sketch formulation needs neither:
-
-* phase 1 — ONE pass over the natural input partitions
-  (``mapInPandas``, no row shuffle at all) emits one HLL register blob
-  per (partition, finest group). Raw keys never leave their partition;
-  the only thing that ever moves is 2^p-byte blobs.
-* phase 2 — blobs merge per finest group (register max, associative).
-* phase 3 — level j-1 merges from level j's ALREADY-MERGED blobs:
-  each coarser level is a tiny shuffle of G_j blobs, never a rescan.
-  Only the FINEST merged level is localCheckpoint-ed (so the union of
-  all levels runs the scan exactly once); coarser levels chain lazily
-  from that checkpoint — blob frames are bounded by group counts, so
-  re-merging them per level is cheaper than a blocking checkpoint job
-  each (the hll_grouping_sets shape).
-
-At 100 TB this is the whole point of mergeability (north rule): the
-exact plan shuffles ~10^12 raw keys × (k+1) levels; this plan shuffles
-``partitions × finest-groups`` blobs once and then strictly shrinking
-blob sets. Memory bound per scan task ≈ (groups in partition) × 2^p
-bytes — pick p for the group-count regime (default p=12 → 4 KiB/blob,
-±1.6%; p=14 → 16 KiB, ±0.8%).
-
-Reference parity note: merge-up equals build-direct EXACTLY (register
-max is associative/commutative/idempotent — same law the reference's
-filter merge tests pin, cuckoofilter.go Encode/Decode + our
-test_sketches merge laws), so a rolled-up level's registers are
-byte-identical to an HLL built directly over that slice. Tests pin
-this, not just the estimate bound.
-
-COUNT(DISTINCT) null semantics: null KEYS don't count, but their group
-still emits (an all-null-key group surfaces with count 0, as SQL's
-GROUP BY does); null GROUP values are legal and kept. The ``lvl`` column
-(number of kept leading group columns, k..0) disambiguates a real NULL
-group value from a rolled-up marker NULL — same job as SQL
-GROUPING_ID.
+"""Sketch rollup — ``GROUP BY ROLLUP(g1..gk) COUNT(DISTINCT key)`` from
+ONE scan: the k+1 prefix grouping sets of :mod:`sketches.cube`
+(``hll_grouping_sets``), so every level merges the checkpointed finest
+HLL blobs and raw keys never shuffle. The ``lvl`` column (number of kept
+leading group columns, k..0) disambiguates a real NULL group value from
+a rolled-up marker NULL — same job as SQL GROUPING_ID.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from cuckoo_filter_spark.sketches.hll import HLLSketch
-
-
-def _validate_cols(group_cols: list[str], key_col: str, est_col: str,
-                   marker_col: str) -> None:
-    """Output-name collision guard: a group column named like an output
-    column would be silently overwritten (withColumn) or break the
-    partials DDL (duplicate 'blob')."""
-    reserved = {"blob", marker_col, est_col}
-    bad = reserved & set(group_cols)
-    if bad:
-        raise ValueError(
-            f"group columns {sorted(bad)} collide with output columns "
-            f"{sorted(reserved)}; rename them first")
-    if key_col in set(group_cols) | reserved:
-        raise ValueError(
-            f"key column {key_col!r} collides with a group/output column")
-
-
-def _partial_emitter(group_cols: list[str], key_col: str, p: int):
-    """Per-(input-partition, finest-group) HLL partials. One dict of
-    2^p-byte register arrays per task; no raw key crosses a partition
-    boundary. Null KEYS don't count (SQL COUNT(DISTINCT)) but their
-    group still emits — an all-null-key group must surface with an
-    EMPTY sketch (count 0), exactly like SQL's GROUP BY emits it."""
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sks: dict[tuple, HLLSketch] = {}
-        order: list[tuple] = []  # deterministic emit order
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for g, sub in pdf.groupby(group_cols, dropna=False,
-                                      sort=False):
-                g = g if isinstance(g, tuple) else (g,)
-                sk = sks.get(g)
-                if sk is None:
-                    sk = sks[g] = HLLSketch(p=p)
-                    order.append(g)
-                keys = sub[key_col]
-                keys = keys[keys.notna()]
-                if len(keys):
-                    sk.update(keys)
-        out = {c: [g[i] for g in order]
-               for i, c in enumerate(group_cols)}
-        out["blob"] = [sks[g].to_bytes() for g in order]
-        yield pd.DataFrame(out)
-
-    return emit
-
-
-def _build_partials(df: DataFrame, group_cols: list[str], key_col: str,
-                    p: int) -> tuple[DataFrame, dict]:
-    """Shared phase-1: one mapInPandas pass on the NATURAL input
-    partitions (zero Exchange — pinned by plan_audit check 8) emitting
-    one blob per (partition, finest group). Returns (partials, ddl_of)."""
-    ddl_of = {c: f"{c} {df.schema[c].dataType.simpleString()}"
-              for c in group_cols}
-    gddl = ", ".join(ddl_of[c] for c in group_cols)
-    partials = df.select(*group_cols, key_col).mapInPandas(
-        _partial_emitter(group_cols, key_col, p),
-        f"{gddl}, blob binary")
-    return partials, ddl_of
-
-
-def _merge_level(blobs: DataFrame, keep_cols: list[str], ddl_of: dict,
-                 p: int) -> DataFrame:
-    """Merge HLL blobs per ``keep_cols`` group (register max). Input is
-    blob rows from the next finer level; output one (groups..., blob)
-    row per group — strictly shrinking data, never the raw input."""
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = HLLSketch(p=p)
-        for b in pdf["blob"]:
-            sk.merge(HLLSketch.from_bytes(bytes(b)))
-        row = {c: [pdf[c].iloc[0]] for c in keep_cols}
-        row["blob"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
-    ddl = ", ".join(ddl_of[c] for c in keep_cols)
-    ddl = f"{ddl}, blob binary" if keep_cols else "blob binary"
-    sel = blobs.select(*keep_cols, "blob")
-    if keep_cols:
-        return sel.groupBy(*keep_cols).applyInPandas(combine, ddl)
-    # grand total: one merge task over G_1 blobs (bounded by
-    # G_1 × 2^p bytes — the coarsest level is the smallest). SQL's ()
-    # grouping set emits one row even over empty input (COUNT = 0) —
-    # groupBy on an empty frame emits none, so seed the empty sketch
-    # (isEmpty touches only the already-checkpointed tiny level-1 frame)
-    if sel.isEmpty():
-        return blobs.sparkSession.createDataFrame(
-            [(bytearray(HLLSketch(p=p).to_bytes()),)], "blob binary")
-    return sel.groupBy(F.lit(1).alias("__one")).applyInPandas(combine, ddl)
-
-
-def _estimate_udf(p: int):
-    @F.pandas_udf("double")
-    def est(blob: pd.Series) -> pd.Series:
-        return blob.map(
-            lambda b: float(HLLSketch.from_bytes(bytes(b)).estimate()))
-
-    return est
+from cuckoo_filter_spark.sketches.cube import _validate_cols, hll_grouping_sets
 
 
 def hll_rollup(
@@ -175,34 +34,10 @@ def hll_rollup(
     if not group_cols:
         raise ValueError("hll_rollup needs at least one group column")
     _validate_cols(group_cols, key_col, est_col, "lvl")
-    partials, ddl_of = _build_partials(df, group_cols, key_col, p)
-
-    est = _estimate_udf(p)
-    levels = []
-    # finest level merges the scan partials and is checkpointed ONCE —
-    # the single input-sized materialization that keeps the union
-    # single-scan. Coarser levels chain LAZILY from it (r7): each
-    # level's plan re-merges the (already tiny, bounded by group count,
-    # never by input partitions) finer blob frames from the checkpoint,
-    # which is cheaper at every scale than a blocking localCheckpoint
-    # job per level — the same shape cube.hll_grouping_sets pins.
-    prev = None
-    for j in range(len(group_cols), -1, -1):
-        keep = group_cols[:j]
-        if prev is None:
-            prev = _merge_level(partials, keep, ddl_of, p).localCheckpoint()
-        else:
-            prev = _merge_level(prev, keep, ddl_of, p)
-        out = prev.withColumn("lvl", F.lit(j))
-        for c in group_cols[j:]:
-            out = out.withColumn(c, F.lit(None).cast(
-                df.schema[c].dataType))
-        out = out.withColumn(est_col, est(F.col("blob")))
-        if not keep_blobs:
-            out = out.drop("blob")
-        levels.append(out.select(*group_cols, "lvl", est_col,
-                                 *(["blob"] if keep_blobs else [])))
-    result = levels[0]
-    for lv in levels[1:]:
-        result = result.unionByName(lv)
-    return result
+    k = len(group_cols)
+    sets = [group_cols[:j] for j in range(k, -1, -1)]
+    out = hll_grouping_sets(df, group_cols, sets, key_col, p=p,
+                            est_col=est_col, keep_blobs=keep_blobs)
+    return out.select(
+        *group_cols, (F.lit(k) - F.bit_count("gid")).cast("int").alias("lvl"),
+        est_col, *(["blob"] if keep_blobs else []))

@@ -108,7 +108,7 @@ def main() -> None:
                      ok, p))
 
     # 5. grouped distinct: two-phase — ONE data exchange (the
-    # (group, key) repartition) feeding MapInPandas partials, then the
+    # (group, key) repartition) feeding MapInArrow partials, then the
     # tiny partial-count aggregation; scan pruned to the two columns
     from cuckoo_filter_spark.operators.grouped import grouped_distinct_count
 
@@ -117,12 +117,12 @@ def main() -> None:
     p = plan_of(gd)
     read_cols = read_schema_cols(p)
     ok = (
-        "MapInPandas" in p
+        "MapInArrow" in p
         and read_cols == ["lang", "text"]
         # exactly 2 exchanges: the (group,key) repartition + the final agg
         and len(re.findall(r"\(\d+\) Exchange", p)) <= 2
     )
-    sections.append(("grouped distinct: repartition + MapInPandas partials "
+    sections.append(("grouped distinct: repartition + MapInArrow partials "
                      "+ JVM sum, pruned scan", ok, p))
 
     # 6. beyond-broadcast sharded probe: cogroup (one probe-side shuffle
@@ -161,23 +161,25 @@ def main() -> None:
                      ok, p))
 
     # 8. hll_rollup partial stage: HLL partials are computed on the
-    # NATURAL input partitions — MapInPandas sits directly on the pruned
-    # scan with ZERO Exchange (the exact-rollup alternative Expands the
-    # input (k+1)× and shuffles raw keys per cube level)
-    from cuckoo_filter_spark.sketches.rollup import _partial_emitter
+    # NATURAL input partitions — the grouped Arrow partial (MapInArrow)
+    # sits directly on the pruned scan with ZERO Exchange (the
+    # exact-rollup alternative Expands the input (k+1)× and shuffles raw
+    # keys per cube level)
+    from cuckoo_filter_spark.sketches import HLLSketch
+    from cuckoo_filter_spark.sketches.base import grouped_partials
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    partials = ev.select("event_type", "user_id").mapInPandas(
-        _partial_emitter(["event_type"], "user_id", 12),
-        "event_type string, blob binary")
+    partials = grouped_partials(ev, ["event_type"], "user_id",
+                                make=lambda: HLLSketch(p=12),
+                                hash_fn="metro64")
     p = plan_of(partials)
     read_cols = read_schema_cols(p)
     ok = (
-        "MapInPandas" in p
+        "MapInArrow" in p
         and "Exchange" not in p
         and read_cols == ["event_type", "user_id"]
     )
-    sections.append(("hll_rollup partials: MapInPandas on natural "
+    sections.append(("hll_rollup partials: MapInArrow on natural "
                      "partitions, zero Exchange, pruned scan", ok, p))
 
     # 9. hash_split + sample_expr: a PURE JVM projection — zero Exchange,
@@ -232,7 +234,7 @@ def main() -> None:
 
     # 11. grouped MG top-N: phase-1 partials on NATURAL partitions (the
     # only Exchange in the whole plan is the tiny per-group BLOB shuffle
-    # feeding the applyInPandas merge — raw (group, item) rows never
+    # feeding the applyInArrow merge — raw (group, item) rows never
     # shuffle), scan pruned to the two columns
     from cuckoo_filter_spark.sketches.freq import grouped_mg_topk
 
@@ -240,8 +242,8 @@ def main() -> None:
     p = plan_of(topn)
     read_cols = read_schema_cols(p)
     ok = (
-        "MapInPandas" in p
-        and "FlatMapGroupsInPandas" in p
+        "MapInArrow" in p
+        and "FlatMapGroupsInArrow" in p
         and len(re.findall(r"\(\d+\) Exchange", p)) == 1
         and "BroadcastExchange" not in p
         and read_cols == ["event_type", "user_id"]
@@ -496,10 +498,9 @@ def main() -> None:
     # 23. sketch tree merge (r7, VERDICT r6 #1): above TREE_MERGE_AT
     # source partitions the partial blobs (the sketch_partials frame
     # every ungrouped sketch build runs) go through ONE executor-side
-    # applyInPandas merge level — blob rows only through a single
+    # applyInArrow merge level — blob rows only through a single
     # Exchange, no broadcast, scan stays pruned; the driver then
     # collects O(sqrt(P)) group rows
-    from cuckoo_filter_spark.sketches import HLLSketch
     from cuckoo_filter_spark.sketches.base import tree_merge_level
 
     tm_partials, _ = sketch_partials(
@@ -508,13 +509,13 @@ def main() -> None:
     merged = tree_merge_level(tm_partials, [lambda: HLLSketch(p=12)], 4)
     p = plan_of(merged)
     ok = (
-        "FlatMapGroupsInPandas" in p
+        "FlatMapGroupsInArrow" in p
         and len(re.findall(r"\(\d+\) Exchange", p)) == 1
         and "BroadcastExchange" not in p
         and read_schema_cols(p) == ["o_custkey"]
     )
     sections.append(("sketch tree merge: ONE blob-only Exchange into "
-                     "applyInPandas merge groups, no broadcast, pruned "
+                     "applyInArrow merge groups, no broadcast, pruned "
                      "scan", ok, p))
 
     # 24. cuckoo build partials: every build route runs the ONE Arrow
@@ -522,7 +523,7 @@ def main() -> None:
     # no pandas. unique_local adds zero Exchange; unique_global exactly
     # one hashpartitioning Exchange (repartition by key) below the
     # partial; the sharded build exactly one Exchange, by shard, above
-    # it, into the applyInPandas per-shard combine
+    # it, into the applyInArrow per-shard combine
     from cuckoo_filter_spark.operators.build import cuckoo_partials
     from cuckoo_filter_spark.operators.sharded import (
         combine_shards,
@@ -549,7 +550,7 @@ def main() -> None:
         and "hashpartitioning(l_orderkey" in p_global
         and len(exchanges(p_shard)) == 1
         and "hashpartitioning(shard" in p_shard
-        and "FlatMapGroupsInPandas" in p_shard
+        and "FlatMapGroupsInArrow" in p_shard
     )
     sections.append(("cuckoo build partials: MapInArrow on the pruned "
                      "scan; zero Exchange (unique_local), one key Exchange "

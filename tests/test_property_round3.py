@@ -1,12 +1,15 @@
 """Property tests for round-3 primitives (pure numpy/pandas, no Spark):
-DistinctAccum vs pandas nunique, canon_dedupe_pairs invariants,
+the grouped partial's distinct count vs pandas nunique,
+canon_dedupe_pairs invariants,
 choose_embedding_lsh sizing laws, multiprobe bucket expansion."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from cuckoo_filter_spark.operators.build import DistinctAccum, canon_dedupe_pairs
+from cuckoo_filter_spark.operators.build import canon_dedupe_pairs
+from cuckoo_filter_spark.sketches.base import GROUP_TAIL, _grouped_partial_fn
 from cuckoo_filter_spark.operators.dedup import choose_embedding_lsh
 from cuckoo_filter_spark.operators.similarity import _multiprobe_buckets
 from cuckoo_filter_spark.params import CuckooParams, TABLE_VACUUM
@@ -15,24 +18,22 @@ from cuckoo_filter_spark.params import CuckooParams, TABLE_VACUUM
 @given(
     st.lists(
         st.lists(
-            st.one_of(st.integers(-50, 50).map(float), st.just(float("nan")),
-                      st.just(None)),
+            st.one_of(st.integers(-50, 50).map(float), st.just(-0.0),
+                      st.just(float("nan")), st.just(None)),
             max_size=40),
         max_size=12),
 )
 @settings(max_examples=60, deadline=None)
-def test_distinct_accum_matches_nunique(batches):
-    """DistinctAccum over arbitrary float/NaN/None batches equals
-    pandas nunique(dropna=True) over the concatenation — the exact
-    COUNT(DISTINCT) contract."""
-    acc = DistinctAccum()
-    allvals = []
-    for b in batches:
-        s = pd.Series(b, dtype="float64")
-        acc.add(s)
-        allvals.append(s)
+def test_distinct_count_matches_nunique(batches):
+    """The grouped Arrow partial's distinct count over arbitrary
+    float/-0.0/NaN/None batches equals pandas nunique(dropna=True) over
+    the concatenation — the exact COUNT(DISTINCT) contract."""
+    rbs = [pa.record_batch({"k": pa.array(b, pa.float64())}) for b in batches]
+    (out,) = _grouped_partial_fn([], None, None,
+                                 pa.schema(GROUP_TAIL))(iter(rbs))
+    allvals = [pd.Series(b, dtype="float64") for b in batches]
     want = (pd.concat(allvals).nunique(dropna=True) if allvals else 0)
-    assert len(acc) == want
+    assert sum(out.column("n").to_pylist()) == want
 
 
 @given(st.integers(0, 2**32 - 1), st.integers(1, 400))

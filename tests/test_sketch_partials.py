@@ -101,3 +101,49 @@ def test_arrow_key_hashes_matches_pandas_rule():
         arrow_key_hashes(pa.array([1.0, 1.5]))
     assert np.array_equal(arrow_key_hashes(pa.array([], pa.int64())),
                           np.zeros(0, np.uint64))
+
+
+GROUPED_KEY_COLS = ("s", "b", "i64n", "d")
+
+
+def test_grouped_builds_match_driver_reference(typed_df):
+    """The grouped builds read the same key identity as the ungrouped
+    ones: per group, the exact distinct count, a filter holding every
+    key, the rollup's HLL registers and the MG counts all equal a driver
+    reference over the pandas column (``canon_int_keys`` for keys)."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from cuckoo_filter_spark.hashing import metro64_batch
+    from cuckoo_filter_spark.kernel.filter import CuckooKernel
+    from cuckoo_filter_spark.operators.grouped import (
+        build_grouped_filters,
+        grouped_distinct_count,
+    )
+    from cuckoo_filter_spark.sketches import grouped_mg_topk, hll_rollup
+
+    df = typed_df.withColumn("g", F.pmod(F.col("i32"), F.lit(3)))
+    pdf = df.toPandas()
+    for col in GROUPED_KEY_COLS:
+        want = {g: canon_int_keys(v.dropna())
+                for g, v in pdf.groupby("g")[col]}
+        got = {r["g"]: r["n_distinct"]
+               for r in grouped_distinct_count(df, "g", col).collect()}
+        assert got == {g: v.nunique() for g, v in want.items()}, col
+        for r in build_grouped_filters(df, "g", col).collect():
+            assert r["n_distinct"] == got[r["g"]], col
+            kern = CuckooKernel.from_bytes(r["blob"])
+            h = metro64_batch(want[r["g"]])
+            assert kern.contain_hashed(*kern.params.split(h)).all(), col
+        for r in hll_rollup(df, ["g"], col, keep_blobs=True).collect():
+            if r["lvl"] == 1:
+                ref = HLLSketch(p=12)
+                ref.update(want[r["g"]])
+                assert r["blob"] == ref.to_bytes(), col
+    for col in ("s", "i64n"):  # MG identity is str(value)
+        got = {(r["g"], r["item"]): r["freq_lo"] for r in
+               grouped_mg_topk(df, "g", col, k=4096, top_n=4096).collect()}
+        assert got == {(g, str(x)): c for g, v in
+                       pdf.groupby("g")[col]
+                       for x, c in Counter(canon_int_keys(v.dropna())).items()}

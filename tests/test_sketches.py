@@ -250,6 +250,22 @@ def test_bloom_null_keys_excluded_and_constructor_guard():
     BloomSketch(n_bits=1 << 10, n_hashes=7)  # explicit k: fine
 
 
+def test_bloom_contains_null_keys_answer_false():
+    """Driver-side contains takes the Bloom UDF's key rule: a NULL string
+    is not '' and a NULL in an Int64 series answers False, not raise."""
+    import pandas as pd
+    from cuckoo_filter_spark.sketches.bloom import BloomSketch
+
+    b = BloomSketch(capacity=128)
+    b.update(pd.Series(["", "a"]))
+    assert b.contains(pd.Series([None, "zz", ""])).tolist() == [
+        False, False, True]
+    b2 = BloomSketch(capacity=128)
+    b2.update(pd.Series([1, 2], dtype="Int64"))
+    assert b2.contains(pd.Series([1, None, 2], dtype="Int64")).tolist() == [
+        True, False, True]
+
+
 def test_countmin_negative_weight_raises():
     import pytest as _pt
     from cuckoo_filter_spark.sketches.countmin import CountMinSketch

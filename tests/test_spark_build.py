@@ -237,35 +237,42 @@ def test_auto_shard_unique_global_routes(spark):
     assert all(dk is not None for dk in per_shard) and sum(per_shard) == 8_000
 
 
-def test_distinct_accum_nan_null_and_amortized():
-    """NaN/None keys collapse (COUNT(DISTINCT) semantics) and the
-    consolidation threshold grows with the base (amortized-linear)."""
+def test_distinct_rows_nan_null_and_amortized():
+    """The Arrow raw-key distinct of the counting partials: NULL/NaN
+    keys never count, -0.0 counts as 0.0 (COUNT(DISTINCT) semantics),
+    and the consolidation threshold grows with the base
+    (amortized-linear)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from cuckoo_filter_spark.operators.build import DistinctAccum
+    from cuckoo_filter_spark.sketches.base import (
+        GROUP_TAIL,
+        DistinctRows,
+        _grouped_partial_fn,
+    )
 
-    acc = DistinctAccum()
-    acc.add(pd.Series([1.0, float("nan"), 2.0]))
-    acc.add(pd.Series([float("nan"), 2.0, 3.0, None]))
-    assert len(acc) == 3  # nulls/NaN dropped, not one-per-batch
+    batches = [pa.record_batch({"k": [1.0, float("nan"), 2.0, -0.0]}),
+               pa.record_batch({"k": pa.array([float("nan"), 2.0, 3.0,
+                                               None, 0.0])})]
+    (out,) = _grouped_partial_fn([], None, None,
+                                 pa.schema(GROUP_TAIL))(iter(batches))
+    assert out.column("n").to_pylist() == [4]  # 0, 1, 2, 3
     # amortized growth: after consolidation the next trigger needs a
     # buffer at least as large as the base
     consolidations = 0
 
-    class Counting(DistinctAccum):
-        _CONSOLIDATE_AT = 10
+    class Counting(DistinctRows):
+        CONSOLIDATE_AT = 10
 
         def _consolidate(self):
             nonlocal consolidations
-            if len(self._parts) > 1 or self._pending:
-                consolidations += 1
+            consolidations += 1
             super()._consolidate()
 
-    acc2 = Counting()
+    acc = Counting()
     for i in range(100):
-        acc2.add(pd.Series(np.arange(i * 5, i * 5 + 5)))
-    assert len(acc2) == 500
+        acc.add(pa.table({"k": np.arange(i * 5, i * 5 + 5)}))
+    assert len(acc) == 500
     assert consolidations < 15  # fixed threshold would consolidate ~98x
 
 
@@ -315,8 +322,8 @@ def test_auto_shard_xxhash64_both_routes(spark):
 
 def test_count_distinct_partition_default_scales(spark):
     """VERDICT r4 #3: the auto partition count must grow with the
-    declared input size so no in-memory DistinctAccum exceeds
-    ~KEYS_PER_COUNT_PARTITION raw keys (defaultParallelism partitions
+    declared input size so no partition's in-memory raw-key distinct
+    exceeds ~KEYS_PER_COUNT_PARTITION keys (defaultParallelism partitions
     at 10^12 keys would hold ~10^10 keys each -> executor OOM)."""
     from cuckoo_filter_spark.operators.build import (
         KEYS_PER_COUNT_PARTITION,
