@@ -11,15 +11,17 @@ Two implementations:
 * :func:`metro64` — pure-Python scalar, a faithful re-derivation of the
   published algorithm. Used as the parity oracle in tests and for
   driver-side one-off hashing.
-* :func:`metro64_batch` — numpy-vectorized over a batch of
-  variable-length byte strings. This is the hot path of the Arrow-batch
-  build partials and probe UDFs: the 32-byte block recurrence runs
-  batched across all rows that still have blocks left, and the tail
-  branches (16/8/4/2/1 bytes) are applied with per-row masks. No
-  per-row Python in the hot loop.
+* :func:`metro64_batch` / :func:`metro64_flat` — numpy-vectorized over
+  a batch of variable-length byte strings: the 32-byte block
+  recurrence runs batched across all rows that still have blocks left,
+  and the tail branches (16/8/4/2/1 bytes) are applied with per-row
+  masks. No per-row Python in the hot loop.
 
 Both are implemented from the published algorithm description; the test
 suite pins ``metro64_batch == metro64`` across lengths 0..200.
+
+The key rule, :func:`present_hashes`, serves every build, probe and
+driver item API; ``metro64_batch`` has no NULL rule.
 """
 
 from __future__ import annotations
@@ -231,29 +233,23 @@ def fmix64(x: np.ndarray, seed=0) -> np.ndarray:
 
 
 def canon_int_keys(vals):
-    """Canonical dtype for KEY hashing of a pandas (or numpy) batch.
-
-    Arrow hands a bigint column's null-BEARING batches to pandas as
-    float64 — so after the standard null exclusion the SAME key would
-    hash as 8 ``<f8`` bytes in one batch and 8 ``<i8`` bytes in another,
-    silently splitting fingerprint identity between build and probe
-    (exact-anti-join FALSE NEGATIVES). A float batch whose values are
-    all integral is therefore restored to int64 before hashing.
+    """The float step of the key rule: an integral float batch is
+    restored to int64 (``3.0`` is the key ``3``) by
+    :func:`arrow_key_hashes` and ``MGSketch.update``; other dtypes pass.
 
     Fail-loud hardening (ADVICE r6): float keys are NOT supported as
-    membership keys, and the two silent failure modes now raise —
+    membership keys, and the two silent failure modes raise —
 
     * a non-integral float batch means the caller really passed float
-      keys; the old behavior hashed them with batch-composition-
-      DEPENDENT identity ([2.0] restored to int64, [2.0, 2.5] left
-      float64) — a silent cross-batch identity split;
+      keys; restoring only all-integral batches would give a key a
+      batch-composition-DEPENDENT identity ([2.0] restored to int64,
+      [2.0, 2.5] left float64) — a silent cross-batch identity split;
     * an integral batch with magnitudes beyond float64's exact-integer
-      range (2^53) means Arrow's float64 rendering already LOST the
-      original int64 values (e.g. a bigint column holding 64-bit
-      fingerprints with interleaved NULL batches) — the restored int64
-      would be silently wrong. Hash such columns as strings
-      (``CAST(key AS STRING)`` — the streaming paths' convention) or
-      exclude NULLs JVM-side so batches stay int64 end-to-end."""
+      range (2^53) means the float64 rendering already LOST the
+      original int64 values (pandas renders a NULL-bearing bigint
+      column as float64) — the restored int64 would be silently wrong.
+      Pass such keys as Arrow int64 or pandas ``Int64``, or hash them
+      as strings (``CAST(key AS STRING)``)."""
     if getattr(vals, "dtype", None) is not None and vals.dtype.kind == "f" \
             and len(vals):
         v = np.asarray(vals)
@@ -277,16 +273,16 @@ def canon_int_keys(vals):
 
 def arrow_key_hashes(arr, seed: int = DEFAULT_SEED) -> np.ndarray:
     """uint64 metro64 of every slot of a NULL-free Arrow key array —
-    THE key rule of the Arrow batch paths, straight from the Arrow
+    the hashing half of :func:`present_hashes`, straight from the Arrow
     buffers with no pandas round trip.
 
     Integer, string and binary arrays hash as they are (an integer as
     its 8-byte little-endian int64, so int32 and int64 keys agree). A
     floating array goes through :func:`canon_int_keys` (integral →
-    int64, otherwise ``TypeError``), which keeps hash identity with the
-    pandas build and probe paths. A bigint column stays int64 plus a
-    validity bitmap in Arrow, so the >2^53 float64-rendering hazard
-    that ``canon_int_keys`` guards against never arises here."""
+    int64, otherwise ``TypeError``), so a double key and its int64
+    value are one key. A bigint column stays int64 plus a validity
+    bitmap in Arrow, so the >2^53 float64-rendering hazard that
+    ``canon_int_keys`` guards against never arises here."""
     import pyarrow as pa
 
     if pa.types.is_floating(arr.type):
@@ -304,9 +300,9 @@ def present_mask(arr) -> np.ndarray:
 
 
 def present_hashes(arr, prehashed: bool = False) -> tuple[np.ndarray, np.ndarray]:
-    """(present mask, uint64 hashes of the present keys) of one Arrow key
-    batch — THE per-batch key step of every cuckoo build partial and
-    every probe UDF.
+    """(present mask, uint64 hashes of the present keys) of one key batch
+    — THE key step of every build partial, probe UDF and driver item
+    API. A driver batch (Series, list, ndarray) goes through ``pa.array``.
 
     A key is missing when it is NULL or, in a floating array, NaN: it is
     never stored and never a member (a NULL string slot has zero length
@@ -318,27 +314,14 @@ def present_hashes(arr, prehashed: bool = False) -> tuple[np.ndarray, np.ndarray
 
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
+    elif not isinstance(arr, pa.Array):
+        arr = pa.array(arr)
     mask = present_mask(arr)
     keys = arr if mask.all() else arr.filter(pa.array(mask))
     if prehashed:
         return mask, np.asarray(keys.to_numpy(zero_copy_only=False),
                                 dtype=np.int64).view(np.uint64)
     return mask, arrow_key_hashes(keys)
-
-
-def key_mask_and_values(items):
-    """(canonicalized non-null values, notna bool ndarray) for a batch of
-    membership keys — THE pre-hash cleaning every key-hashing entry point
-    shares: NULL keys are excluded (a NULL string slot has zero Arrow
-    length and would alias with ``''``; a NULL numeric slot crashes
-    ``to_flat_bytes``), and integral identity is restored via
-    :func:`canon_int_keys`."""
-    import pandas as pd
-
-    vals = items if isinstance(items, pd.Series) else pd.Series(items)
-    notna = vals.notna().to_numpy()
-    nn = vals if notna.all() else vals[notna]
-    return canon_int_keys(nn), notna
 
 
 # --- xxHash64 of a single 64-bit word ---------------------------------------

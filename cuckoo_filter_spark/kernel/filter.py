@@ -31,7 +31,7 @@ import struct
 
 import numpy as np
 
-from cuckoo_filter_spark.hashing import key_mask_and_values, metro64_batch
+from cuckoo_filter_spark.hashing import present_hashes
 from cuckoo_filter_spark.kernel import bitpack
 from cuckoo_filter_spark.params import (
     MAX_CUCKOO_KICKS,
@@ -106,6 +106,18 @@ def _evict_choice(buckets: np.ndarray, round_no: int, seed: int, b: int) -> np.n
     return (x % np.uint64(b)).astype(np.int64)
 
 
+def _key_flags(params: CuckooParams, items, hashed_op) -> np.ndarray:
+    """One flag per item of ``hashed_op(index, tag)`` over the present
+    keys (``hashing.present_hashes``): the shape of every item-level
+    entry point. A missing (NULL/NaN) key is never hashed and answers
+    False (SQL IN semantics; nothing is stored under NULL)."""
+    present, h = present_hashes(items)
+    out = np.zeros(len(present), dtype=bool)
+    if len(h):
+        out[present] = hashed_op(*params.split(h))
+    return out
+
+
 class CuckooKernel:
     """Vectorized cuckoo filter over an unpacked slot matrix."""
 
@@ -130,25 +142,10 @@ class CuckooKernel:
     # hashing
     # ------------------------------------------------------------------
     def fingerprints(self, items) -> tuple[np.ndarray, np.ndarray]:
-        """Batch of keys → (index, tag) arrays. RAW mapping (no null
-        handling — parity tests feed it clean inputs); the item-level
-        entry points below run keys through key_mask_and_values first
-        (NULL exclusion + integral-dtype restore)."""
-        h = metro64_batch(items)
-        return self.params.split(h)
-
-    def _masked(self, items, hashed_op) -> np.ndarray:
-        """Shared item-level entry shape: NULL keys are never hashed
-        (they'd alias '' / crash on numerics) and always answer False;
-        non-null keys are dtype-canonicalized so a bigint column's
-        null-bearing float64 batches hash identically to its int64
-        batches (exact-join false-negative hazard otherwise)."""
-        nn, notna = key_mask_and_values(items)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            idx, tag = self.fingerprints(nn)
-            out[notna] = hashed_op(idx, tag)
-        return out
+        """(index, tag) of the present keys of a batch, under the one key
+        rule (``hashing.present_hashes``: NULL/NaN keys dropped, an
+        integral float hashed as its int64)."""
+        return self.params.split(present_hashes(items)[1])
 
     def _check_usable(self) -> None:
         if self._corrupt:
@@ -164,7 +161,7 @@ class CuckooKernel:
         """Batch insert; returns per-item success mask (False for NULL
         keys — excluded, never stored). Items after the victim cache
         fills are rejected like sequential Add (cuckoofilter.go:135-141)."""
-        return self._masked(items, self.add_hashed)
+        return _key_flags(self.params, items, self.add_hashed)
 
     def add_hashed(self, idx: np.ndarray, tag: np.ndarray) -> np.ndarray:
         """Sequential-equivalent batch Add: if the victim cache fills
@@ -185,7 +182,7 @@ class CuckooKernel:
         """Batch AddUnique (cuckoofilter.go:144-149): skip keys already
         present (or duplicated within the batch); returns stored-new mask
         (False for NULL keys — excluded)."""
-        return self._masked(items, self.add_unique_hashed)
+        return _key_flags(self.params, items, self.add_unique_hashed)
 
     def add_unique_hashed(self, idx: np.ndarray, tag: np.ndarray) -> np.ndarray:
         self._check_usable()
@@ -411,8 +408,7 @@ class CuckooKernel:
     # lookup
     # ------------------------------------------------------------------
     def contain(self, items) -> np.ndarray:
-        # NULL keys answer False (SQL IN semantics), never hash
-        return self._masked(items, self.contain_hashed)
+        return _key_flags(self.params, items, self.contain_hashed)
 
     def contain_hashed(self, idx: np.ndarray, tag: np.ndarray) -> np.ndarray:
         """Vectorized Contain (cuckoofilter.go:178-188)."""
@@ -432,8 +428,7 @@ class CuckooKernel:
     # delete
     # ------------------------------------------------------------------
     def delete(self, items) -> np.ndarray:
-        # NULL keys answer False (nothing stored under NULL), never hash
-        return self._masked(items, self.delete_hashed)
+        return _key_flags(self.params, items, self.delete_hashed)
 
     def delete_hashed(self, idx: np.ndarray, tag: np.ndarray) -> np.ndarray:
         """Batch delete (cuckoofilter.go:191-213 semantics).
@@ -858,11 +853,4 @@ class CuckooProbe:
         return found
 
     def contain(self, items) -> np.ndarray:
-        # same NULL/dtype key cleaning as CuckooKernel.contain: NULL
-        # probes answer False, bigint float64-rendered batches restored
-        nn, notna = key_mask_and_values(items)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            idx, tag = self.params.split(metro64_batch(nn))
-            out[notna] = self.contain_hashed(idx, tag)
-        return out
+        return _key_flags(self.params, items, self.contain_hashed)

@@ -21,16 +21,15 @@ import json
 import os
 from dataclasses import asdict
 
-from cuckoo_filter_spark.operators.build import check_mode
 from cuckoo_filter_spark.operators.sharded import (
     SHARD_FORMAT_VERSION,
     SHARD_METRICS,
     ShardedCuckooBuild,
     check_shard_format,
     combine_shards,
+    shard_geometry,
     sharded_pairs,
 )
-from cuckoo_filter_spark.params import CuckooParams
 
 
 def _manifest_path(d: str) -> str:
@@ -98,7 +97,6 @@ def build_checkpointed(
     returned build carries their sum in ``distinct_keys``."""
     from pyspark.sql import functions as F
 
-    check_mode(mode)
     # the manifest + done-shard detection are LOCAL-filesystem (os.*)
     # while Spark would happily write shards to a remote URI — every
     # resume would then see an empty local dir, recompute ALL shards and
@@ -112,12 +110,9 @@ def build_checkpointed(
             "use a local (or locally-mounted shared) path")
 
     spark = df.sparkSession
-    if capacity is None:
-        capacity = df.select(key_col).count()
-    per_shard_cap = max(int(capacity * headroom / num_shards), 64)
-    params = CuckooParams.for_capacity(
-        per_shard_cap, tags_per_bucket, bits_per_item, table_type
-    )
+    capacity, params = shard_geometry(
+        df, key_col, capacity, num_shards, tags_per_bucket, bits_per_item,
+        table_type, mode, headroom)
     manifest = {
         "params": asdict(params),
         "num_shards": num_shards,

@@ -42,7 +42,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from cuckoo_filter_spark.hashing import metro64_batch, present_hashes
+from cuckoo_filter_spark.hashing import present_hashes
 from cuckoo_filter_spark.kernel.filter import CuckooKernel, CuckooProbe
 from cuckoo_filter_spark.operators.build import (
     DEFAULT_HEADROOM,
@@ -185,13 +185,10 @@ class ShardedCuckooBuild:
         if self.hash_fn == "xxhash64":
             raise ValueError("xxhash64 build: probe via sharded_might_contain_udf "
                              "or contain_hashed64")
-        from cuckoo_filter_spark.hashing import key_mask_and_values
-
-        nn, notna = key_mask_and_values(items)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            out[notna] = _probe_sharded(
-                metro64_batch(nn), self.blobs, self.num_shards)
+        present, h = present_hashes(items)
+        out = np.zeros(len(present), dtype=bool)
+        if len(h):
+            out[present] = _probe_sharded(h, self.blobs, self.num_shards)
         return out
 
     def contain_hashed64(self, h: np.ndarray) -> np.ndarray:
@@ -336,6 +333,24 @@ def collect_shards(shards: DataFrame, output_path: str | None):
     return blobs, [{k: r[k] for k in SHARD_METRICS} for r in mrows]
 
 
+def shard_geometry(df, key_col: str, capacity: int | None,
+                   num_shards: int, tags_per_bucket: int,
+                   bits_per_item: int, table_type: int, mode: str,
+                   headroom: float, hash_fn: str = "metro64"
+                   ) -> tuple[int, CuckooParams]:
+    """(capacity, per-shard params): the one geometry step of the
+    sharded and checkpointed builders. ``shard_of`` routes by the top
+    log2(S) hash bits, so S must be a power of two."""
+    check_mode(mode)
+    if num_shards <= 0 or num_shards & (num_shards - 1):
+        raise ValueError("num_shards must be a power of two")
+    if capacity is None:
+        capacity = key_column(df, key_col, hash_fn).count()
+    per_shard_cap = max(int(capacity * headroom / num_shards), 64)
+    return capacity, CuckooParams.for_capacity(
+        per_shard_cap, tags_per_bucket, bits_per_item, table_type)
+
+
 def build_sharded_cuckoo_filter(
     df,
     key_col: str,
@@ -377,15 +392,9 @@ def build_sharded_cuckoo_filter(
     The alternate-index XOR stays chunk-confined exactly as in the
     single-filter layout (membership parity is pinned by
     test_sharded_vacuum_*)."""
-    check_mode(mode)
-    if num_shards & (num_shards - 1) or num_shards <= 0:
-        raise ValueError("num_shards must be a power of two")
-    if capacity is None:
-        capacity = key_column(df, key_col, hash_fn).count()
-    per_shard_cap = max(int(capacity * headroom / num_shards), 64)
-    params = CuckooParams.for_capacity(
-        per_shard_cap, tags_per_bucket, bits_per_item, table_type
-    )
+    _, params = shard_geometry(df, key_col, capacity, num_shards,
+                               tags_per_bucket, bits_per_item, table_type,
+                               mode, headroom, hash_fn)
     pairs = sharded_pairs(df, key_col, params, num_shards, mode, hash_fn)
     blobs, metrics = collect_shards(
         combine_shards(pairs, params, mode != "multiset"), output_path)

@@ -320,18 +320,14 @@ def _partial_fn(specs: list[tuple], cols: list[str]):
     Per batch, each column's present values are taken once and a keys
     column is hashed ONCE (``arrow_key_hashes``); that one uint64 array
     feeds every spec on the column through ``update_hashed``. Sketches
-    without ``update_hashed`` (MG) get the values as pandas, with the
-    same ``canon_int_keys`` float rule."""
+    without ``update_hashed`` (MG) get the values as pandas, and apply
+    the same float rule themselves."""
     pos = {c: j for j, c in enumerate(cols)}
 
     def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        from cuckoo_filter_spark.hashing import (
-            arrow_key_hashes,
-            canon_int_keys,
-            present_mask,
-        )
+        from cuckoo_filter_spark.hashing import arrow_key_hashes, present_mask
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else -1
@@ -365,7 +361,7 @@ def _partial_fn(specs: list[tuple], cols: list[str]):
                         hashes[col] = arrow_key_hashes(v)
                     sk.update_hashed(hashes[col])
                 else:
-                    sk.update(canon_int_keys(v.to_pandas()))
+                    sk.update(v.to_pandas())
         wall = (time.perf_counter() - t0) * 1000.0
         n = len(sks)
         yield pa.RecordBatch.from_arrays(

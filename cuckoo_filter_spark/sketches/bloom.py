@@ -49,7 +49,7 @@ class BloomSketch:
     def update(self, items) -> None:
         """Add the present keys of ``items`` (NULL/NaN keys are never
         stored: the key rule of the Bloom UDF and the build partials)."""
-        _, h = present_hashes(pa.array(items))
+        _, h = present_hashes(items)
         if len(h):
             self.update_hashed(h)
 
@@ -67,7 +67,7 @@ class BloomSketch:
 
     def contains(self, items) -> np.ndarray:
         """Membership flags of ``items``; a NULL/NaN key answers False."""
-        present, h = present_hashes(pa.array(items))
+        present, h = present_hashes(items)
         out = np.zeros(len(present), dtype=bool)
         out[present] = self.contains_hashed(h)
         return out

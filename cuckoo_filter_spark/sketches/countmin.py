@@ -15,7 +15,7 @@ import struct
 import numpy as np
 
 from cuckoo_filter_spark.hashing import fmix64 as _mix
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import present_hashes
 
 _MAGIC = b"CMS1"
 _ROW_SEEDS = np.uint64(0x9E3779B97F4A7C15)
@@ -36,7 +36,12 @@ class CountMinSketch:
         self.total = 0
 
     def update(self, items, weights=None) -> None:
-        self.update_hashed(metro64_batch(items), weights)
+        """Count the present keys of ``items`` (``hashing.present_hashes``:
+        a NULL/NaN key and its weight are skipped)."""
+        present, h = present_hashes(items)
+        if weights is not None:
+            weights = np.asarray(weights)[present]
+        self.update_hashed(h, weights)
 
     def _cols(self, h: np.ndarray) -> np.ndarray:
         seeds = (np.arange(1, self.depth + 1, dtype=np.uint64) * _ROW_SEEDS)[:, None]
@@ -58,7 +63,11 @@ class CountMinSketch:
         self.total += int(w.sum())
 
     def query(self, items) -> np.ndarray:
-        return self.query_hashed(metro64_batch(items))
+        """Estimated count per item; a NULL/NaN key answers 0."""
+        present, h = present_hashes(items)
+        out = np.zeros(len(present), dtype=np.int64)
+        out[present] = self.query_hashed(h)
+        return out
 
     def query_hashed(self, h: np.ndarray) -> np.ndarray:
         cols = self._cols(h)

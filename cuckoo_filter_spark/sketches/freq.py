@@ -24,14 +24,10 @@ estimation-mode bounds on skewed data.
 
 Item identity is ``str(value)`` (pre-stringified in update), matching
 the engine-portable ``CAST(x AS VARCHAR)`` convention of
-operators/sampling.py; NULLs are excluded (a NULL is not an item).
-CAVEAT: an int-with-nulls Spark column arrives in pandas as float64,
-so raw ``update`` would register '402.0' — build via
-``build_mg_sketches`` or ``grouped_mg_topk`` (both read Arrow batches,
-which keep int64; the first builds many ``when(cond, key)`` subset
-sketches in one scan, the second one sketch per group through the
-grouped Arrow partial and merge of ``sketches.base``) or pre-cast keys
-to string.
+operators/sampling.py; NULLs and NaNs are excluded (a NULL is not an
+item) and an integral float is its int64 ('402', never '402.0'), so
+``update``, ``build_mg_sketches`` and ``grouped_mg_topk`` count the
+same items.
 """
 
 from __future__ import annotations
@@ -40,6 +36,8 @@ import struct
 
 import pandas as pd
 import pyarrow as pa
+
+from cuckoo_filter_spark.hashing import canon_int_keys
 
 
 class MGSketch:
@@ -55,10 +53,11 @@ class MGSketch:
 
     def update(self, items) -> None:
         """Batch update from any sequence/Series; NULLs dropped, values
-        stringified. Vectorized counting via pandas value_counts — the
-        python-side dict merge touches at most k + batch-distinct keys."""
+        stringified (an integral float as its int64). Vectorized
+        counting via pandas value_counts — the python-side dict merge
+        touches at most k + batch-distinct keys."""
         s = items if isinstance(items, pd.Series) else pd.Series(list(items))
-        vc = s.dropna().astype(str).value_counts()
+        vc = canon_int_keys(s.dropna()).astype(str).value_counts()
         if len(vc) == 0:
             return
         self.n_items += int(vc.sum())
@@ -224,8 +223,7 @@ def grouped_mg_topk(df, group_col: str, item_col: str, k: int = 256,
     NULL groups and NULL items are excluded (a NULL is not a group / an
     item). Executor memory: phase 1 holds one sketch per LOCAL group per
     partition — sized for moderate group cardinality (<= ~1e5 groups);
-    item identity is str(value) of the Arrow value ('402', never
-    '402.0').
+    item identity is ``MGSketch.update``'s ('402', never '402.0').
     """
     from pyspark.sql import functions as F
 

@@ -14,7 +14,7 @@ import struct
 
 import numpy as np
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import present_hashes
 
 _MAGIC = b"HLL1"
 
@@ -38,7 +38,10 @@ class HLLSketch:
         self.registers = np.zeros(self.m, dtype=np.uint8)
 
     def update(self, items) -> None:
-        self.update_hashed(metro64_batch(items))
+        """Add the present keys of ``items`` (``hashing.present_hashes``:
+        NULL/NaN keys are skipped, an integral float counts as its
+        int64)."""
+        self.update_hashed(present_hashes(items)[1])
 
     def update_hashed(self, h: np.ndarray) -> None:
         p = np.uint64(self.p)

@@ -39,7 +39,7 @@ import struct
 
 import numpy as np
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import present_hashes
 
 _MAGIC = b"THS1"
 _FULL = 1 << 64  # theta's exact-mode value (keys space is [0, 2^64))
@@ -81,7 +81,10 @@ class ThetaSketch:
                 "rebuild from raw data to add items)")
 
     def update(self, items) -> None:
-        self.update_hashed(metro64_batch(items))
+        """Add the present keys of ``items`` (``hashing.present_hashes``:
+        NULL/NaN keys are skipped, an integral float counts as its
+        int64)."""
+        self.update_hashed(present_hashes(items)[1])
 
     def update_hashed(self, h: np.ndarray) -> None:
         self._check_writable("update")

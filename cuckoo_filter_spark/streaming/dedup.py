@@ -9,7 +9,8 @@ positives (≈ 2b/2^f) drop at most that fraction of genuinely-new rows
 AddUnique (cuckoofilter.go:144-149).
 
 State is the reference §1.5 blob, so a batch job can decode, merge, or
-inspect the accumulated streaming state with the same kernel.
+inspect the accumulated streaming state with the same kernel (keys
+hash with ``hashing.present_hashes``, as in ``CuckooKernel.contain``).
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cuckoo_filter_spark.hashing import present_hashes
 from cuckoo_filter_spark.kernel.filter import CuckooKernel
 from cuckoo_filter_spark.params import CuckooParams
 
@@ -50,11 +52,11 @@ def streaming_dedup(
       rotation re-emit. Bounded state, no data loss.
     * 'error' — fail the query loud (size shards up instead).
 
-    Null-key rows are DROPPED (no dedup identity — same null exclusion
-    as the batch builds): a numeric NULL would otherwise crash the
-    state function (NaN bytes), and a string NULL hashes identically
-    to '' (Arrow zero-length view), silently deduping NULL against the
-    empty string. Pre-split null-key rows upstream if you need them.
+    Null-key (and NaN-key) rows are DROPPED (no dedup identity — same
+    null exclusion as the batch builds): a string NULL would otherwise
+    hash identically to '' (Arrow zero-length view), silently deduping
+    NULL against the empty string. Pre-split null-key rows upstream if
+    you need them.
     """
     if on_overflow not in ("passthrough", "rotate", "error"):
         raise ValueError(f"unknown on_overflow {on_overflow!r}")
@@ -84,7 +86,8 @@ def streaming_dedup(
             # hash ONCE per batch: the saturated fallback below re-probes
             # with the same fingerprints (rotation keeps params, so they
             # stay valid across an epoch switch)
-            idx, tag = kern.fingerprints(pdf[key_col])
+            present, h = present_hashes(pdf[key_col])
+            idx, tag = kern.params.split(h)
             fresh = kern.add_unique_hashed(idx, tag)
             if kern.victim_used:
                 if on_overflow == "error":
@@ -95,7 +98,7 @@ def streaming_dedup(
                 # saturated: add_unique rejects keys it could not store —
                 # emit the genuinely-new ones anyway (at-least-once)
                 fresh = fresh | ~kern.contain_hashed(idx, tag)
-            out = pdf.loc[fresh, cols]
+            out = pdf.loc[present, cols][fresh]
             if len(out):
                 yield out
         state.update((bytearray(kern.to_bytes()),))

@@ -518,3 +518,20 @@ def test_builders_reject_unknown_mode(spark, dup_null_df, tmp_path):
         build_checkpointed(dup_null_df, "key", str(ck), num_shards=8,
                            mode="unique-global")
     assert not (ck / "_build_manifest.json").exists()
+
+
+def test_builders_reject_non_power_of_two_shard_count(spark, dup_null_df,
+                                                      tmp_path):
+    """Shards route by the top log2(S) hash bits, so S=6 would build
+    only shards 0-3, each at 1.5x its planned load, under a manifest
+    that records 6. Both sharded builders share one geometry step and
+    refuse it before any manifest write."""
+    from cuckoo_filter_spark.operators.checkpoint import build_checkpointed
+
+    with pytest.raises(ValueError, match="power of two"):
+        build_sharded_cuckoo_filter(dup_null_df, "key", num_shards=6)
+    ck = tmp_path / "ck"
+    with pytest.raises(ValueError, match="power of two"):
+        build_checkpointed(dup_null_df, "key", str(ck), capacity=60_000,
+                           num_shards=6)
+    assert not (ck / "_build_manifest.json").exists()

@@ -8,7 +8,6 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from cuckoo_filter_spark.hashing import canon_int_keys
 from cuckoo_filter_spark.sketches import (
     BloomSketch,
     CountMinSketch,
@@ -16,6 +15,7 @@ from cuckoo_filter_spark.sketches import (
     KLLSketch,
     ThetaSketch,
 )
+from cuckoo_filter_spark.sketches.freq import MGSketch
 
 KEY_COLS = ("s", "b", "i32", "i64", "i64n", "d")
 NUMERIC_COLS = ("d", "i32", "i64", "dec")
@@ -23,25 +23,29 @@ NUMERIC_COLS = ("d", "i32", "i64", "dec")
 
 def test_build_sketch_matches_driver_pandas_update(typed_df):
     """``build_sketch`` over every key/numeric column type is byte-
-    identical to the same sketch updated on the driver from the pandas
-    column (``canon_int_keys`` for keys, float64 for numerics)."""
+    identical to the same sketch updated on the driver from the raw
+    pandas column: the driver item APIs apply the executor key rule
+    themselves (NULL/NaN skipped, integral doubles as int64)."""
     from cuckoo_filter_spark.sketches.base import build_sketches
 
     makes = {"hll": lambda: HLLSketch(p=12),
              "theta": lambda: ThetaSketch(k=4096),
+             "bloom": lambda: BloomSketch(capacity=4096),
+             "cms": lambda: CountMinSketch(width=1024, depth=3),
+             "mg": lambda: MGSketch(k=4096),
              "kll": lambda: KLLSketch(k=4096)}
-    specs = [(c, makes[m], "keys") for c in KEY_COLS for m in ("hll", "theta")]
+    specs = [(c, makes[m], "keys") for c in KEY_COLS
+             for m in ("hll", "theta", "bloom", "cms", "mg")]
     specs += [(c, makes["kll"], "numeric") for c in NUMERIC_COLS]
     built = build_sketches(typed_df, specs)
 
     pdf = typed_df.toPandas()
     for (col, make, kind), sk in zip(specs, built):
         ref = make()
-        vals = pdf[col].dropna()
         if kind == "keys":
-            ref.update(canon_int_keys(vals))
+            ref.update(pdf[col])
         else:
-            ref.update(vals.to_numpy(dtype="float64"))
+            ref.update(pdf[col].dropna().to_numpy(dtype="float64"))
         assert sk.to_bytes() == ref.to_bytes(), (col, type(sk).__name__)
 
 
@@ -110,12 +114,10 @@ def test_grouped_builds_match_driver_reference(typed_df):
     """The grouped builds read the same key identity as the ungrouped
     ones: per group, the exact distinct count, a filter holding every
     key, the rollup's HLL registers and the MG counts all equal a driver
-    reference over the pandas column (``canon_int_keys`` for keys)."""
-    from collections import Counter
-
+    reference over the raw pandas column, through the driver item
+    APIs."""
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.hashing import metro64_batch
     from cuckoo_filter_spark.kernel.filter import CuckooKernel
     from cuckoo_filter_spark.operators.grouped import (
         build_grouped_filters,
@@ -126,24 +128,42 @@ def test_grouped_builds_match_driver_reference(typed_df):
     df = typed_df.withColumn("g", F.pmod(F.col("i32"), F.lit(3)))
     pdf = df.toPandas()
     for col in GROUPED_KEY_COLS:
-        want = {g: canon_int_keys(v.dropna())
-                for g, v in pdf.groupby("g")[col]}
+        want = dict(list(pdf.groupby("g")[col]))
         got = {r["g"]: r["n_distinct"]
                for r in grouped_distinct_count(df, "g", col).collect()}
         assert got == {g: v.nunique() for g, v in want.items()}, col
         for r in build_grouped_filters(df, "g", col).collect():
             assert r["n_distinct"] == got[r["g"]], col
             kern = CuckooKernel.from_bytes(r["blob"])
-            h = metro64_batch(want[r["g"]])
-            assert kern.contain_hashed(*kern.params.split(h)).all(), col
+            assert kern.contain(want[r["g"]].dropna()).all(), col
         for r in hll_rollup(df, ["g"], col, keep_blobs=True).collect():
             if r["lvl"] == 1:
                 ref = HLLSketch(p=12)
                 ref.update(want[r["g"]])
                 assert r["blob"] == ref.to_bytes(), col
-    for col in ("s", "i64n"):  # MG identity is str(value)
-        got = {(r["g"], r["item"]): r["freq_lo"] for r in
-               grouped_mg_topk(df, "g", col, k=4096, top_n=4096).collect()}
-        assert got == {(g, str(x)): c for g, v in
-                       pdf.groupby("g")[col]
-                       for x, c in Counter(canon_int_keys(v.dropna())).items()}
+        ref = {}
+        for g, v in want.items():
+            mg = MGSketch(k=4096)
+            mg.update(v)
+            ref.update({(g, x): c for x, c in mg.counters.items()})
+        assert ref == {(r["g"], r["item"]): r["freq_lo"] for r in
+                       grouped_mg_topk(df, "g", col, k=4096,
+                                       top_n=4096).collect()}, col
+
+
+def test_grouped_and_ungrouped_mg_agree_on_double_keys(spark):
+    """An integral double is one MG item ('3', not '3.0') in the
+    grouped partial, the ungrouped partial and the driver update."""
+    from pyspark.sql import functions as F
+
+    from cuckoo_filter_spark.sketches import grouped_mg_topk
+    from cuckoo_filter_spark.sketches.freq import build_mg_sketches
+
+    idc = F.col("id")
+    df = spark.range(0, 2000, 1, 4).select(
+        F.lit(1).alias("g"),
+        F.when(idc % 5 != 0, (idc % 37).cast("double")).alias("d"))
+    (sk,), _ = build_mg_sketches(df, ["d"], k=64)
+    got = {r["item"]: r["freq_lo"] for r in
+           grouped_mg_topk(df, "g", "d", k=64, top_n=64).collect()}
+    assert got == sk.counters and "3" in got
