@@ -344,8 +344,15 @@ def shard_geometry(df, key_col: str, capacity: int | None,
     check_mode(mode)
     if num_shards <= 0 or num_shards & (num_shards - 1):
         raise ValueError("num_shards must be a power of two")
-    if capacity is None:
-        capacity = key_column(df, key_col, hash_fn).count()
+    if capacity is None:  # the keys the partials store: no NULL, no NaN
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import DoubleType, FloatType
+
+        keys = key_column(df, key_col, hash_fn)
+        present = F.col(key_col).isNotNull()
+        if isinstance(keys.schema[0].dataType, (DoubleType, FloatType)):
+            present &= ~F.isnan(key_col)
+        capacity = keys.where(present).count()
     per_shard_cap = max(int(capacity * headroom / num_shards), 64)
     return capacity, CuckooParams.for_capacity(
         per_shard_cap, tags_per_bucket, bits_per_item, table_type)

@@ -13,13 +13,22 @@ run ``sketch_partials``; grouped builds (grouped filters and counts,
 ``count_distinct_exact``, HLL rollup/cube, grouped MG) run
 ``grouped_partials``. Every executor-side blob merge runs
 ``merge_groups``: applyInArrow per group, rows in ``partition_id``
-order, so merged bytes do not depend on shuffle order. Ungrouped
-partials are collected and reduced on the driver, shuffle-free below
-``TREE_MERGE_AT`` source partitions; above it (the 100 TB regime —
-10^5-10^6 scan tasks would otherwise collect tens of GB of blobs and
-run a serial million-iteration reduce loop on the driver, VERDICT r6
-#1) ONE tree level merges each of ~sqrt(P) groups on executors first,
-and the driver reduces O(sqrt(P)) rows.
+order, so merged bytes do not depend on shuffle order.
+
+An ungrouped partial runs one task per partition of its input, after
+``operators.spread.coalesce_small_input``: a tiny input (size estimate
+<= 512 MiB) in more partitions than the session has slots is coalesced
+to the slots first (no Exchange), since each Python task has a fixed
+cost whatever its size. Merge-law sketches (HLL, theta, Bloom,
+count-min) give the same bytes either way; the coalesce grouping is
+fixed per job, so retries are byte-identical (see the spread module
+for when KLL/t-digest/MG bytes may regroup on a cluster). Partials are
+collected and reduced on the driver, shuffle-free up to
+``TREE_MERGE_AT`` partials (counted after the coalesce); above it (the
+100 TB regime — 10^5-10^6 scan tasks would otherwise collect tens of
+GB of blobs and run a serial million-iteration reduce loop on the
+driver, VERDICT r6 #1) ONE tree level merges each of ~sqrt(P) groups
+on executors first, and the driver reduces O(sqrt(P)) rows.
 """
 
 from __future__ import annotations
@@ -34,11 +43,12 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-#: partial-blob rows above this many source partitions go through one
+#: partial-blob rows above this many partials (the partial stage's
+#: partitions, counted after ``coalesce_small_input``) go through one
 #: executor-side tree-merge level before the driver collect. At local/
 #: bench partition counts the direct collect is faster and keeps the
 #: pre-r7 plan byte-identical; at corpus scale (>= thousands of scan
-#: tasks) the tree keeps the driver at O(sqrt(P)) rows.
+#: tasks, never coalesced) the tree keeps the driver at O(sqrt(P)) rows.
 TREE_MERGE_AT = 256
 
 
@@ -379,10 +389,12 @@ def _partial_fn(specs: list[tuple], cols: list[str]):
 
 
 def sketch_partials(df, specs: list[tuple]):
-    """(partial-blob frame, source partition count): the ONE
-    per-partition partial every ungrouped sketch build runs — one scan
-    of ``df`` in mapInArrow, one sketch per spec fed batch by batch,
-    one blob row per (partition, spec).
+    """(partial-blob frame, partial count): the ONE per-partition
+    partial every ungrouped sketch build runs — one scan of ``df`` in
+    mapInArrow, one sketch per spec fed batch by batch, one blob row per
+    (partition, spec). The projected input goes through
+    ``coalesce_small_input`` first, so a tiny over-partitioned ``df``
+    runs as many partials as the session has slots.
 
     specs: (col, make_sketch, kind) triples, kind one of
     * ``keys`` — the column as keys, hashed once per batch by
@@ -401,19 +413,27 @@ def sketch_partials(df, specs: list[tuple]):
             raise ValueError(f"sketch spec kind {kind!r} not in {_KINDS}")
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    from cuckoo_filter_spark.operators.spread import coalesce_small_input
+
     cols = list(dict.fromkeys(c for c, _, _ in specs))
     sel = df.select(*cols)
-    return (sel.mapInArrow(_partial_fn(specs, cols),
+    inp = coalesce_small_input(sel)
+    # a coalesced frame has exactly the session parallelism in partitions;
+    # planning it again would rerun an upstream shuffle stage under AQE
+    n_partitions = (_num_plan_partitions(sel) if inp is sel
+                    else sel.sparkSession.sparkContext.defaultParallelism)
+    return (inp.mapInArrow(_partial_fn(specs, cols),
                            from_arrow_schema(PARTS_ROW)),
-            _num_plan_partitions(sel))
+            n_partitions)
 
 
 def _build(df, specs: list[tuple]):
     """ONE scan -> one merged sketch per spec, plus metrics rows
     (partition_id, sketch_id, rows = that spec's non-null count,
-    wall_ms). Above ``TREE_MERGE_AT`` source partitions the rows are
-    per MERGE GROUP (partition_id = group id, rows summed, wall_ms the
-    group max) — see the module docstring."""
+    wall_ms). partition_id is the partial's partition, a coalesced one
+    when ``coalesce_small_input`` fired. Above ``TREE_MERGE_AT``
+    partials the rows are per MERGE GROUP (partition_id = group id,
+    rows summed, wall_ms the group max) — see the module docstring."""
     parts, n_partitions = sketch_partials(df, specs)
     merged, rows = collect_and_merge(
         parts, [make for _, make, _ in specs], n_partitions)

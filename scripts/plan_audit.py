@@ -558,6 +558,31 @@ def main() -> None:
                      p_local + "\n--- unique_global ---\n" + p_global
                      + "\n--- sharded ---\n" + p_shard))
 
+    # 25. sketch partial coalesce: a tiny input in more slices than the
+    # session has slots (264 here) is coalesced to them before the
+    # partial — a narrow Coalesce, no Exchange; with the size bound at
+    # 0 (standing in for a large input) the 264 slices stay as they are
+    from cuckoo_filter_spark.operators import spread
+
+    many = spark.range(0, 264 * 2_000, 1, 264)
+    hll = [("id", lambda: HLLSketch(p=12), "keys")]
+    p_small = plan_of(sketch_partials(many, hll)[0])
+    bound = spread.DEFAULT_SPREAD_MAX_BYTES
+    spread.DEFAULT_SPREAD_MAX_BYTES = 0
+    try:
+        p_large = plan_of(sketch_partials(many, hll)[0])
+    finally:
+        spread.DEFAULT_SPREAD_MAX_BYTES = bound
+    ok = (
+        all("MapInArrow" in q and not exchanges(q) for q in (p_small, p_large))
+        and "Coalesce" in p_small
+        and "Coalesce" not in p_large
+    )
+    sections.append(("sketch partial coalesce: a tiny 264-slice input "
+                     "coalesces to the session slots, zero Exchange; none "
+                     "above the size bound", ok,
+                     p_small + "\n--- above the size bound ---\n" + p_large))
+
     out = ["# PLANS — physical plan audit (sf0.01, AQE on)\n"]
     for name, ok, p in sections:
         note = NOTES.get(name.split(":")[0])

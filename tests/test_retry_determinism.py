@@ -36,6 +36,7 @@ def _builds(spark, df, ckpt_dir: str) -> dict:
         KLLSketch,
         ThetaSketch,
     )
+    from cuckoo_filter_spark.operators import spread
     from cuckoo_filter_spark.sketches import base
     from cuckoo_filter_spark.sketches.base import build_sketches
 
@@ -59,13 +60,18 @@ def _builds(spark, df, ckpt_dir: str) -> dict:
              ("k", lambda: ThetaSketch(k=256), "keys"),
              ("k", lambda: BloomSketch(capacity=20_000), "keys"),
              ("v", lambda: KLLSketch(k=64), "numeric")]
-    default = base.TREE_MERGE_AT
-    for merge, at in (("direct", default), ("tree", 2)):
-        base.TREE_MERGE_AT = at
+    # the 8 input partitions coalesce to the 4 slots before the partial;
+    # a size bound of 0 keeps all 8 partials
+    default_at, default_max = base.TREE_MERGE_AT, spread.DEFAULT_SPREAD_MAX_BYTES
+    for merge, at, max_bytes in (
+            ("direct", default_at, default_max), ("tree", 2, default_max),
+            ("direct.uncoalesced", default_at, 0), ("tree.uncoalesced", 2, 0)):
+        base.TREE_MERGE_AT, spread.DEFAULT_SPREAD_MAX_BYTES = at, max_bytes
         try:
             sks = build_sketches(df, specs)
         finally:
-            base.TREE_MERGE_AT = default
+            base.TREE_MERGE_AT = default_at
+            spread.DEFAULT_SPREAD_MAX_BYTES = default_max
         for sk in sks:
             out[f"{type(sk).__name__}.{merge}"] = _sha(sk.to_bytes())
     return out
@@ -118,10 +124,14 @@ def test_builds_are_byte_identical_under_task_retry(tmp_path):
     assert r.returncode == 0 and lines, r.stdout[-2000:] + r.stderr[-4000:]
     res = json.loads(lines[-1][len("RESULT "):])
     clean, retried = res["clean"], res["retried"]
-    # the eight build calls each ran at least one job over the input,
+    # the ten build calls each ran at least one job over the input,
     # and each such job lost its first attempt on partition 1
-    assert res["failures"] >= 8, res["failures"]
+    assert res["failures"] >= 10, res["failures"]
     assert [k for k in clean if clean[k] != retried[k]] == []
+    # merge-law sketches: coalesced or not, direct or tree, one blob
+    for name in ("HLLSketch", "ThetaSketch", "BloomSketch"):
+        assert len({v for k, v in clean.items()
+                    if k.startswith(name + ".")}) == 1, name
 
 
 if __name__ == "__main__":

@@ -462,6 +462,29 @@ def test_xxhash64_build_excludes_null_keys(spark):
     assert sum(m["stored"] for m in bx.metrics) == 500
 
 
+def test_shard_geometry_counts_present_keys_only(spark):
+    """Unsized sharded builds size shards from the keys the partials
+    store. 90% NULL string keys: metro64 and xxhash64 choose the same
+    buckets per shard (counting NULL rows made metro64's 8x larger);
+    NaN double keys are not stored either."""
+    from cuckoo_filter_spark.operators.sharded import shard_geometry
+    from cuckoo_filter_spark.params import TABLE_SINGLE
+
+    df = spark.range(0, 100_000, 1, 4).select(
+        F.when(F.col("id") % 10 == 0, F.concat(F.lit("u"), F.col("id")))
+        .alias("key"))
+    bm = build_sharded_cuckoo_filter(df, "key", num_shards=4)
+    bx = build_sharded_cuckoo_filter(df, "key", num_shards=4,
+                                     hash_fn="xxhash64")
+    assert bm.params.num_buckets == bx.params.num_buckets
+    assert sum(m["stored"] for m in bm.metrics) == 10_000
+    nan = spark.range(0, 1000, 1, 2).select(
+        F.when(F.col("id") % 4 == 0, F.col("id").cast("double"))
+        .otherwise(F.lit(float("nan"))).alias("key"))
+    assert shard_geometry(nan, "key", None, 4, 4, 16, TABLE_SINGLE,
+                          "unique_local", 1.0)[0] == 250
+
+
 @pytest.fixture(scope="module")
 def dup_null_df(spark):
     """9,000 rows over 4 partitions: each key on three consecutive rows

@@ -13,12 +13,22 @@ def _keys(spark, n=5000, parts=8):
         F.concat(F.lit("k"), F.col("id")).alias("key"))
 
 
+def _uncoalesced(monkeypatch):
+    """Keep the ``parts`` partials: at ``local[4]`` the sketch partial
+    would otherwise coalesce these tiny inputs to 4 partitions
+    (``spread.coalesce_small_input``)."""
+    from cuckoo_filter_spark.operators import spread
+
+    monkeypatch.setattr(spread, "DEFAULT_SPREAD_MAX_BYTES", 0)
+
+
 def test_tree_merge_equals_direct_collect(spark, monkeypatch):
     """The executor-side tree level must be byte/estimate-identical to
     the direct driver reduce (merge associativity is the pinned law)."""
     from cuckoo_filter_spark.sketches import HLLSketch, base
     from cuckoo_filter_spark.sketches.base import build_sketch
 
+    _uncoalesced(monkeypatch)
     df = _keys(spark)
     direct, m_direct = build_sketch(df, "key", lambda: HLLSketch(p=12))
     monkeypatch.setattr(base, "TREE_MERGE_AT", 1)
@@ -34,6 +44,7 @@ def test_tree_merge_theta_and_bloom_equal(spark, monkeypatch):
     from cuckoo_filter_spark.sketches.bloom import build_bloom_deferred
     from cuckoo_filter_spark.sketches.theta import build_theta_sketches
 
+    _uncoalesced(monkeypatch)
     df = _keys(spark, n=3000)
     (a,), _ = build_theta_sketches(df, ["key"], k=256)
     bd, _ = build_bloom_deferred(df, "key", fpp=0.01)
@@ -53,6 +64,7 @@ def test_tree_merge_driver_collects_o_sqrt_p_rows(spark, monkeypatch):
     from cuckoo_filter_spark.sketches import HLLSketch, base
     from cuckoo_filter_spark.sketches.base import build_sketch
 
+    _uncoalesced(monkeypatch)
     df = _keys(spark, n=4000, parts=9)  # sqrt(9) = 3 merge groups
     collected = []
     cls = type(df)
